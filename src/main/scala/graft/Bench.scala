@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":…,"value":N,"unit":"sec","queries":{…}}.
@@ -13,24 +13,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.Native.register(spark)
+    val spark = GraftSession.local()
 
     // Sum of executorRunTime across all tasks, sampled around each pass:
     // the additive "task_time_sec" readout that separates task-side
     // scaling from the driver-planning floor (a core-count change moves
     // wall only where task time dominates — at small SFs it mostly does
     // not, which is a property of the fixture, not an ignored $CPUS).
-    // The listener bus is async; the small post-pass drain sleep happens
-    // OUTSIDE the wall-clock timing and only bounds sampling slop.
+    // The listener bus is async; each pass drains it (outside the
+    // wall-clock timing) before the next pass samples the counter.
     val taskMillis = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -59,7 +50,7 @@ object Bench {
             .getOrElse(e.getClass.getName))
       }
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(20) // listener-bus drain, not part of the timed pass
+      GraftShim.drainListenerBus(spark) // not part of the timed pass
       wall
     }
     // A timed pass that also records the pass's task time; the reported

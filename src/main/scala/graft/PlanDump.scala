@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool (not driver contract): dump `explain("formatted")` for named
@@ -18,15 +17,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    functions.Native.register(spark)
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     names.split(',').foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress audit (dev tooling; not part of the driver's bench
@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * the q404 point set (disjoint eps-grids — same local density, REP×
   * the points, the honest "more corpus, same distribution" shape).
   *
-  * Env: SPARK_GRAFT_SF_DIR (base fixtures), SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_SCALE_REP (default 10).
+  * Env: SPARK_GRAFT_SF_DIR (base fixtures), SPARK_GRAFT_SCALE_REP
+  * (default 10); cores as in [[GraftSession.local]].
   */
 object ScaleBench {
   private def loadavg: Double =
@@ -47,18 +47,9 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rep = sys.env.getOrElse("SPARK_GRAFT_SCALE_REP", "10").toInt
     require(rep >= 2, "SPARK_GRAFT_SCALE_REP must be >= 2")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.Native.register(spark)
+    val spark = GraftSession.local()
     val la0 = loadavg
 
     // ---- build the ×REP fixture dir (untimed) ------------------------

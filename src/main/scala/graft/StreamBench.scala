@@ -1,10 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, explode, expr, lit, max}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 import graft.streaming.{Consumer, ConsumerConfig}
 
@@ -41,16 +45,9 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rep = sys.env.getOrElse("SPARK_GRAFT_STREAM_REP", "12").toInt
     val runsPerMode = sys.env.getOrElse("SPARK_GRAFT_STREAM_RUNS", "3").toInt
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = GraftSession.local()
     val la0 = loadavg
 
     // Replicated fixture (untimed, dev-tooling side): event ids remapped
@@ -92,10 +89,22 @@ object StreamBench {
     // micro-batches): the admitted mode's gap to unbounded is a
     // per-trigger constant — this shows which engine phase owns it
     // (planning vs offset-log vs addBatch task time) without guessing.
+    // A listener collects every progress event of the running drain:
+    // `recentProgress` keeps only the last 100 and would truncate a long
+    // drain's totals. Drains run one at a time, and each ends by draining
+    // the listener bus, so the queue holds exactly the current drain's.
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    })
     var lastBreakdown: Map[String, Long] = Map.empty
     var lastBatches = 0
     def drain(maxPerTrigger: Option[Long]): Double = {
       val ckpt = newTempDir("sb_ck")
+      progress.clear()
       val ds = Consumer.source(ConsumerConfig(
         streamPath = eventsPath, numShards = 16,
         maxRecordsPerTrigger = maxPerTrigger))
@@ -105,9 +114,10 @@ object StreamBench {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       val rate = n / ((System.nanoTime() - t0) / 1e9)
-      val prog = q.recentProgress
+      GraftShim.drainListenerBus(spark)
+      val prog = progress.asScala.toSeq
       lastBatches = prog.length
-      lastBreakdown = prog.toSeq
+      lastBreakdown = prog
         .flatMap(_.durationMs.asScala.toSeq.map { case (k, v) =>
           (k, v.longValue) })
         .groupMapReduce(_._1)(_._2)(_ + _)

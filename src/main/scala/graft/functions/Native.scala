@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 
 /** Registration of the engine's native Catalyst expressions as SQL
-  * functions. Idempotent per session; every session factory
-  * (GraftSession) and driver entry point (SparkEntry.queries wrappers,
-  * Verify, Bench) calls this, so user code can rely on `graft_cosine`
-  * resolving in both the Column API (via call_function) and raw SQL.
+  * functions. Idempotent per session; the session factory (GraftSession)
+  * and the SparkEntry.queries wrappers call this, so user code can rely
+  * on `graft_cosine` resolving in both the Column API (via call_function)
+  * and raw SQL. The as-of planner strategy is not registered here:
+  * `AsOfJoin.leftAsOfNative` registers it itself.
   */
 object Native {
   def register(spark: SparkSession): Unit = {
@@ -201,14 +202,5 @@ object Native {
         MinHashBands(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
       },
       "built-in")
-
-    // Planner strategy for the native as-of join (graft.plans). Sessions
-    // built by GraftSession.local also get it via SparkSessionExtensions;
-    // this covers externally-built sessions (Verify/Bench/driver) through
-    // the public experimental-methods hook. Idempotent.
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
   }
 }

@@ -128,9 +128,11 @@ object AsOfJoin {
     * Exchanges/sorts are REQUIREMENTS, not operators we schedule — a
     * bucketed-sorted side plans with zero exchanges.
     *
-    * Requires the strategy to be registered (any `Native.register` /
-    * GraftSession entry point does this). Time columns must be long-backed
-    * (long / int / timestamp / timestamp_ntz / date).
+    * Registers the planner strategy (graft.plans.AsOfJoinStrategy) on the
+    * left side's session itself, so any session plans the node — a
+    * `newSession()` child or one built outside [[graft.GraftSession]]
+    * included. Time columns must be long-backed (long / int / timestamp /
+    * timestamp_ntz / date).
     */
   def leftAsOfNative(
       left: DataFrame,
@@ -172,6 +174,14 @@ object AsOfJoin {
     }
     val payload = rightPayload.map(n => Alias(attr(rs, n, "payload"), n)())
     val payloadOut = payload.map(_.toAttribute.withNullability(true))
+    // The one registration path of the strategy: idempotent, on the session
+    // that will plan the node. Experimental strategies are per session.
+    val ex = left.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+        ex.extraStrategies = ex.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    }
     GraftShim.ofRows(left.sparkSession,
       graft.plans.AsOfJoinNode(ls, rs, lk, rk, lt, rt, payload, payloadOut, direction))
   }

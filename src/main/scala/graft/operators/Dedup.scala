@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.ckptNoStats
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over text / embedding tables (SURVEY.md §2.6):
@@ -675,15 +676,12 @@ object Dedup {
     val edges = pr
       .union(pr.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(false) // stats-ok: loop INPUT, not round state (rounds use ckptNS)
+      .localCheckpoint(false) // stats-ok: loop INPUT, not round state
     // Loop-round checkpoints must NOT inherit origin stats: a
     // checkpointed self-join squares the size estimate every round
     // (see GraftShim.dropOriginStats), which hangs planning after ~20
     // rounds. The one-shot edges/pr checkpoints above are harmless.
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShim
-        .dropOriginStats(df.localCheckpoint(false))
-    var labels = ckpt(edges.select(col("src").as("node")).distinct()
+    var labels = ckptNoStats(edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")))
     var changed = 1L
     var iters = 0
@@ -716,7 +714,7 @@ object Dedup {
         // sort-merge choice (guide §3.1 — hash join when one side is
         // per-partition buildable; the label table is node-sized).
         val labelT = labels.schema("label").dataType
-        val stepped = ckpt(edges.join(labels.hint("shuffle_hash"),
+        val stepped = ckptNoStats(edges.join(labels.hint("shuffle_hash"),
             col("dst") === col("node"))
           .select(col("src").as("node"), col("label"),
             lit(null).cast(labelT).as("old"))
@@ -734,7 +732,7 @@ object Dedup {
         if (iters > 2) {
           for (_ <- 1 to 2) {
             val lk = cur.select(col("node").as("ln"), col("label").as("ll"))
-            val nxt = ckpt(cur.join(lk.hint("shuffle_hash"),
+            val nxt = ckptNoStats(cur.join(lk.hint("shuffle_hash"),
                 col("label") === col("ln"))
               .select(col("node"), col("ll").as("label"), col("old")))
             freed ::= cur
@@ -756,10 +754,6 @@ object Dedup {
     } finally { edges.unpersist(); pr.unpersist() }
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
-
-  private def ckptNS(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftShim
-      .dropOriginStats(df.localCheckpoint(false))
 
   /** The LSH BAND INDEX of a corpus — the carried artifact of
     * incremental text dedup: one (key, doc_id) row per band key (16
@@ -784,7 +778,7 @@ object Dedup {
     */
   def minhashLshPairsIncrement(bandIndex: DataFrame, corpus: DataFrame,
       delta: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val dBands = ckptNS(lshBandIndex(delta, idCol, textCol))
+    val dBands = ckptNoStats(lshBandIndex(delta, idCol, textCol))
     val allBands = bandIndex.unionByName(dBands)
     // Shuffle-hash with Δ as the (small) build side; the index streams.
     val cands = dBands.hint("shuffle_hash").as("x")
@@ -818,13 +812,13 @@ object Dedup {
     */
   def dedupClustersIncrement(labels: DataFrame, newPairs: DataFrame,
       aCol: String, bCol: String): DataFrame = {
-    val lab = ckptNS(labels)
+    val lab = ckptNoStats(labels)
     val pr = newPairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .localCheckpoint(true) // stats-ok: one-shot delta (isEmpty probe + reuse)
     if (pr.isEmpty) return lab
     val ids = pr.select(col("a").as("doc_id"))
       .union(pr.select(col("b"))).distinct()
-    val reps = ckptNS(ids.join(lab, Seq("doc_id"), "left")
+    val reps = ckptNoStats(ids.join(lab, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("rep")))
     val repEdges = pr
@@ -834,7 +828,7 @@ object Dedup {
         Seq("b"))
       .select(col("r1"), col("r2"))
       .unionByName(reps.select(col("rep").as("r1"), col("rep").as("r2")))
-    val repMap = ckptNS(dedupClusters(repEdges, "r1", "r2")
+    val repMap = ckptNoStats(dedupClusters(repEdges, "r1", "r2")
       .select(col("doc_id").as("rep"), col("cluster_id").as("newlab")))
     val remappedOld = lab
       .join(broadcast(repMap), lab("cluster_id") === repMap("rep"), "left")
@@ -868,17 +862,18 @@ object Dedup {
   def dedupClustersDelete(labels: DataFrame, bandIndex: DataFrame,
       corpus: DataFrame, deleteIds: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val lab = ckptNS(labels)
+    val lab = ckptNoStats(labels)
     val del = deleteIds.select(col(idCol).cast("long").as("doc_id"))
       .distinct().localCheckpoint(true) // stats-ok: one-shot delta (isEmpty probe + reuse)
     if (del.isEmpty) return lab
-    val touched = ckptNS(lab.join(del, Seq("doc_id"), "left_semi")
+    val touched = ckptNoStats(lab.join(del, Seq("doc_id"), "left_semi")
       .select(col("cluster_id")).distinct())
-    val members = ckptNS(lab
+    val members = ckptNoStats(lab
       .join(broadcast(touched), Seq("cluster_id"), "left_semi")
       .join(del, Seq("doc_id"), "left_anti")
       .select(col("doc_id")))
-    val mBands = ckptNS(bandIndex.join(members, Seq("doc_id"), "left_semi"))
+    val mBands =
+      ckptNoStats(bandIndex.join(members, Seq("doc_id"), "left_semi"))
     val cands = mBands.as("x")
       .join(mBands.hint("shuffle_hash").as("y"),
         col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))

@@ -1713,7 +1713,7 @@ object Graph {
     val (und, allNodes) = symNodes(edges, srcCol, dstCol)
     val n = allNodes.count()
     val srcNodes = if (sources <= 0) allNodes
-      else ckptNS(allNodes
+      else GraftShim.ckptNoStats(allNodes
         .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
         .limit(sources))
     val k = if (sources <= 0) n else srcNodes.count()
@@ -1726,15 +1726,11 @@ object Graph {
       dstCol: String): (DataFrame, DataFrame) = {
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b")).localCheckpoint(true) // stats-ok: one-shot edge materialization, not round state
-    val und = ckptNS(e0
+    val und = GraftShim.ckptNoStats(e0
       .union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct())
-    (und, ckptNS(und.select(col("a").as("node")).distinct()))
+    (und, GraftShim.ckptNoStats(und.select(col("a").as("node")).distinct()))
   }
-
-  private def ckptNS(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftShim
-      .dropOriginStats(df.localCheckpoint(false))
 
   /** Level-synchronous multi-source BFS: (src, node, d) for every node
     * reachable from each start node, d = shortest hop count. One hash
@@ -1753,7 +1749,7 @@ object Graph {
     */
   private def bfsDistances(und: DataFrame, srcNodes: DataFrame,
       maxDepth: Int): DataFrame = {
-    val start = ckptNS(srcNodes
+    val start = GraftShim.ckptNoStats(srcNodes
       .select(col("node").as("src"), col("node"), lit(0L).as("d")))
     val frontiers = scala.collection.mutable.ListBuffer(start)
     var frontier = start
@@ -1765,7 +1761,8 @@ object Graph {
       val seen = if (prev == null) frontier.select(col("src"), col("node"))
         else frontier.select(col("src"), col("node"))
           .unionAll(prev.select(col("src"), col("node")))
-      val nxt = ckptNS(frontier.join(und, col("node") === col("a"))
+      val nxt = GraftShim.ckptNoStats(frontier
+        .join(und, col("node") === col("a"))
         .select(col("src"), col("b").as("node"))
         .distinct()
         .join(seen, Seq("src", "node"), "left_anti")
@@ -1829,20 +1826,18 @@ object Graph {
       sources: Int, maxDepth: Int, topN: Int): DataFrame = {
     require(sources >= 1 && maxDepth >= 1 && topN >= 1,
       "betweennessSampled needs sources, maxDepth, topN >= 1")
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShim
-        .dropOriginStats(df.localCheckpoint(false))
+    // stats-ok: loop INPUT materialized once, not round state
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b")).localCheckpoint(true)
-    val und = ckpt(e0
+    val und = GraftShim.ckptNoStats(e0
       .union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct())
-    val srcs = ckpt(und.select(col("a").as("node")).distinct()
+    val srcs = GraftShim.ckptNoStats(und.select(col("a").as("node")).distinct()
       .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
       .limit(sources))
     // Forward: levels(d) = (src, node, sig) at BFS depth d.
     val levels = scala.collection.mutable.ListBuffer(
-      ckpt(srcs.select(col("node").as("src"), col("node"),
+      GraftShim.ckptNoStats(srcs.select(col("node").as("src"), col("node"),
         lit(1L).as("sig"))))
     var depth = 0
     var more = true
@@ -1856,7 +1851,8 @@ object Graph {
       val seen = levels.takeRight(2)
         .map(_.select(col("src"), col("node").as("b")))
         .reduce(_ unionAll _)
-      val nxt = ckpt(levels.last.join(und, col("node") === col("a"))
+      val nxt = GraftShim.ckptNoStats(levels.last
+        .join(und, col("node") === col("a"))
         .select(col("src"), col("b"), col("sig"))
         .join(seen, Seq("src", "b"), "left_anti")
         .groupBy(col("src"), col("b").as("node"))
@@ -1881,7 +1877,7 @@ object Graph {
     // so no-successor nodes keep delta 0 — the former union + anti-join
     // form planned the |E|-sized levels⨝und⨝down subtree TWICE per
     // level (once for the sums, once for the no-successor distinct).
-    var deltas = ckpt(levels.last.withColumn("delta", lit(0L)))
+    var deltas = GraftShim.ckptNoStats(levels.last.withColumn("delta", lit(0L)))
     val acc = scala.collection.mutable.ListBuffer(deltas)
     for (d <- (levels.size - 2) to 0 by -1) {
       val down = deltas.select(col("src"), col("node").as("b"),
@@ -1890,7 +1886,8 @@ object Graph {
         .join(down, Seq("src", "b"))
         .groupBy(col("src"), col("node"))
         .agg(sum(expr("sig * (1000000L + dw) div sw")).as("dsum"))
-      deltas = ckpt(levels(d).join(sums, Seq("src", "node"), "left")
+      deltas = GraftShim.ckptNoStats(levels(d)
+        .join(sums, Seq("src", "node"), "left")
         .select(col("src"), col("node"), col("sig"),
           coalesce(col("dsum"), lit(0L)).as("delta")))
       acc += deltas
@@ -1997,13 +1994,13 @@ object Graph {
     require(ks.nonEmpty && ks.forall(_ >= 1), "ks must be >= 1")
     val (und, allNodes) = symNodes(edges, srcCol, dstCol)
     val n = allNodes.count()
-    // No extra ckptNS on the all-sources distance relation: it is a
+    // No extra ckptNoStats on the all-sources distance relation: it is a
     // plain union of per-level frontiers that are ALREADY checkpointed
     // leaves, so pinning it again would double local-checkpoint storage
     // of a Θ(sum-of-reach) relation for zero recompute saved (ADVICE
     // r12) — every readout below re-reads the frontier blocks directly.
     val dist = bfsDistances(und, allNodes, maxDepth)
-    val ex = ckptNS(closenessReadout(dist, n, n)
+    val ex = GraftShim.ckptNoStats(closenessReadout(dist, n, n)
       .select(col("node"), col("closeness_micro").as("cx"))
       .filter(col("cx") > 0))
     ks.map { kk =>

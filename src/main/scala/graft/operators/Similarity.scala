@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.ckptNoStats
 import graft.functions.TextFunctions.{cosine, doti, quantize8}
 
 /** Vector similarity search over embedding columns (SURVEY.md §2.6).
@@ -23,17 +24,6 @@ import graft.functions.TextFunctions.{cosine, doti, quantize8}
   * to the oracle's double left-fold.
   */
 object Similarity {
-
-  /** Postfix stats-dropping lazy checkpoint: successive increments chain
-    * state → state, so inherited origin sizeInBytes would compound across
-    * folds (the Catalyst stats blowup that once hung dedupClusters/BFS
-    * planning) — every iterative/incremental checkpoint here drops them.
-    */
-  private implicit class CkptOps(private val df: DataFrame) {
-    def ckptNoStats: DataFrame =
-      org.apache.spark.sql.graftshim.GraftShim
-        .dropOriginStats(df.localCheckpoint(false))
-  }
 
   private val TopK = 5
   private val NumQueries = 10
@@ -3253,7 +3243,7 @@ object Similarity {
       quantize8(col(vecCol)).as("q8"))
     val sq = seeds.select(col(idCol).as("seed_id"),
       quantize8(col(vecCol)).as("sq"))
-    val ap = ivfAssignProbes(q8, sq, nprobe).ckptNoStats
+    val ap = ckptNoStats(ivfAssignProbes(q8, sq, nprobe))
     val asg = ap.select(col("vid").as("bid"), col("q8").as("bq"),
       col("cluster"))
     val cand = ap.select(col("vid"), col("q8"),
@@ -3306,14 +3296,14 @@ object Similarity {
       seeds: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int = 1): DataFrame = {
     require(k >= 1 && nprobe >= 1, "knnEdgesIvfIncrement needs k, nprobe >= 1")
-    val st = state.ckptNoStats
-    val dq8 = delta.select(col(idCol).as("vid"),
-      quantize8(col(vecCol)).as("q8")).ckptNoStats
+    val st = ckptNoStats(state)
+    val dq8 = ckptNoStats(delta.select(col(idCol).as("vid"),
+      quantize8(col(vecCol)).as("q8")))
     require(dq8.join(st.select(col("vid")), Seq("vid")).isEmpty,
       "knnEdgesIvfIncrement is append-only: delta ids must be fresh")
     val sq = seeds.select(col(idCol).as("seed_id"),
       quantize8(col(vecCol)).as("sq"))
-    val dap = ivfAssignProbes(dq8, sq, nprobe).ckptNoStats
+    val dap = ckptNoStats(ivfAssignProbes(dq8, sq, nprobe))
     // (a) Δ rows score against ALL assigned members of their probed
     // buckets (base ∪ Δ — Δ-Δ pairs included, as in the full build).
     val asgAll = st.select(col("vid").as("bid"), col("q8").as("bq"),
@@ -3329,13 +3319,13 @@ object Similarity {
     val deltaState = attachTopK(dap, rankTopK(dCand, k))
     // (b) Base vectors probing a bucket Δ touched: re-rank carried top-k
     // against the Δ members of their probed buckets only.
-    val dAsg = dap.select(col("vid").as("bid"), col("q8").as("bq"),
-      col("cluster")).ckptNoStats
+    val dAsg = ckptNoStats(dap.select(col("vid").as("bid"), col("q8").as("bq"),
+      col("cluster")))
     val dClusters = dAsg.select(col("cluster")).distinct()
     val affected = st.select(col("vid"), explode(col("probes")).as("cluster"))
       .join(broadcast(dClusters), Seq("cluster"))
       .select(col("vid")).distinct()
-    val aff = st.join(affected, Seq("vid"), "left_semi").ckptNoStats
+    val aff = ckptNoStats(st.join(affected, Seq("vid"), "left_semi"))
     val addCand = aff.select(col("vid"), col("q8"),
         explode(col("probes")).as("cluster"))
       .join(dAsg, Seq("cluster"))
@@ -3372,19 +3362,19 @@ object Similarity {
   def knnIvfStateDelete(state: DataFrame, deleteIds: DataFrame,
       idCol: String, k: Int): DataFrame = {
     require(k >= 1, "knnIvfStateDelete needs k >= 1")
-    val st = state.ckptNoStats
-    val del = deleteIds.select(col(idCol).cast("long").as("vid"))
-      .distinct().ckptNoStats
+    val st = ckptNoStats(state)
+    val del = ckptNoStats(deleteIds.select(col(idCol).cast("long").as("vid"))
+      .distinct())
     require(del.join(st.select(col("vid")), Seq("vid"), "left_anti").isEmpty,
       "knnIvfStateDelete: every delete id must exist in the state")
     if (del.isEmpty) return st
-    val rest = st.join(del, Seq("vid"), "left_anti").ckptNoStats
+    val rest = ckptNoStats(st.join(del, Seq("vid"), "left_anti"))
     val affected = rest.filter(col("topk").isNotNull)
       .select(col("vid"), explode(col("topk")).as("t"))
       .join(del.select(col("vid").as("t_n")),
         col("t.neighbor_id") === col("t_n"), "left_semi")
       .select(col("vid")).distinct()
-    val aff = rest.join(affected, Seq("vid"), "left_semi").ckptNoStats
+    val aff = ckptNoStats(rest.join(affected, Seq("vid"), "left_semi"))
     val asgRest = rest.select(col("vid").as("bid"), col("q8").as("bq"),
       col("cluster"))
     val cand = aff.select(col("vid"), col("q8"),
@@ -3454,13 +3444,12 @@ object Similarity {
         col("bcx"), col("bcy"),
         (col("bcx") + col("o.dx")).as("jcx"),
         (col("bcy") + col("o.dy")).as("jcy"))
-    val half = probe.join(cand, Seq("jcx", "jcy"))
+    val half = ckptNoStats(probe.join(cand, Seq("jcx", "jcy"))
       .filter(((col("ax") - col("bx")) * (col("ax") - col("bx")) +
           (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e) &&
         (col("aid") < col("bid") ||
           col("jcx") =!= col("bcx") || col("jcy") =!= col("bcy")))
-      .select(col("aid"), col("bid"))
-      .ckptNoStats
+      .select(col("aid"), col("bid")))
     half.unionAll(half.select(col("bid").as("aid"), col("aid").as("bid")))
   }
 
@@ -3482,13 +3471,12 @@ object Similarity {
     // (core / label tables ≤ |P| rows): the checkpointed leaves carry
     // no stats, so the default choice would sort the pair-sized stream
     // at every join (guide §3.1).
-    val core = pts.join(
+    val core = ckptNoStats(pts.join(
         nbr.groupBy("aid").agg(count(lit(1)).as("nc"))
           .hint("shuffle_hash"),
         col("id") === col("aid"), "left")
       .filter(coalesce(col("nc"), lit(0L)) + 1 >= minPts)
-      .select(col("id"))
-      .ckptNoStats
+      .select(col("id")))
     // Core-core edges + self-pairs (isolated cores form singleton
     // clusters; dedupClusters only labels nodes that appear in a pair).
     val ce = nbr
@@ -3545,12 +3533,11 @@ object Similarity {
     def fdiv(a: Column): Column =
       (call_function("div", a, e) +
         when((a % e) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = points.select(col(idCol).cast("long").as("id"),
+    val pts = ckptNoStats(points.select(col(idCol).cast("long").as("id"),
         floor(xCol.cast("double") * 1e6).cast("long").as("x"),
         floor(yCol.cast("double") * 1e6).cast("long").as("y"))
       .withColumn("cx", fdiv(col("x")))
-      .withColumn("cy", fdiv(col("y")))
-      .ckptNoStats
+      .withColumn("cy", fdiv(col("y"))))
     // Labels share the id domain (label = min core id of the component),
     // so a negative id could collide with the census's -1 noise sentinel.
     // One driver action, not two: the old `agg.head || agg.head` form ran
@@ -3562,13 +3549,12 @@ object Similarity {
     val nbr = gridEpsPairs(pts, e)
     // Node-sized sides hash-build, pair-sized streams never sort — the
     // same census-assembly join discipline as [[dbscanGrid]].
-    val base = pts.join(
+    val base = ckptNoStats(pts.join(
         nbr.groupBy("aid").agg(count(lit(1)).as("nc"))
           .hint("shuffle_hash"),
         col("id") === col("aid"), "left")
       .select(col("id"), col("x"), col("y"),
-        coalesce(col("nc"), lit(0L)).as("ncnt"))
-      .ckptNoStats
+        coalesce(col("nc"), lit(0L)).as("ncnt")))
     val core = base.filter(col("ncnt") + 1 >= minPts).select(col("id"))
     val ce = nbr
       .join(core.withColumnRenamed("id", "aid").hint("shuffle_hash"),
@@ -3658,11 +3644,10 @@ object Similarity {
         when((a % e) < 0, -1L).otherwise(0L)).cast("long")
     def cells(df: DataFrame): DataFrame = df
       .withColumn("cx", fdiv(col("x"))).withColumn("cy", fdiv(col("y")))
-    val st = state.ckptNoStats
-    val dpts = cells(delta.select(col(idCol).cast("long").as("id"),
+    val st = ckptNoStats(state)
+    val dpts = ckptNoStats(cells(delta.select(col(idCol).cast("long").as("id"),
         floor(xCol.cast("double") * 1e6).cast("long").as("x"),
-        floor(yCol.cast("double") * 1e6).cast("long").as("y")))
-      .ckptNoStats
+        floor(yCol.cast("double") * 1e6).cast("long").as("y"))))
     require(dpts.join(st.select(col("id")), Seq("id")).isEmpty,
       "dbscanGridIncrement is insert-only: delta ids must be fresh")
     // Negative ids promoted to core would become cluster labels colliding
@@ -3671,10 +3656,9 @@ object Similarity {
     require(dMinId.isNullAt(0) || dMinId.getLong(0) >= 0L,
       "dbscanGridIncrement: delta ids must be >= 0 (labels share the id " +
         "domain; -1 is the census noise sentinel)")
-    val allPts = cells(st.select(col("id"), col("x"), col("y")))
+    val allPts = ckptNoStats(cells(st.select(col("id"), col("x"), col("y")))
       .unionByName(dpts.select(col("id"), col("x"), col("y"),
-        col("cx"), col("cy")))
-      .ckptNoStats
+        col("cx"), col("cy"))))
     // One grid probe of a (small) point set against every point's cell:
     // the probe side explodes 3×3, each qualifying pair is found once.
     def gridPairs(small: DataFrame): DataFrame = small
@@ -3691,34 +3675,31 @@ object Similarity {
         (col("ax") - col("bx")) * (col("ax") - col("bx")) +
           (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e)
       .select(col("aid"), col("bid"))
-    val p1 = gridPairs(dpts).ckptNoStats
+    val p1 = ckptNoStats(gridPairs(dpts))
     // Updated neighbor counts: base rows gain their Δ-neighbor count
     // (p1 rows whose bid is NOT a Δ id), Δ rows count all their pairs.
     val addB = p1.join(dpts.select(col("id").as("bid")), Seq("bid"),
         "left_anti")
       .groupBy(col("bid").as("id")).agg(count(lit(1)).as("add"))
     val dn = p1.groupBy(col("aid").as("id")).agg(count(lit(1)).as("dnc"))
-    val baseUp = st.join(addB.hint("shuffle_hash"), Seq("id"), "left")
-      .withColumn("ncnt2", col("ncnt") + coalesce(col("add"), lit(0L)))
-      .ckptNoStats
-    val deltaUp = dpts.join(dn, Seq("id"), "left")
-      .withColumn("ncnt2", coalesce(col("dnc"), lit(0L)))
-      .ckptNoStats
+    val baseUp = ckptNoStats(st
+      .join(addB.hint("shuffle_hash"), Seq("id"), "left")
+      .withColumn("ncnt2", col("ncnt") + coalesce(col("add"), lit(0L))))
+    val deltaUp = ckptNoStats(dpts.join(dn, Seq("id"), "left")
+      .withColumn("ncnt2", coalesce(col("dnc"), lit(0L))))
     // Newly-core points: base promotions + core Δ rows.
-    val newCoreBase = baseUp
+    val newCoreBase = ckptNoStats(baseUp
       .filter(col("ncnt") + 1 < minPts && col("ncnt2") + 1 >= minPts)
-      .select(col("id"), col("x"), col("y"))
-      .ckptNoStats
-    val coreDelta = deltaUp.filter(col("ncnt2") + 1 >= minPts)
-      .select(col("id")).ckptNoStats
-    val p2 = gridPairs(cells(newCoreBase)).ckptNoStats
+      .select(col("id"), col("x"), col("y")))
+    val coreDelta = ckptNoStats(deltaUp.filter(col("ncnt2") + 1 >= minPts)
+      .select(col("id")))
+    val p2 = ckptNoStats(gridPairs(cells(newCoreBase)))
     // Representative per core-after point: old cores speak as their
     // label, new cores as themselves — the label graph's node set.
-    val reps = st.filter(col("cluster").isNotNull)
+    val reps = ckptNoStats(st.filter(col("cluster").isNotNull)
       .select(col("id"), col("cluster").as("rep"))
       .unionByName(newCoreBase.select(col("id"), col("id").as("rep")))
-      .unionByName(coreDelta.select(col("id"), col("id").as("rep")))
-      .ckptNoStats
+      .unionByName(coreDelta.select(col("id"), col("id").as("rep"))))
     // New core-core edges at rep level (+ self-pairs so isolated new
     // cores form singleton clusters), closed transitively.
     val edges = p1.unionByName(p2)
@@ -3729,24 +3710,21 @@ object Similarity {
       .select(col("r1"), col("r2"))
       .unionByName(newCoreBase.select(col("id")).unionByName(coreDelta)
         .select(col("id").as("r1"), col("id").as("r2")))
-    val repMap = Dedup.dedupClusters(edges, "r1", "r2")
-      .select(col("doc_id").as("rep"), col("cluster_id").as("lab"))
-      .ckptNoStats
+    val repMap = ckptNoStats(Dedup.dedupClusters(edges, "r1", "r2")
+      .select(col("doc_id").as("rep"), col("cluster_id").as("lab")))
     // Every core-after point's final label: its rep, remapped.
-    val clustered = reps
+    val clustered = ckptNoStats(reps
       .join(broadcast(repMap), Seq("rep"), "left")
-      .select(col("id"), coalesce(col("lab"), col("rep")).as("clab"))
-      .ckptNoStats
+      .select(col("id"), coalesce(col("lab"), col("rep")).as("clab")))
     // Border-set maintenance. New adjacent-core contributions: Δ points
     // take every core-after neighbor's label; base points take only
     // NEWLY-core neighbors (old core adjacency is already in the set).
-    val contrib = p1.select(col("aid"), col("bid"))
+    val contrib = ckptNoStats(p1.select(col("aid"), col("bid"))
       .unionByName(p1.select(col("bid").as("aid"), col("aid").as("bid")))
       .unionByName(p2.select(col("bid").as("aid"), col("aid").as("bid")))
       .join(clustered.withColumnRenamed("id", "bid")
         .withColumnRenamed("clab", "nlab"), Seq("bid"))
-      .select(col("aid").as("id"), col("nlab"))
-      .ckptNoStats
+      .select(col("aid").as("id"), col("nlab")))
     // Old sets: explode only rows whose elements the repMap touches
     // (labels only ever decrease, so untouched rows keep their arrays),
     // rebuild those arrays element-remapped.
@@ -3768,10 +3746,10 @@ object Similarity {
     val carried = oldBorders.join(remappedIds, Seq("id"), "left_anti")
       .join(contrib.select(col("id")).distinct(), Seq("id"), "left_semi")
       .select(col("id"), explode(col("bcls")).as("nlab"))
-    val rebuilt = rebuiltOld.unionByName(contrib).unionByName(carried)
+    val rebuilt = ckptNoStats(rebuiltOld
+      .unionByName(contrib).unionByName(carried)
       .groupBy(col("id"))
-      .agg(sort_array(collect_set(col("nlab"))).as("bcls2"))
-      .ckptNoStats
+      .agg(sort_array(collect_set(col("nlab"))).as("bcls2")))
     // Assemble: ncnt from the update pass, cluster from the remapped
     // rep table, border sets = rebuilt where touched else carried-over;
     // cores drop their set, borders/noise drop their label.
@@ -3841,42 +3819,39 @@ object Similarity {
         (col("ax") - col("bx")) * (col("ax") - col("bx")) +
           (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e)
       .select(col("aid"), col("bid"))
-    val st = state.ckptNoStats
-    val del = deleteIds.select(col(idCol).cast("long").as("id"))
-      .distinct().ckptNoStats
+    val st = ckptNoStats(state)
+    val del = ckptNoStats(deleteIds.select(col(idCol).cast("long").as("id"))
+      .distinct())
     require(del.join(st.select(col("id")), Seq("id"), "left_anti").isEmpty,
       "dbscanGridDelete: every delete id must exist in the state")
     if (del.isEmpty) return st
-    val rest = st.join(del, Seq("id"), "left_anti").ckptNoStats
-    val dpts = cells(st.join(del, Seq("id"), "left_semi")
-      .select(col("id"), col("x"), col("y"))).ckptNoStats
-    val restPts = cells(rest.select(col("id"), col("x"), col("y")))
-      .ckptNoStats
+    val rest = ckptNoStats(st.join(del, Seq("id"), "left_anti"))
+    val dpts = ckptNoStats(cells(st.join(del, Seq("id"), "left_semi")
+      .select(col("id"), col("x"), col("y"))))
+    val restPts = ckptNoStats(cells(rest.select(col("id"), col("x"), col("y"))))
     // (a) neighbor-count drops: deleted × remaining pairs, one grid probe.
-    val p1 = gridPairs(dpts, restPts).ckptNoStats
+    val p1 = ckptNoStats(gridPairs(dpts, restPts))
     val sub = p1.groupBy(col("bid").as("id")).agg(count(lit(1)).as("drop"))
-    val up = rest.join(sub.hint("shuffle_hash"), Seq("id"), "left")
+    val up = ckptNoStats(rest.join(sub.hint("shuffle_hash"), Seq("id"), "left")
       .withColumn("ncnt2", col("ncnt") - coalesce(col("drop"), lit(0L)))
-      .withColumn("isCore", col("ncnt2") + 1 >= minPts)
-      .ckptNoStats
+      .withColumn("isCore", col("ncnt2") + 1 >= minPts))
     // (b)/(c) touched clusters: lost a core (deleted) or had one demote.
     val delCoreLabs = st.join(del, Seq("id"), "left_semi")
       .filter(col("cluster").isNotNull).select(col("cluster"))
-    val demoted = up.filter(col("ncnt") + 1 >= minPts && !col("isCore"))
-      .ckptNoStats
-    val touched = delCoreLabs.unionByName(demoted.select(col("cluster")))
-      .distinct().ckptNoStats
+    val demoted = ckptNoStats(
+      up.filter(col("ncnt") + 1 >= minPts && !col("isCore")))
+    val touched = ckptNoStats(delCoreLabs
+      .unionByName(demoted.select(col("cluster"))).distinct())
     // Split recompute over ONLY the touched clusters' remaining cores.
-    val members = up
+    val members = ckptNoStats(up
       .filter(col("isCore"))
       .join(broadcast(touched), Seq("cluster"), "left_semi")
-      .select(col("id"), col("x"), col("y"))
-      .ckptNoStats
+      .select(col("id"), col("x"), col("y")))
     val relab =
       if (members.isEmpty)
         members.select(col("id"), col("id").as("newlab"))
       else {
-        val mc = cells(members).ckptNoStats
+        val mc = ckptNoStats(cells(members))
         val p2 = gridPairs(mc, mc)
           .unionByName(members.select(col("id").as("aid"),
             col("id").as("bid")))
@@ -3888,12 +3863,12 @@ object Similarity {
     // min may be gone — but never collide: a label is a member min, and
     // components are disjoint point sets).
     // relab is MEMBER-sized (one touched component can be big) — a plain
-    // equi-join, not a forced broadcast; AQE picks the strategy.
-    val coreLabs = up.filter(col("isCore"))
-      .join(relab.hint("shuffle_hash"), Seq("id"), "left")
+    // equi-join, no broadcast or shuffle_hash hint (a hashed build side
+    // cannot spill); AQE picks the strategy.
+    val coreLabs = ckptNoStats(up.filter(col("isCore"))
+      .join(relab, Seq("id"), "left")
       .select(col("id"), col("x"), col("y"), col("ncnt2"),
-        coalesce(col("newlab"), col("cluster")).as("clab"))
-      .ckptNoStats
+        coalesce(col("newlab"), col("cluster")).as("clab")))
     // Border-set rebuild: demoted cores (need a set for the first time)
     // plus non-core rows whose set intersects a touched label.
     val touchedBorders = up
@@ -3902,17 +3877,16 @@ object Similarity {
       .select(col("id"), explode(col("bcls")).as("cluster"))
       .join(broadcast(touched), Seq("cluster"), "left_semi")
       .select(col("id")).distinct()
-    val rebuildIds = touchedBorders
-      .unionByName(demoted.select(col("id"))).distinct().ckptNoStats
+    val rebuildIds = ckptNoStats(touchedBorders
+      .unionByName(demoted.select(col("id"))).distinct())
     val rebuildPts = cells(up.join(rebuildIds, Seq("id"), "left_semi")
       .select(col("id"), col("x"), col("y")))
     val coreCells = cells(coreLabs.select(col("id"), col("x"), col("y")))
-    val newB = gridPairs(rebuildPts, coreCells)
+    val newB = ckptNoStats(gridPairs(rebuildPts, coreCells)
       .join(coreLabs.select(col("id").as("bid"), col("clab"))
         .hint("shuffle_hash"), Seq("bid"))
       .groupBy(col("aid").as("id"))
-      .agg(sort_array(collect_set(col("clab"))).as("bcls2"))
-      .ckptNoStats
+      .agg(sort_array(collect_set(col("clab"))).as("bcls2")))
     // Assemble: cores drop their set; non-core rows take the rebuilt set
     // where rebuilt (absent row = no remaining core neighbor = noise),
     // else carry the old one. Node-sized right sides hash-build — the
@@ -3958,17 +3932,14 @@ object Similarity {
     require(dims.nonEmpty && depth >= 1 && depth <= 20 && topN >= 1,
       "hstOutliers needs dims, 1 <= depth <= 20, topN >= 1")
     val k = dims.size
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShim
-        .dropOriginStats(df.localCheckpoint(false))
     def fdC(a: Column, b: Column): Column =
       (call_function("div", a, b) +
         when((a % b) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = ckpt(points.select(
+    val pts = ckptNoStats(points.select(
       (col(idCol).cast("long").as("id") +:
         dims.zipWithIndex.map { case (c, j) =>
           floor(c.cast("double") * 1e6).cast("long").as(s"d$j") }): _*))
-    var asg = ckpt(pts.select(col("id"),
+    var asg = ckptNoStats(pts.select(col("id"),
       explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
       .withColumn("node", lit(0L)))
     for (level <- 0 until depth) {
@@ -3981,7 +3952,7 @@ object Similarity {
       val joined = asg.join(pts, Seq("id")).withColumn("v", v)
       val splits = joined.groupBy("tree", "node")
         .agg(fdC(min(col("v")) + max(col("v")), lit(2L)).as("mid"))
-      asg = ckpt(joined.join(broadcast(splits), Seq("tree", "node"))
+      asg = ckptNoStats(joined.join(broadcast(splits), Seq("tree", "node"))
         .select(col("id"), col("tree"),
           (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
             .as("node")))
@@ -4019,19 +3990,16 @@ object Similarity {
     val k = dims.size
     require(k.toLong * (1L << depth) <= (1L << 22),
       "hstFit model must stay driver-bounded: trees * 2^depth <= 4M")
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShim
-        .dropOriginStats(df.localCheckpoint(false))
     def fdC(a: Column, b: Column): Column =
       (call_function("div", a, b) +
         when((a % b) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = ckpt(points.select(
+    val pts = ckptNoStats(points.select(
       (col(idCol).cast("long").as("id") +:
         dims.zipWithIndex.map { case (c, j) =>
           floor(c.cast("double") * 1e6).cast("long").as(s"d$j") }): _*))
     require(pts.head(1).nonEmpty, "hstFit needs rows")
     val splits = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
-    var asg = ckpt(pts.select(col("id"),
+    var asg = ckptNoStats(pts.select(col("id"),
       explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
       .withColumn("node", lit(0L)))
     for (level <- 0 until depth) {
@@ -4050,7 +4018,7 @@ object Similarity {
         splits((t, level)) = rows.iterator
           .filter(_.getInt(0) == t).map(r => r.getLong(1) -> r.getLong(2))
           .toMap
-      asg = ckpt(joined.join(broadcast(sp), Seq("tree", "node"))
+      asg = ckptNoStats(joined.join(broadcast(sp), Seq("tree", "node"))
         .select(col("id"), col("tree"),
           (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
             .as("node")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Manual key-salting for skewed equi-joins (SURVEY.md §4 / scale notes).
   *
   * AQE's skew-join handling splits oversized SORT-MERGE partitions at
-  * runtime and is the first line of defense (enabled in GraftSession).
+  * runtime and is the first line of defense (on by Spark's default).
   * Salting remains the tool for the cases AQE can't rewrite — skewed
   * aggregation keys feeding a join, or a hot key whose rows must spread
   * across MORE executors than one partition split allows.

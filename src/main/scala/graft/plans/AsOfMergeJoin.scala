@@ -63,10 +63,9 @@ final case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] as [[AsOfMergeJoinExec]]. Injected via
-  * `SparkSessionExtensions.injectPlannerStrategy` (GraftSession.local) and
-  * `spark.experimental.extraStrategies` (Native.register, for sessions
-  * built outside the factory — Verify/Bench/driver).
+/** Plans [[AsOfJoinNode]] as [[AsOfMergeJoinExec]]. Registered through
+  * `spark.experimental.extraStrategies` by `AsOfJoin.leftAsOfNative`, the
+  * only builder of the node, on the session that plans it.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

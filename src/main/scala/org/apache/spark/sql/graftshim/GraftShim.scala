@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * has no public equivalent, so this object lives under `org.apache.spark
   * .sql` for access — the standard pattern for Spark extension libraries
   * that add custom plan nodes. Nothing else engine-side depends on
-  * internals beyond this call plus the documented extension points
-  * (SparkSessionExtensions, experimental.extraStrategies).
+  * internals beyond the calls here plus the documented extension point
+  * `experimental.extraStrategies`.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -23,16 +23,6 @@ object GraftShim {
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[_]].queryExecution.analyzed
 
-  /** Drop the origin statistics (and constraints) a `localCheckpoint`
-    * carries over from the plan that produced it. An iterative
-    * algorithm that checkpoints every round otherwise COMPOUNDS the
-    * size-in-bytes estimate — a self-join squares it each round, so
-    * after ~20 rounds Catalyst's stats visitor is multiplying
-    * million-bit BigIntegers on the driver and planning hangs. Data,
-    * lineage truncation, and output partitioning of the checkpoint are
-    * untouched; the relation merely reverts to the
-    * `defaultSizeInBytes` leaf estimate.
-    */
   /** Stats-dropping checkpoint — THE way to truncate lineage inside a
     * state→state loop (pagerank, LPA, fixpoints, incremental folds):
     * `localCheckpoint` + [[dropOriginStats]] in one call, so no new
@@ -54,6 +44,16 @@ object GraftShim {
     df.asInstanceOf[ClassicDataset[_]].queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
+  /** Drop the origin statistics (and constraints) a `localCheckpoint`
+    * carries over from the plan that produced it. An iterative
+    * algorithm that checkpoints every round otherwise COMPOUNDS the
+    * size-in-bytes estimate — a self-join squares it each round, so
+    * after ~20 rounds Catalyst's stats visitor is multiplying
+    * million-bit BigIntegers on the driver and planning hangs. Data,
+    * lineage truncation, and output partitioning of the checkpoint are
+    * untouched; the relation merely reverts to the
+    * `defaultSizeInBytes` leaf estimate.
+    */
   def dropOriginStats(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[ClassicDataset[_]]
     ds.queryExecution.analyzed match {
@@ -65,4 +65,11 @@ object GraftShim {
       case _ => df
     }
   }
+
+  /** Block until every event already posted to the listener bus has been
+    * delivered — a deterministic drain (`listenerBus` is `private[spark]`)
+    * for callers that read listener-fed counters after a job.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * incident). The repo-wide convention, stated on
   * `GraftShim.ckptNoStats`:
   *
-  *  - loop checkpoints (state feeding the next round) go through
-  *    `GraftShim.ckptNoStats` / `dropOriginStats` (or a local `ckpt`
-  *    helper that delegates to them);
+  *  - loop checkpoints (state feeding the next round) call
+  *    `GraftShim.ckptNoStats` / `dropOriginStats` directly — operator
+  *    modules keep no local copies of the helper;
   *  - one-shot checkpoints (input materialization, shared candidate
   *    sets, cache entries) MAY keep origin stats — they are the real
   *    input's and inform join strategy — and mark the site
@@ -29,11 +29,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CheckpointDisciplineSpec extends AnyFunSuite {
 
-  // Local `ckpt`/`ckptNS` helpers are NOT acceptance tokens: their call
-  // sites contain no `.localCheckpoint(` (so they never reach this
-  // check), and their DEF bodies must visibly reach one of these two —
-  // which keeps a future `def ckpt(df) = df.localCheckpoint()` from
-  // slipping through on its name alone.
+  // Only the shim's own names are acceptance tokens: a wrapper call site
+  // contains no `.localCheckpoint(` (so it never reaches this check), and
+  // a locally defined helper would have to visibly reach one of these two
+  // in its body — which keeps a `def ckpt(df) = df.localCheckpoint()`
+  // from slipping through on its name alone.
   private val wrappers = Seq("ckptNoStats", "dropOriginStats")
 
   test("every localCheckpoint site is stats-dropped or adjudicated stats-ok") {
@@ -68,8 +68,8 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
   }
 
   test("local ckpt helpers delegate to the shim (no hand-rolled stats drop)") {
-    // A local `def ckpt(...)`/`ckptNS(...)` helper is fine — but its body
-    // must reach GraftShim, not reimplement the LogicalRDD surgery.
+    // Checkpoint call sites reach GraftShim — none may reimplement the
+    // LogicalRDD surgery that `dropOriginStats` owns.
     val root = new java.io.File("src/main/scala/graft")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)

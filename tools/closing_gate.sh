@@ -25,6 +25,8 @@ ROUND="${1:?usage: tools/closing_gate.sh <round-number>}"
 SF_VERIFY="${SPARK_GRAFT_VERIFY_SF:-/root/testdata/sf0.01}"
 SF_BENCH="${SPARK_GRAFT_BENCH_SF:-/root/testdata/sf0.1}"
 OUT="/tmp/closing_gate_r${ROUND}"
+# One core count for every main below (GraftSession.local reads it).
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 mkdir -p "$OUT" bench
 FAIL=0
 
@@ -148,8 +150,7 @@ else
 fi
 
 echo "-- (c) Verify + DuckDB oracle over every registered query @ $SF_VERIFY"
-if ! SPARK_GRAFT_CPUS=16 sbt -batch \
-    "runMain graft.Verify $SF_VERIFY $OUT/verify" \
+if ! sbt -batch "runMain graft.Verify $SF_VERIFY $OUT/verify" \
     > "$OUT/verify.log" 2>&1; then
   echo "GATE FAIL: graft.Verify crashed (see $OUT/verify.log)"
   tail -20 "$OUT/verify.log"
