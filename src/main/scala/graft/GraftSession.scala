@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * core count (not Spark's 200) — at 100 TB scale this is overridden to
   * ~2-3x total cluster cores; AQE (on by Spark's default) coalesces small
   * partitions either way. The core count defaults to `SPARK_GRAFT_CPUS`
-  * when set, otherwise to the JVM's available processors.
+  * when set, otherwise to the JVM's available processors. Local `file:`
+  * paths reached through FileContext (every streaming checkpoint) use
+  * [[GraftLocalFs]], which creates and renames files without forking.
   */
 object GraftSession {
   def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -22,6 +24,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(s"spark.hadoop.${GraftLocalFs.confKey}",
+        classOf[GraftLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.Native.register(spark)

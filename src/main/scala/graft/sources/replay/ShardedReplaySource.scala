@@ -16,6 +16,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -653,8 +654,10 @@ final class ShardedReplayMicroBatchStream(
   // persist the PLANNED frontier in a source-owned marker next to the
   // checkpoint before any task runs. On recovery the engine replans the
   // failed batch from its offset log — and the source then serves an empty
-  // range for everything at or below the marker. (Marker write is
-  // write-tmp-then-rename; a crash between rename and task launch degrades
+  // range for everything at or below the marker. (The marker goes through
+  // the engine's checkpoint manager like the offset log: an atomic create
+  // that writes a temp file and renames it over the marker, failing the
+  // batch if it cannot; a crash between rename and task launch degrades
   // to redelivery of ONE batch, the same window the reference has between
   // checkpoint call and record handoff.)
   private lazy val markerPath =
@@ -662,14 +665,20 @@ final class ShardedReplayMicroBatchStream(
   // The session's Hadoop conf (captured at scan construction on the
   // query's own driver thread), not a bare new Configuration(): checkpoint
   // dirs on object stores / HDFS carry credentials and fs settings in
-  // spark.hadoop.* that a default conf lacks.
-  private lazy val markerFs =
-    markerPath.getFileSystem(SerializableHadoopConf.resolve(hconf))
+  // spark.hadoop.* that a default conf lacks. The engine creates the
+  // source's checkpoint dir only when it writes source metadata, so the
+  // marker creates it, as Spark's own logs do.
+  private lazy val markerFm = {
+    val fm = CheckpointFileManager.create(
+      markerPath.getParent, SerializableHadoopConf.resolve(hconf))
+    fm.mkdirs(markerPath.getParent)
+    fm
+  }
 
   private def readMarker(): Option[ShardPositions] =
-    if (!markerFs.exists(markerPath)) None
+    if (!markerFm.exists(markerPath)) None
     else {
-      val in = markerFs.open(markerPath)
+      val in = markerFm.open(markerPath)
       try Some(ShardPositions.parse(
         new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)))
       finally in.close()
@@ -683,18 +692,11 @@ final class ShardedReplayMicroBatchStream(
     readMarker().map(normalize)
 
   private def writeMarker(p: ShardPositions): Unit = {
-    val tmp = new Path(markerPath.getParent, markerPath.getName + ".tmp")
-    val out = markerFs.create(tmp, true)
-    try out.write(p.json().getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Hadoop FileSystem signals failure by RETURNING false, not throwing.
-    // Proceeding past a failed rename would leave no current marker and
-    // silently widen at-most-once into redelivery — fail the batch instead
-    // (the eager-commit contract is "marker durable before tasks run").
-    markerFs.delete(markerPath, false) // false also when absent — fine
-    if (!markerFs.rename(tmp, markerPath))
-      throw new java.io.IOException(
-        s"failed to move eager-commit marker $tmp -> $markerPath")
+    val out = markerFm.createAtomic(markerPath, overwriteIfPossible = true)
+    try {
+      out.write(p.json().getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.close()
+    } catch { case e: Throwable => out.cancel(); throw e }
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

@@ -11,7 +11,9 @@ import graft.plans.{AsOfJoinStrategy, AsOfMergeJoinExec}
 /** One session factory and one registration path for the as-of planner
   * strategy: `GraftSession.local` is the only place a session is built,
   * and `AsOfJoin.leftAsOfNative` — the only builder of the as-of node —
-  * registers the strategy on whichever session will plan it.
+  * registers the strategy on whichever session will plan it. Every
+  * factory session, and every child of one, maps `file:` to
+  * [[GraftLocalFs]].
   */
 class SessionFactorySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -23,9 +25,10 @@ class SessionFactorySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     AsOfJoin.leftAsOfNative(left, right, Seq("k"), "t", "rt", Seq("v"))
   }
 
-  private def strategies(s: SparkSession) =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.planner.strategies
+  private def sessionState(s: SparkSession) =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+
+  private def strategies(s: SparkSession) = sessionState(s).planner.strategies
 
   test("src/main builds a SparkSession only in GraftSession.scala") {
     val root = new java.io.File("src/main/scala")
@@ -57,5 +60,12 @@ class SessionFactorySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (2L, 5L, None)))
     val plan: SparkPlan = df.queryExecution.executedPlan
     assert(collect(plan) { case j: AsOfMergeJoinExec => j }.size === 1, plan)
+  }
+
+  test("factory sessions and their newSession() children map file: to GraftLocalFs") {
+    val s = GraftSession.local(cpus = 4, appName = suiteName)
+    for (x <- Seq(s, s.newSession()))
+      assert(sessionState(x).newHadoopConf().get(GraftLocalFs.confKey) ===
+        classOf[GraftLocalFs].getName)
   }
 }
