@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftShim.ckptNoStats
+import org.apache.spark.sql.graftshim.GraftShim.{ckptNoStats, release}
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over text / embedding tables (SURVEY.md §2.6):
@@ -662,9 +662,9 @@ object Dedup {
     * the shortcut, while chain-shaped components (spatial eps-graphs,
     * long near-dup chains) no longer degenerate to one round per hop.
     * Each round is a bounded number of shuffle joins + a
-    * partial-aggregated min, localCheckpoint'ed so the plan (and
-    * lineage) stays flat. The driver-side loop holds only a changed-row
-    * COUNT, never data.
+    * partial-aggregated min, run as a [[Fixpoint]] round so the plan
+    * (and lineage) stays flat and superseded rounds are freed. The
+    * driver-side loop holds only a changed-row COUNT, never data.
     */
   def dedupClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 100): DataFrame = {
@@ -677,31 +677,26 @@ object Dedup {
       .union(pr.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(false) // stats-ok: loop INPUT, not round state
-    // Loop-round checkpoints must NOT inherit origin stats: a
-    // checkpointed self-join squares the size estimate every round
-    // (see GraftShim.dropOriginStats), which hangs planning after ~20
-    // rounds. The one-shot edges/pr checkpoints above are harmless.
-    var labels = ckptNoStats(edges.select(col("src").as("node")).distinct()
+    // Round state drops origin stats, round 0 included: a checkpointed
+    // self-join squares the size estimate every round (see
+    // GraftShim.dropOriginStats), which hangs planning after ~20 rounds.
+    val labels0 = ckptNoStats(edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")))
-    var changed = 1L
-    var iters = 0
-    // Cleanup discipline: a throw (the non-convergence guard) must not
-    // strand checkpoints in block storage — a driver catching the error
-    // to retry with a tighter threshold would accumulate them. The final
-    // labels relation is the RESULT and stays checkpointed.
+    // One pointer-doubling shortcut: each label becomes its label's label.
+    def shortcut(cur: DataFrame): DataFrame = {
+      val lk = cur.select(col("node").as("ln"), col("label").as("ll"))
+      cur.join(lk.hint("shuffle_hash"), col("label") === col("ln"))
+        .select(col("node"), col("ll").as("label"), col("old"))
+    }
+    // Fixpoint frees its rounds on a throw and this finally the inputs,
+    // so a driver retrying after the guard accumulates no checkpoints.
     try {
-      while (changed > 0) {
-        iters += 1
-        require(iters <= maxIters,
+      Fixpoint.untilStable(labels0, maxIters,
           s"label propagation did not converge in $maxIters rounds: with " +
             "pointer doubling that means a component of diameter >= " +
             "2^maxIters — pathological input (e.g. a threshold low " +
             "enough to chain the whole corpus); tighten the pairing " +
-            "threshold")
-        // Checkpoint the propagate step before the shortcut self-join:
-        // the agg materializes once (not twice via exchange reuse), and
-        // the join sees a flat LogicalRDD (a self-joined Union trips
-        // Catalyst's constraint rewrite).
+            "threshold") { (round, labels) =>
         // The change-count is FUSED into the propagate aggregation: the
         // labels branch of the union tags each node's previous label as
         // `old` (min over the group recovers it — every node appears in
@@ -714,45 +709,28 @@ object Dedup {
         // sort-merge choice (guide §3.1 — hash join when one side is
         // per-partition buildable; the label table is node-sized).
         val labelT = labels.schema("label").dataType
-        val stepped = ckptNoStats(edges.join(labels.hint("shuffle_hash"),
+        val stepped = edges.join(labels.hint("shuffle_hash"),
             col("dst") === col("node"))
           .select(col("src").as("node"), col("label"),
             lit(null).cast(labelT).as("old"))
           .union(labels.select(col("node"), col("label"),
             col("label").as("old")))
           .groupBy(col("node")).agg(min(col("label")).as("label"),
-            min(col("old")).as("old")))
+            min(col("old")).as("old"))
         // Near-cliques converge in 1-2 plain rounds; only a component
         // still unconverged after that (a chain) pays for the shortcuts.
         // Two chained label-of-label joins quadruple the reach per round
         // (reach^4), so a diameter-d component closes in ~log4(d) + 2
         // rounds; each shortcut is one tiny join on the label relation.
-        var freed = List.empty[DataFrame]
-        var cur = stepped
-        if (iters > 2) {
-          for (_ <- 1 to 2) {
-            val lk = cur.select(col("node").as("ln"), col("label").as("ll"))
-            val nxt = ckptNoStats(cur.join(lk.hint("shuffle_hash"),
-                col("label") === col("ln"))
-              .select(col("node"), col("ll").as("label"), col("old")))
-            freed ::= cur
-            cur = nxt
-          }
-        }
-        val prop = cur
-        changed = prop.filter(col("label") =!= col("old")).count()
-        // The count() above materialized prop's checkpoint, so the
-        // previous round's label blocks (and the intermediate propagate
-        // step) are unreachable — free them eagerly (a long loop would
-        // otherwise hold O(rounds) corpus-sized cached relations).
-        labels.unpersist()
-        freed.foreach(_.unpersist())
-        labels = prop
-      }
-    } catch {
-      case e: Throwable => labels.unpersist(); throw e
-    } finally { edges.unpersist(); pr.unpersist() }
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+        // The propagate step is checkpointed before the shortcut
+        // self-join: the agg materializes once (not twice via exchange
+        // reuse), and the join sees a flat LogicalRDD (a self-joined
+        // Union trips Catalyst's constraint rewrite).
+        if (round.index <= 2) stepped
+        else shortcut(round.ckpt(shortcut(round.ckpt(stepped))))
+      }(_.filter(col("label") =!= col("old")).count())
+        .select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    } finally Seq(labels0, edges, pr).foreach(release)
   }
 
   /** The LSH BAND INDEX of a corpus — the carried artifact of

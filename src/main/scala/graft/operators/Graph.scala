@@ -46,21 +46,13 @@ object Graph {
     * dangling share floors away ≤ |V|−1 micro-units per iteration — a
     * deterministic quantization, not an engine divergence).
     *
-    * `checkpoint = false` keeps the full lineage (plan inspection, tiny
-    * graphs); leave it on for real runs so iteration N never re-executes
-    * iteration 1. With checkpointing on, every intermediate rank
-    * relation truncates its lineage with a LAZY stats-dropped
-    * checkpoint: no per-iteration job is launched (blocks materialize
-    * exactly once, on first downstream use, shared by the contribution
-    * and dangling readers), and the plan stays CONSTANT-sized per
-    * iteration — the previous cadence-unrolled form doubled the logical
-    * plan every iteration (ranks is referenced twice: contribution +
-    * dangling mass), leaving a 3-iteration run with 78 Exchanges / 28
-    * SortMergeJoins for AQE to re-dedupe on every execution.
+    * Every iteration but the last is a [[Fixpoint]] round, so the plan
+    * stays CONSTANT-sized (unrolled, it doubles every iteration: ranks is
+    * read twice, by contribution and dangling mass). The last stays a
+    * lazy plan: the caller's query is its only reader.
     */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, dampingPct: Int = 85,
-      checkpoint: Boolean = true): DataFrame = {
+      iterations: Int, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "pagerank needs at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "damping is a percent")
     // Materialize the edge list ONCE, PRE-PARTITIONED on src — every
@@ -72,7 +64,7 @@ object Graph {
     // so iterations reuse the layout.
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = if (checkpoint) e0.repartition(col("src")).localCheckpoint() else e0 // stats-ok: loop INPUT materialized once, not round state
+    val e = e0.repartition(col("src")).localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     // Node universe WITH out-degree fused in: the rank relation carries
     // `deg` through every iteration, so the contribution step needs no
     // per-iteration degree join. Pre-partitioned on id: the per-
@@ -83,14 +75,12 @@ object Graph {
       .union(e.select(col("dst").as("id"))).distinct()
       .join(deg, col("id") === col("src"), "left")
       .select(col("id"), col("deg"))
-    val nodesDeg = if (checkpoint) nodesDeg0.repartition(col("id")).localCheckpoint() else nodesDeg0 // stats-ok: loop INPUT materialized once, not round state
+    val nodesDeg = nodesDeg0.repartition(col("id")).localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     // |V| as a driver-side scalar for the integer dangling share (one
     // count job over the node set — metadata, not data).
     val nNodes = nodesDeg.count()
     val base = 1000000L * (100 - dampingPct) / 100
-    var ranks = nodesDeg.select(col("id"), col("deg"),
-      lit(1000000L).as("rank_micro"))
-    for (it <- 1 to iterations) {
+    def settle(ranks: DataFrame): DataFrame = {
       val contrib = ranks.filter(col("deg").isNotNull)
         .select(col("id").as("cid"), expr("rank_micro div deg").as("c"))
       // shuffle_hash: build the |V|-sized contribution side, stream the
@@ -103,16 +93,19 @@ object Graph {
       val dangling = ranks.filter(col("deg").isNull)
         .agg(coalesce(sum(col("rank_micro")), lit(0L)).as("dm"))
         .select(expr(s"dm div ${nNodes}L").as("dangling_share"))
-      ranks = nodesDeg.join(inSums.hint("shuffle_hash"),
+      nodesDeg.join(inSums.hint("shuffle_hash"),
           col("id") === col("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"), col("deg"),
           (lit(base) + expr(s"($dampingPct * (coalesce(in_sum, 0L)" +
             s" + dangling_share)) div 100")).as("rank_micro"))
-      if (checkpoint && it < iterations)
-        ranks = GraftShim.ckptNoStats(ranks)
     }
-    ranks.select(col("id").as("node_id"), col("rank_micro"))
+    val init = nodesDeg.select(col("id"), col("deg"),
+      lit(1000000L).as("rank_micro"))
+    val (prev, ranks) =
+      Fixpoint.rounds(init, iterations - 1)((_, r) => settle(r))
+    if (prev ne init) GraftShim.release(prev)
+    settle(ranks).select(col("id").as("node_id"), col("rank_micro"))
   }
 
   // ---- q159: PageRank centrality of the customer–supplier graph ---------------
@@ -385,27 +378,27 @@ object Graph {
     * dst so the per-iteration join is exchange-free on the big side.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, checkpoint: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1, "labelPropagation needs at least one iteration")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val e = if (checkpoint) e0.localCheckpoint() else e0 // stats-ok: loop INPUT materialized once, not round state
-    var labels = e.select(col("src").as("id"))
+    val e = e0.localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val init = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .select(col("id"), col("id").as("lbl"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("cnt").desc, col("lbl"))
-    for (it <- 1 to iterations) {
+    val (prev, labels) = Fixpoint.rounds(init, iterations) { (_, labels) =>
       val adopted = e.join(labels, col("dst") === col("id"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("src").as("id"), col("lbl").as("adopt"))
       // Out-degree-0 nodes adopt nothing and keep their label.
-      labels = labels.join(adopted, Seq("id"), "left")
+      labels.join(adopted, Seq("id"), "left")
         .select(col("id"), coalesce(col("adopt"), col("lbl")).as("lbl"))
-      if (checkpoint && it < iterations) labels = GraftShim.ckptNoStats(labels, eager = true)
     }
+    if (prev ne init) GraftShim.release(prev)
     labels.select(col("id").as("node_id"), col("lbl").as("label"))
   }
 
@@ -619,17 +612,17 @@ object Graph {
     */
   def personalizedPagerank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, iterations: Int,
-      dampingPct: Int = 85, checkpoint: Boolean = true): DataFrame = {
+      dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "needs at least one iteration")
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-    val e = if (checkpoint) e0.localCheckpoint() else e0 // stats-ok: loop INPUT materialized once, not round state
-    val deg0 = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val deg = if (checkpoint) deg0.localCheckpoint() else deg0 // stats-ok: loop INPUT materialized once, not round state
-    val nodes0 = e.select(col("src").as("id"))
+    val e = e0.localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val nodes = if (checkpoint) nodes0.localCheckpoint() else nodes0 // stats-ok: loop INPUT materialized once, not round state
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     val seedSet = seeds
       .select(col(seeds.columns.head).cast("long").as("id")).distinct()
     val nNodes = nodes.count()
@@ -642,21 +635,21 @@ object Graph {
         Seq("id"), "left")
       .select(col("id"),
         when(col("is_seed"), lit(seedBase)).otherwise(lit(0L)).as("base"))
-    val basedCk = if (checkpoint) based.localCheckpoint() else based // stats-ok: loop INPUT materialized once, not round state
-    var ranks = basedCk.select(col("id"), col("base").as("rank_micro"))
-    for (_ <- 1 to iterations) {
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val init = based.select(col("id"), col("base").as("rank_micro"))
+    val (prev, ranks) = Fixpoint.rounds(init, iterations) { (_, ranks) =>
       val withDeg = ranks.join(deg, col("id") === col("src"), "left")
       val contrib = withDeg.filter(col("deg").isNotNull)
         .select(col("id").as("cid"), expr("rank_micro div deg").as("c"))
       val inSums = e.join(contrib, col("src") === col("cid"))
         .groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-      ranks = basedCk.join(inSums, col("id") === col("dst"), "left")
+      based.join(inSums, col("id") === col("dst"), "left")
         .select(col("id"),
           (col("base") + expr(
             s"($dampingPct * coalesce(in_sum, 0L)) div 100"))
             .as("rank_micro"))
-      if (checkpoint) ranks = GraftShim.ckptNoStats(ranks, eager = true)
     }
+    if (prev ne init) GraftShim.release(prev)
     ranks.select(col("id").as("node_id"), col("rank_micro"))
   }
 
@@ -776,29 +769,24 @@ object Graph {
     *
     * Scale design: each round is one equi-join of the current distance
     * relation against the edge list plus a grouped min with map-side
-    * partials; lineage checkpointed per round, no driver action in the
-    * loop. Cost per round is |reached|·avg-degree — frontier-bounded on
-    * sparse projections.
+    * partials, run as a [[Fixpoint]] round. Cost per round is
+    * |reached|·avg-degree — frontier-bounded on sparse projections.
     */
   def hopDistances(seeds: DataFrame, edges: DataFrame, srcCol: String,
-      dstCol: String, rounds: Int, checkpoint: Boolean = true): DataFrame = {
+      dstCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
-    val sym0 = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-    val sym = if (checkpoint) sym0.localCheckpoint() else sym0 // stats-ok: loop INPUT materialized once, not round state
-    var dist = seeds
+    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val seedDist = GraftShim.ckptNoStats(seeds
       .select(col(seeds.columns.head).cast("long").as("id")).distinct()
-      .withColumn("dist", lit(0L))
-    if (checkpoint) dist = GraftShim.ckptNoStats(dist, eager = true)
-    var prev = dist
-    for (_ <- 1 to rounds) {
-      prev = dist
+      .withColumn("dist", lit(0L)), eager = true)
+    val (prev, dist) = Fixpoint.rounds(seedDist, rounds) { (_, dist) =>
       val prop = dist.join(sym, col("id") === col("a"))
         .select(col("b").as("id"), (col("dist") + 1).as("dist"))
-      dist = dist.union(prop).groupBy(col("id"))
+      dist.union(prop).groupBy(col("id"))
         .agg(min(col("dist")).as("dist"))
-      if (checkpoint) dist = GraftShim.ckptNoStats(dist, eager = true)
     }
     val conv = prev
       .agg(count(lit(1)).as("c1"),
@@ -1093,24 +1081,21 @@ object Graph {
     * exact BIGINTs — deterministic on any engine or partitioning.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int, checkpoint: Boolean = true): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and at least one round")
     val und = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct()
-    var e = if (checkpoint) und.localCheckpoint() else und // stats-ok: loop INPUT materialized once, not round state
-    var ePrev = e
-    for (_ <- 1 to rounds) {
-      ePrev = e
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val (ePrev, e) = Fixpoint.rounds(und, rounds) { (_, e) =>
       val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("n"))
-      e = e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
+      e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      if (checkpoint) e = GraftShim.ckptNoStats(e, eager = true)
     }
     // Fixpoint certificate: peeling is monotone, so "the final round
     // removed nothing" (edge counts equal) iff the k-core fixpoint was
@@ -1177,11 +1162,10 @@ object Graph {
     * Scale design: each round is one wedge equi-join on the CURRENT
     * (shrinking, thresholded) edge list — cost Σ deg², bounded when the
     * input is a capped projection like the co-sale graph — followed by a
-    * grouped count with map-side partials; lineage checkpointed per
-    * round, no driver-side action inside the loop.
+    * grouped count with map-side partials, run as a [[Fixpoint]] round.
     */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int, checkpoint: Boolean = true): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "need k >= 3 and at least one round")
     def support(e: DataFrame): DataFrame = {
       val sym = e.select(col("u").as("a"), col("v").as("b"))
@@ -1197,12 +1181,9 @@ object Graph {
       .select(least(col("x"), col("y")).as("u"),
         greatest(col("x"), col("y")).as("v"))
       .distinct()
-    var e = if (checkpoint) und.localCheckpoint() else und // stats-ok: loop INPUT materialized once, not round state
-    var ePrev = e
-    for (_ <- 1 to rounds) {
-      ePrev = e
-      e = support(e).filter(col("sup") >= k - 2).select(col("u"), col("v"))
-      if (checkpoint) e = GraftShim.ckptNoStats(e, eager = true)
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val (ePrev, e) = Fixpoint.rounds(und, rounds) { (_, e) =>
+      support(e).filter(col("sup") >= k - 2).select(col("u"), col("v"))
     }
     val conv = ePrev.agg(count(lit(1)).as("n_prev"))
       .crossJoin(e.agg(count(lit(1)).as("n_last")))
@@ -1274,17 +1255,15 @@ object Graph {
     * localCheckpoint'ed per round. All ids exact BIGINTs.
     */
   def connectedComponentsStars(edges: DataFrame, srcCol: String,
-      dstCol: String, rounds: Int, checkpoint: Boolean = true): DataFrame = {
+      dstCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one star round")
     val e0 = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
       .distinct()
-    var e = if (checkpoint) e0.localCheckpoint() else e0 // stats-ok: loop INPUT materialized once, not round state
-    var ePrev = e
-    for (_ <- 1 to rounds) {
-      ePrev = e
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val (ePrev, e) = Fixpoint.rounds(e0, rounds) { (_, e) =>
       // large-star: for each node u (over the symmetrized adjacency),
       // hang every neighbor w > u onto m = min(N(u) ∪ {u}).
       val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -1303,13 +1282,12 @@ object Graph {
         .distinct()
       val mins2 = ori.groupBy(col("u")).agg(min(col("v")).as("m"))
       val withM = ori.join(mins2, "u")
-      val small = withM.select(col("u").as("a"), col("m").as("b"))
+      withM.select(col("u").as("a"), col("m").as("b"))
         .union(withM.filter(col("v") =!= col("m"))
           .select(col("v").as("a"), col("m").as("b")))
         .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct()
-      e = if (checkpoint) GraftShim.ckptNoStats(small, eager = true) else small
     }
     // Set-equality fixpoint certificate (rewrites, not just deletions).
     val conv = ePrev.exceptAll(e).union(e.exceptAll(ePrev))
@@ -1361,24 +1339,24 @@ object Graph {
     * in src ∪ dst appears in the output).
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, checkpoint: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
-    val e0 = edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = if (checkpoint) e0.localCheckpoint() else e0 // stats-ok: loop INPUT materialized once, not round state
-    val nodes0 = e.select(col("src").as("id"))
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+    val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val nodes = if (checkpoint) nodes0.localCheckpoint() else nodes0 // stats-ok: loop INPUT materialized once, not round state
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     // (id, score) -> normalized (id, score·1e6 div max) with every node
-    // present (absent = 0).
+    // present (absent = 0), checkpointed: each half-step's relation.
     def normalized(raw: DataFrame): DataFrame = {
       val full = nodes.join(raw, Seq("id"), "left")
         .select(col("id"), coalesce(col("s"), lit(0L)).as("s"))
       val mx = full.agg(max(col("s")).as("mx"))
-      full.crossJoin(broadcast(mx))
+      GraftShim.ckptNoStats(full.crossJoin(broadcast(mx))
         .select(col("id"),
           when(col("mx") > 0, expr("s * 1000000L div mx"))
-            .otherwise(lit(0L)).as("s"))
+            .otherwise(lit(0L)).as("s")), eager = true)
     }
     var hub = nodes.select(col("id"), lit(1000000L).as("s"))
     var auth = hub
@@ -1386,11 +1364,9 @@ object Graph {
       auth = normalized(
         e.join(hub.withColumnRenamed("id", "hid"), col("src") === col("hid"))
           .groupBy(col("dst").as("id")).agg(sum(col("s")).as("s")))
-      if (checkpoint) auth = GraftShim.ckptNoStats(auth, eager = true)
       hub = normalized(
         e.join(auth.withColumnRenamed("id", "aid"), col("dst") === col("aid"))
           .groupBy(col("src").as("id")).agg(sum(col("s")).as("s")))
-      if (checkpoint) hub = GraftShim.ckptNoStats(hub, eager = true)
     }
     nodes
       .join(auth.select(col("id"), col("s").as("auth_micro")), Seq("id"))
@@ -1767,7 +1743,7 @@ object Graph {
         .distinct()
         .join(seen, Seq("src", "node"), "left_anti")
         .withColumn("d", lit(depth)))
-      if (nxt.count() == 0) { more = false; nxt.unpersist() }
+      if (nxt.count() == 0) { more = false; GraftShim.release(nxt) }
       else {
         // Raise only on a still-live frontier PAST the bound, so a graph
         // with eccentricity exactly maxDepth drains cleanly — matching

@@ -35,6 +35,17 @@ object GraftShim {
   def ckptNoStats(df: DataFrame, eager: Boolean = false): DataFrame =
     dropOriginStats(df.localCheckpoint(eager))
 
+  /** Free a checkpoint's blocks (blocking): unpersist the RDD under its
+    * `LogicalRDD`. `Dataset.unpersist` only drops `CacheManager` entries,
+    * so it leaves them. Any other plan does not own blocks: a no-op.
+    * (`RDD.unpersist` would warn that a local checkpoint is then lost.)
+    */
+  def release(df: DataFrame): Unit = analyzed(df) match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      df.sparkSession.sparkContext.unpersistRDD(lr.rdd.id, blocking = true)
+    case _ =>
+  }
+
   /** True when the DataFrame is already a materialized leaf (a
     * `localCheckpoint` result) — lets an operator that defensively
     * checkpoints a reused input skip the copy when the caller already

@@ -82,4 +82,46 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"LogicalRDD reconstruction outside GraftShim: ${offenders.map(_.getPath)}")
   }
+
+  test("no checkpoint is freed with Dataset.unpersist (a no-op on it)") {
+    // `Dataset.unpersist` only drops CacheManager entries; a checkpoint's
+    // blocks belong to the RDD under its LogicalRDD, which only
+    // `GraftShim.release` frees. A `<name>.unpersist(` call fails when
+    // the closest `val`/`var <name> =` above it in the same file binds an
+    // expression calling `localCheckpoint(` or `ckptNoStats(` — the
+    // binding line plus its more-indented continuation lines.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sweep must run from the repo root: $root")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Seq.empty
+    val binding = """\b(?:val|var)\s+(\w+)\s*(?::[^=]*)?=(?![=>])""".r
+    val unpersist = """\b(\w+)\.unpersist\(""".r
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    def isComment(l: String) =
+      l.trim.startsWith("*") || l.trim.startsWith("//")
+    val violations = walk(root).flatMap { f =>
+      val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+      // (line, name, binds a checkpoint) for every binding, in file order.
+      val bindings = lines.indices.filterNot(i => isComment(lines(i)))
+        .flatMap { i =>
+          binding.findFirstMatchIn(lines(i)).map { m =>
+            val rhs = lines(i).substring(m.end) +: lines.drop(i + 1)
+              .takeWhile(l => l.trim.nonEmpty && indent(l) > indent(lines(i)))
+            (i, m.group(1), rhs.exists(l =>
+              l.contains("localCheckpoint(") || l.contains("ckptNoStats(")))
+          }
+        }
+      lines.indices.filterNot(i => isComment(lines(i))).flatMap { i =>
+        unpersist.findAllMatchIn(lines(i)).map(_.group(1)).filter { n =>
+          bindings.filter(b => b._1 < i && b._2 == n).lastOption
+            .exists(_._3)
+        }.map(_ => s"${f.getPath}:${i + 1}")
+      }
+    }
+    assert(violations.isEmpty,
+      s"Dataset.unpersist on a checkpoint frees nothing (use " +
+        s"GraftShim.release):\n  ${violations.mkString("\n  ")}")
+  }
 }

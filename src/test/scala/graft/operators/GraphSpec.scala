@@ -156,7 +156,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank iteration aggregates contributions map-side (hash agg, no window)") {
-    val plan = Graph.pagerank(pathEdges, "src", "dst", 1, checkpoint = false)
+    val plan = Graph.pagerank(pathEdges, "src", "dst", 1)
       .queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("hashaggregate"),
       s"expected hash aggregation for the contribution sum:\n$plan")
@@ -267,11 +267,11 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank lineage stays constant-sized per iteration") {
-    // Every intermediate iteration truncates with a lazy stats-dropped
-    // checkpoint, so the FINAL plan holds only the last iteration's
-    // joins/aggregations no matter how many iterations ran — the
-    // previous cadence-unrolled form doubled the plan per iteration
-    // (ranks is referenced twice: contribution + dangling mass).
+    // Every iteration but the last is a Fixpoint round (an eager
+    // stats-dropped checkpoint), so the FINAL plan holds only the last
+    // iteration's joins/aggregations no matter how many iterations ran —
+    // an unrolled form doubles the plan per iteration (ranks is
+    // referenced twice: contribution + dangling mass).
     def nAgg(p: String) = "HashAggregate".r.findAllIn(p).size
     val one = Graph.pagerank(pathEdges, "src", "dst", 1)
       .queryExecution.executedPlan.toString
@@ -281,9 +281,6 @@ class GraphSpec extends SparkSpec {
       s"expected the checkpointed iteration-2 ranks:\n$three")
     assert(nAgg(three) === nAgg(one),
       s"per-iteration truncation must bound lineage: ${nAgg(three)} vs ${nAgg(one)}")
-    // And the per-iteration truncation launches no eager jobs: the
-    // checkpoint is lazy, so building a 3-iteration plan materializes
-    // only the two pinned inputs (edges + node-degree relation).
   }
 
   test("localClustering credits every triangle corner; d<2 is null") {

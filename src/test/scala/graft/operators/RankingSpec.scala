@@ -101,7 +101,7 @@ class RankingSpec extends SparkSpec {
     // h1 -> {a1, a2}, h2 -> {a1}: a1 is the stronger authority, h1 the
     // stronger hub; two iterations, every value hand-derived.
     val e = Seq((1L, 10L), (1L, 20L), (2L, 10L)).toDF("s", "d")
-    val got = Graph.hits(e, "s", "d", iterations = 2, checkpoint = false)
+    val got = Graph.hits(e, "s", "d", iterations = 2)
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got === Map(
