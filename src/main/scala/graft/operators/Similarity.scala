@@ -1982,7 +1982,7 @@ object Similarity {
     val comps = base
       .select(col("g"), col("in_a"), posexplode(col("v")).as(Seq("pos", "x")))
       .select(col("g"), col("in_a"), col("pos"),
-        floor(col("x").cast("double") * lit(1e6)).cast("long").as("xm"))
+        micro(col("x")).as("xm"))
       .groupBy(col("g"), col("in_a"), col("pos"))
       .agg(sum(col("xm")).as("sm"), count(lit(1)).as("nc"))
       .select(col("g"), col("in_a"), col("pos"),
@@ -2106,7 +2106,7 @@ object Similarity {
     val comps = df.filter(trainPred)
       .select(col(labelCol).as("cl"), posexplode(col(vecCol)).as(Seq("pos", "x")))
       .groupBy(col("cl"), col("pos"))
-      .agg(sum(floor(col("x") * 1e6).cast("long")).as("sm"),
+      .agg(sum(micro(col("x"))).as("sm"),
         count(lit(1)).as("nc"))
       .select(col("cl"), col("pos"),
         expr("sign(sm) * (abs(sm) div nc)").cast("long").as("m"))
@@ -2114,7 +2114,7 @@ object Similarity {
       .select(col(idCol).as("vid"), col(labelCol).as("true_label"),
         posexplode(col(vecCol)).as(Seq("pos", "x")))
       .select(col("vid"), col("true_label"), col("pos"),
-        floor(col("x") * 1e6).cast("long").as("xm"))
+        micro(col("x")).as("xm"))
     eval.join(broadcast(comps), Seq("pos"))
       .groupBy(col("vid"), col("true_label"), col("cl"))
       .agg(sum(col("xm") * col("m")).as("dot"),
@@ -3390,33 +3390,51 @@ object Similarity {
       .unionByName(affState)
   }
 
-  /** Grid-bucketed DBSCAN over a 2-D point set — the density-based
-    * member of the clustering family beside [[kmeansFit]] (centroid),
-    * [[Dedup.dedupClusters]] (transitive near-dup) and [[lofOutliers]]
-    * (density OUTLIERS; DBSCAN's noise set is the cluster-shaped
-    * complement of the same idea). Exact DBSCAN semantics: a point with
-    * >= minPts neighbors within eps (count includes itself) is CORE;
-    * clusters are the connected components of the core-core eps-graph;
-    * a non-core point with a core neighbor is a BORDER of its minimum
-    * core neighbor's cluster (deterministic tie-break); everything else
-    * is NOISE.
-    *
-    * Scale design — the eps-join never goes all-pairs: coordinates are
-    * micro-quantized and bucketed into eps-sized grid cells, one side
-    * explodes to the HALF-PLANE 5 of its 9 neighbor cells (dist <= eps
-    * forces cell deltas within +-1; pair symmetry d(a,b) = d(b,a) makes
-    * the other 4 offsets redundant — see [[gridEpsPairs]]), and the
-    * equi-join on the cell key finds EXACTLY the candidate pairs, each
-    * unordered pair once. Costs one 5x explode and one hash shuffle on
-    * cell keys; per-cell work is bounded by local density, the standard
-    * spatial-join contract. Components close via the pointer-doubled
-    * [[Dedup.dedupClusters]] fixpoint, so chain-shaped clusters converge
-    * in O(log diameter) rounds.
-    *
-    * Returns one row per cluster (cluster_id = min member id, n_points,
-    * n_core, n_border) plus a cluster_id = -1 noise row, ordered by
-    * n_points DESC. Ids must be >= 0.
+  /** Floor division a div b: rounds toward -inf where SQL `div`
+    * truncates, so negative coordinates get the right cell or midpoint.
     */
+  private def fdiv(a: Column, b: Column): Column =
+    (call_function("div", a, b) +
+      when((a % b) < 0, -1L).otherwise(0L)).cast("long")
+
+  /** A coordinate or vector component in exact micro units,
+    * floor(c·1e6) as a long.
+    */
+  private def micro(c: Column): Column =
+    floor(c.cast("double") * 1e6).cast("long")
+
+  /** Adds the eps-sized grid cell (cx, cy) of micro points (x, y). */
+  private def cells(df: DataFrame, e: Column): DataFrame = df
+    .withColumn("cx", fdiv(col("x"), e)).withColumn("cy", fdiv(col("y"), e))
+
+  /** Grid points (id, x, y, cx, cy) of a 2-D point table. */
+  private def gridPoints(points: DataFrame, idCol: String, xCol: Column,
+      yCol: Column, e: Column): DataFrame =
+    cells(points.select(col(idCol).cast("long").as("id"),
+      micro(xCol).as("x"), micro(yCol).as("y")), e)
+
+  /** The eps-neighbors (aid, bid), aid != bid, of the grid points `small`
+    * among the grid points `among`: `small` explodes to its 3×3 cell
+    * neighborhood, so each qualifying directed pair is found once. The
+    * probe of the increment and delete folds, whose probe side is small;
+    * the self-relation of a whole point set is [[gridEpsPairs]].
+    */
+  private def gridPairs(small: DataFrame, among: DataFrame,
+      e: Column): DataFrame = small
+    .select(col("id").as("aid"), col("x").as("ax"), col("y").as("ay"),
+      col("cx").as("pcx"), col("cy").as("pcy"))
+    .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
+    .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
+    .select(col("aid"), col("ax"), col("ay"),
+      (col("pcx") + col("dx")).as("cx"),
+      (col("pcy") + col("dy")).as("cy"))
+    .join(among.select(col("id").as("bid"), col("x").as("bx"),
+      col("y").as("by"), col("cx"), col("cy")), Seq("cx", "cy"))
+    .filter(col("aid") =!= col("bid") &&
+      (col("ax") - col("bx")) * (col("ax") - col("bx")) +
+        (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e)
+    .select(col("aid"), col("bid"))
+
   /** The symmetric eps-neighbor relation (aid, bid) over quantized grid
     * points (id, x, y, cx, cy) via a HALF-PLANE 5-of-9 cell probe: the
     * candidate side explodes to the home cell plus the four
@@ -3453,66 +3471,40 @@ object Similarity {
     half.unionAll(half.select(col("bid").as("aid"), col("aid").as("bid")))
   }
 
+  /** Grid-bucketed DBSCAN over a 2-D point set — the density-based
+    * member of the clustering family beside [[kmeansFit]] (centroid),
+    * [[Dedup.dedupClusters]] (transitive near-dup) and [[lofOutliers]]
+    * (density OUTLIERS; DBSCAN's noise set is the cluster-shaped
+    * complement of the same idea). Exact DBSCAN semantics: a point with
+    * >= minPts neighbors within eps (count includes itself) is CORE;
+    * clusters are the connected components of the core-core eps-graph;
+    * a non-core point with a core neighbor is a BORDER of its minimum
+    * core neighbor's cluster (deterministic tie-break); everything else
+    * is NOISE.
+    *
+    * Scale design — the eps-join never goes all-pairs: coordinates are
+    * micro-quantized and bucketed into eps-sized grid cells, one side
+    * explodes to the HALF-PLANE 5 of its 9 neighbor cells (dist <= eps
+    * forces cell deltas within +-1; pair symmetry d(a,b) = d(b,a) makes
+    * the other 4 offsets redundant — see [[gridEpsPairs]]), and the
+    * equi-join on the cell key finds EXACTLY the candidate pairs, each
+    * unordered pair once. Costs one 5x explode and one hash shuffle on
+    * cell keys; per-cell work is bounded by local density, the standard
+    * spatial-join contract. Components close via the pointer-doubled
+    * [[Dedup.dedupClusters]] fixpoint, so chain-shaped clusters converge
+    * in O(log diameter) rounds.
+    *
+    * Returns one row per cluster (cluster_id = min member id, n_points,
+    * n_core, n_border) plus a cluster_id = -1 noise row, ordered by
+    * n_points DESC, then cluster_id. The census is [[dbscanCensus]] of
+    * [[dbscanState]]: the batch answer is the incremental state built
+    * from empty, so batch and incremental DBSCAN share one build. Ids
+    * must be >= 0 (guarded: a core's label is its component's min id,
+    * which must not collide with the -1 noise row).
+    */
   def dbscanGrid(points: DataFrame, idCol: String, xCol: Column,
-      yCol: Column, epsMicro: Long, minPts: Int): DataFrame = {
-    require(epsMicro > 0 && minPts >= 1, "need epsMicro > 0, minPts >= 1")
-    val e = lit(epsMicro)
-    def fdiv(a: Column): Column =
-      (call_function("div", a, e) +
-        when((a % e) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = points.select(col(idCol).cast("long").as("id"),
-        floor(xCol.cast("double") * 1e6).cast("long").as("x"),
-        floor(yCol.cast("double") * 1e6).cast("long").as("y"))
-      .withColumn("cx", fdiv(col("x")))
-      .withColumn("cy", fdiv(col("y")))
-      .localCheckpoint(false) // stats-ok: one-shot quantized points feeding the grid probe
-    val nbr = gridEpsPairs(pts, e)
-    // All census-assembly joins hash-build their node-sized side
-    // (core / label tables ≤ |P| rows): the checkpointed leaves carry
-    // no stats, so the default choice would sort the pair-sized stream
-    // at every join (guide §3.1).
-    val core = ckptNoStats(pts.join(
-        nbr.groupBy("aid").agg(count(lit(1)).as("nc"))
-          .hint("shuffle_hash"),
-        col("id") === col("aid"), "left")
-      .filter(coalesce(col("nc"), lit(0L)) + 1 >= minPts)
-      .select(col("id")))
-    // Core-core edges + self-pairs (isolated cores form singleton
-    // clusters; dedupClusters only labels nodes that appear in a pair).
-    val ce = nbr
-      .join(core.withColumnRenamed("id", "aid").hint("shuffle_hash"),
-        Seq("aid"))
-      .join(core.withColumnRenamed("id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
-      .select(col("aid"), col("bid"))
-      .union(core.select(col("id").as("aid"), col("id").as("bid")))
-    val labs = Dedup.dedupClusters(ce, "aid", "bid")
-    val borders = nbr
-      .join(core.withColumnRenamed("id", "aid").hint("shuffle_hash"),
-        Seq("aid"), "left_anti")
-      .join(core.withColumnRenamed("id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
-      .join(labs.withColumnRenamed("doc_id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
-      .groupBy("aid").agg(min("cluster_id").as("cluster_id"))
-    val clusters = labs.groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_core"))
-      .join(borders.groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_border")), Seq("cluster_id"), "left")
-      .select(col("cluster_id"),
-        (col("n_core") + coalesce(col("n_border"), lit(0L))).as("n_points"),
-        col("n_core"), coalesce(col("n_border"), lit(0L)).as("n_border"))
-    val noise = pts
-      .join(core.withColumnRenamed("id", "nid").hint("shuffle_hash"),
-        col("id") === col("nid"), "left_anti")
-      .join(borders.withColumnRenamed("aid", "nid").hint("shuffle_hash"),
-        col("id") === col("nid"), "left_anti")
-      .agg(count(lit(1)).as("n_points"))
-      .select(lit(-1L).as("cluster_id"), col("n_points"),
-        lit(0L).as("n_core"), lit(0L).as("n_border"))
-    clusters.unionAll(noise)
-      .orderBy(col("n_points").desc, col("cluster_id"))
-  }
+      yCol: Column, epsMicro: Long, minPts: Int): DataFrame =
+    dbscanCensus(dbscanState(points, idCol, xCol, yCol, epsMicro, minPts))
 
   /** Per-point DBSCAN STATE for incremental maintenance — the carried
     * artifact between corpus refreshes: one row per point with its
@@ -3530,25 +3522,18 @@ object Similarity {
       yCol: Column, epsMicro: Long, minPts: Int): DataFrame = {
     require(epsMicro > 0 && minPts >= 1, "need epsMicro > 0, minPts >= 1")
     val e = lit(epsMicro)
-    def fdiv(a: Column): Column =
-      (call_function("div", a, e) +
-        when((a % e) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = ckptNoStats(points.select(col(idCol).cast("long").as("id"),
-        floor(xCol.cast("double") * 1e6).cast("long").as("x"),
-        floor(yCol.cast("double") * 1e6).cast("long").as("y"))
-      .withColumn("cx", fdiv(col("x")))
-      .withColumn("cy", fdiv(col("y"))))
+    val pts = ckptNoStats(gridPoints(points, idCol, xCol, yCol, e))
     // Labels share the id domain (label = min core id of the component),
     // so a negative id could collide with the census's -1 noise sentinel.
-    // One driver action, not two: the old `agg.head || agg.head` form ran
-    // the aggregation job twice.
     val minId = pts.agg(min(col("id"))).head
     require(minId.isNullAt(0) || minId.getLong(0) >= 0L,
       "dbscanState: point ids must be >= 0 (labels share the id domain; " +
         "-1 is the census noise sentinel)")
     val nbr = gridEpsPairs(pts, e)
-    // Node-sized sides hash-build, pair-sized streams never sort — the
-    // same census-assembly join discipline as [[dbscanGrid]].
+    // Every assembly join hash-builds its node-sized side (count, core
+    // and label tables ≤ |P| rows): the checkpointed leaves carry no
+    // stats, so the default choice would sort the pair-sized stream at
+    // every join (guide §3.1).
     val base = ckptNoStats(pts.join(
         nbr.groupBy("aid").agg(count(lit(1)).as("nc"))
           .hint("shuffle_hash"),
@@ -3586,7 +3571,7 @@ object Similarity {
   /** The [[dbscanGrid]] census derived from [[dbscanState]] alone — no
     * data access: clusters from core labels, borders from the min of
     * their adjacent-cluster set, noise = the unlabeled remainder.
-    * dbscanCensus(dbscanState(p)) ≡ dbscanGrid(p) (spec-pinned).
+    * dbscanGrid(p) is dbscanCensus(dbscanState(p)).
     */
   def dbscanCensus(state: DataFrame): DataFrame = {
     val clusters = state.filter(col("cluster").isNotNull)
@@ -3639,43 +3624,19 @@ object Similarity {
       minPts: Int): DataFrame = {
     require(epsMicro > 0 && minPts >= 1, "need epsMicro > 0, minPts >= 1")
     val e = lit(epsMicro)
-    def fdiv(a: Column): Column =
-      (call_function("div", a, e) +
-        when((a % e) < 0, -1L).otherwise(0L)).cast("long")
-    def cells(df: DataFrame): DataFrame = df
-      .withColumn("cx", fdiv(col("x"))).withColumn("cy", fdiv(col("y")))
     val st = ckptNoStats(state)
-    val dpts = ckptNoStats(cells(delta.select(col(idCol).cast("long").as("id"),
-        floor(xCol.cast("double") * 1e6).cast("long").as("x"),
-        floor(yCol.cast("double") * 1e6).cast("long").as("y"))))
+    val dpts = ckptNoStats(gridPoints(delta, idCol, xCol, yCol, e))
     require(dpts.join(st.select(col("id")), Seq("id")).isEmpty,
       "dbscanGridIncrement is insert-only: delta ids must be fresh")
     // Negative ids promoted to core would become cluster labels colliding
     // with dbscanCensus's -1 noise sentinel — reject them at the door.
-    val dMinId = dpts.agg(min(col("id"))).head // one action, not two
+    val dMinId = dpts.agg(min(col("id"))).head
     require(dMinId.isNullAt(0) || dMinId.getLong(0) >= 0L,
       "dbscanGridIncrement: delta ids must be >= 0 (labels share the id " +
         "domain; -1 is the census noise sentinel)")
-    val allPts = ckptNoStats(cells(st.select(col("id"), col("x"), col("y")))
-      .unionByName(dpts.select(col("id"), col("x"), col("y"),
-        col("cx"), col("cy"))))
-    // One grid probe of a (small) point set against every point's cell:
-    // the probe side explodes 3×3, each qualifying pair is found once.
-    def gridPairs(small: DataFrame): DataFrame = small
-      .select(col("id").as("aid"), col("x").as("ax"), col("y").as("ay"),
-        col("cx").as("pcx"), col("cy").as("pcy"))
-      .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .select(col("aid"), col("ax"), col("ay"),
-        (col("pcx") + col("dx")).as("cx"),
-        (col("pcy") + col("dy")).as("cy"))
-      .join(allPts.select(col("id").as("bid"), col("x").as("bx"),
-        col("y").as("by"), col("cx"), col("cy")), Seq("cx", "cy"))
-      .filter(col("aid") =!= col("bid") &&
-        (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-          (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e)
-      .select(col("aid"), col("bid"))
-    val p1 = ckptNoStats(gridPairs(dpts))
+    val allPts = ckptNoStats(
+      cells(st.select(col("id"), col("x"), col("y")), e).unionByName(dpts))
+    val p1 = ckptNoStats(gridPairs(dpts, allPts, e))
     // Updated neighbor counts: base rows gain their Δ-neighbor count
     // (p1 rows whose bid is NOT a Δ id), Δ rows count all their pairs.
     val addB = p1.join(dpts.select(col("id").as("bid")), Seq("bid"),
@@ -3693,7 +3654,7 @@ object Similarity {
       .select(col("id"), col("x"), col("y")))
     val coreDelta = ckptNoStats(deltaUp.filter(col("ncnt2") + 1 >= minPts)
       .select(col("id")))
-    val p2 = ckptNoStats(gridPairs(cells(newCoreBase)))
+    val p2 = ckptNoStats(gridPairs(cells(newCoreBase, e), allPts, e))
     // Representative per core-after point: old cores speak as their
     // label, new cores as themselves — the label graph's node set.
     val reps = ckptNoStats(st.filter(col("cluster").isNotNull)
@@ -3800,25 +3761,6 @@ object Similarity {
       idCol: String, epsMicro: Long, minPts: Int): DataFrame = {
     require(epsMicro > 0 && minPts >= 1, "need epsMicro > 0, minPts >= 1")
     val e = lit(epsMicro)
-    def fdiv(a: Column): Column =
-      (call_function("div", a, e) +
-        when((a % e) < 0, -1L).otherwise(0L)).cast("long")
-    def cells(df: DataFrame): DataFrame = df
-      .withColumn("cx", fdiv(col("x"))).withColumn("cy", fdiv(col("y")))
-    def gridPairs(small: DataFrame, among: DataFrame): DataFrame = small
-      .select(col("id").as("aid"), col("x").as("ax"), col("y").as("ay"),
-        col("cx").as("pcx"), col("cy").as("pcy"))
-      .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .select(col("aid"), col("ax"), col("ay"),
-        (col("pcx") + col("dx")).as("cx"),
-        (col("pcy") + col("dy")).as("cy"))
-      .join(among.select(col("id").as("bid"), col("x").as("bx"),
-        col("y").as("by"), col("cx"), col("cy")), Seq("cx", "cy"))
-      .filter(col("aid") =!= col("bid") &&
-        (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-          (col("ay") - col("by")) * (col("ay") - col("by")) <= e * e)
-      .select(col("aid"), col("bid"))
     val st = ckptNoStats(state)
     val del = ckptNoStats(deleteIds.select(col(idCol).cast("long").as("id"))
       .distinct())
@@ -3827,10 +3769,11 @@ object Similarity {
     if (del.isEmpty) return st
     val rest = ckptNoStats(st.join(del, Seq("id"), "left_anti"))
     val dpts = ckptNoStats(cells(st.join(del, Seq("id"), "left_semi")
-      .select(col("id"), col("x"), col("y"))))
-    val restPts = ckptNoStats(cells(rest.select(col("id"), col("x"), col("y"))))
+      .select(col("id"), col("x"), col("y")), e))
+    val restPts =
+      ckptNoStats(cells(rest.select(col("id"), col("x"), col("y")), e))
     // (a) neighbor-count drops: deleted × remaining pairs, one grid probe.
-    val p1 = ckptNoStats(gridPairs(dpts, restPts))
+    val p1 = ckptNoStats(gridPairs(dpts, restPts, e))
     val sub = p1.groupBy(col("bid").as("id")).agg(count(lit(1)).as("drop"))
     val up = ckptNoStats(rest.join(sub.hint("shuffle_hash"), Seq("id"), "left")
       .withColumn("ncnt2", col("ncnt") - coalesce(col("drop"), lit(0L)))
@@ -3851,8 +3794,8 @@ object Similarity {
       if (members.isEmpty)
         members.select(col("id"), col("id").as("newlab"))
       else {
-        val mc = ckptNoStats(cells(members))
-        val p2 = gridPairs(mc, mc)
+        val mc = ckptNoStats(cells(members, e))
+        val p2 = gridPairs(mc, mc, e)
           .unionByName(members.select(col("id").as("aid"),
             col("id").as("bid")))
         Dedup.dedupClusters(p2, "aid", "bid")
@@ -3880,9 +3823,9 @@ object Similarity {
     val rebuildIds = ckptNoStats(touchedBorders
       .unionByName(demoted.select(col("id"))).distinct())
     val rebuildPts = cells(up.join(rebuildIds, Seq("id"), "left_semi")
-      .select(col("id"), col("x"), col("y")))
-    val coreCells = cells(coreLabs.select(col("id"), col("x"), col("y")))
-    val newB = ckptNoStats(gridPairs(rebuildPts, coreCells)
+      .select(col("id"), col("x"), col("y")), e)
+    val coreCells = cells(coreLabs.select(col("id"), col("x"), col("y")), e)
+    val newB = ckptNoStats(gridPairs(rebuildPts, coreCells, e)
       .join(coreLabs.select(col("id").as("bid"), col("clab"))
         .hint("shuffle_hash"), Seq("bid"))
       .groupBy(col("aid").as("id"))
@@ -3931,19 +3874,35 @@ object Similarity {
       depth: Int, topN: Int): DataFrame = {
     require(dims.nonEmpty && depth >= 1 && depth <= 20 && topN >= 1,
       "hstOutliers needs dims, 1 <= depth <= 20, topN >= 1")
+    val asg = hstLeaves(points, idCol, dims, depth)()
+    val mass = asg.groupBy("tree", "node").agg(count(lit(1)).as("m"))
+    asg.join(mass, Seq("tree", "node"))
+      .groupBy("id").agg(sum("m").as("mass_sum"))
+      .orderBy(col("mass_sum"), col("id"))
+      .limit(topN)
+      .select(col("id").as(idCol), col("mass_sum"))
+  }
+
+  /** The half-space-tree level loop of [[hstOutliers]] and [[hstFit]]:
+    * one (id, tree, node) row per point and tree, starting at node 0;
+    * level l splits each (tree, node) at the floor midpoint of its
+    * min/max along dimension (l+tree) mod k and sends the point to
+    * 2·node+side. `onSplits(level, table)` sees each level's
+    * (tree, node, mid) table before its broadcast; a table it persists
+    * is unpersisted once the level's assignment is checkpointed.
+    * Returns the leaf assignment after `depth` levels.
+    */
+  private def hstLeaves(points: DataFrame, idCol: String, dims: Seq[Column],
+      depth: Int)(
+      onSplits: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
     val k = dims.size
-    def fdC(a: Column, b: Column): Column =
-      (call_function("div", a, b) +
-        when((a % b) < 0, -1L).otherwise(0L)).cast("long")
     val pts = ckptNoStats(points.select(
       (col(idCol).cast("long").as("id") +:
-        dims.zipWithIndex.map { case (c, j) =>
-          floor(c.cast("double") * 1e6).cast("long").as(s"d$j") }): _*))
+        dims.zipWithIndex.map { case (c, j) => micro(c).as(s"d$j") }): _*))
     var asg = ckptNoStats(pts.select(col("id"),
       explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
       .withColumn("node", lit(0L)))
     for (level <- 0 until depth) {
-      // The split value for (tree, level) is dimension (level+tree) % k.
       val v = (0 until k).map { t =>
         (col("tree") === t.toLong, col(s"d${(level + t) % k}"))
       }.foldRight(lit(null).cast("long"): Column) { case ((p, c), rest) =>
@@ -3951,18 +3910,15 @@ object Similarity {
       }
       val joined = asg.join(pts, Seq("id")).withColumn("v", v)
       val splits = joined.groupBy("tree", "node")
-        .agg(fdC(min(col("v")) + max(col("v")), lit(2L)).as("mid"))
+        .agg(fdiv(min(col("v")) + max(col("v")), lit(2L)).as("mid"))
+      onSplits(level, splits)
       asg = ckptNoStats(joined.join(broadcast(splits), Seq("tree", "node"))
         .select(col("id"), col("tree"),
           (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
             .as("node")))
+      splits.unpersist()
     }
-    val mass = asg.groupBy("tree", "node").agg(count(lit(1)).as("m"))
-    asg.join(mass, Seq("tree", "node"))
-      .groupBy("id").agg(sum("m").as("mass_sum"))
-      .orderBy(col("mass_sum"), col("id"))
-      .limit(topN)
-      .select(col("id").as(idCol), col("mass_sum"))
+    asg
   }
 
   /** Batch-trained half-space-tree model: the per-(tree, level) midpoint
@@ -3990,39 +3946,15 @@ object Similarity {
     val k = dims.size
     require(k.toLong * (1L << depth) <= (1L << 22),
       "hstFit model must stay driver-bounded: trees * 2^depth <= 4M")
-    def fdC(a: Column, b: Column): Column =
-      (call_function("div", a, b) +
-        when((a % b) < 0, -1L).otherwise(0L)).cast("long")
-    val pts = ckptNoStats(points.select(
-      (col(idCol).cast("long").as("id") +:
-        dims.zipWithIndex.map { case (c, j) =>
-          floor(c.cast("double") * 1e6).cast("long").as(s"d$j") }): _*))
-    require(pts.head(1).nonEmpty, "hstFit needs rows")
+    require(!points.isEmpty, "hstFit needs rows")
     val splits = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
-    var asg = ckptNoStats(pts.select(col("id"),
-      explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
-      .withColumn("node", lit(0L)))
-    for (level <- 0 until depth) {
-      val v = (0 until k).map { t =>
-        (col("tree") === t.toLong, col(s"d${(level + t) % k}"))
-      }.foldRight(lit(null).cast("long"): Column) { case ((p, c), rest) =>
-        when(p, c).otherwise(rest)
-      }
-      val joined = asg.join(pts, Seq("id")).withColumn("v", v)
-      val sp = joined.groupBy("tree", "node")
-        .agg(fdC(min(col("v")) + max(col("v")), lit(2L)).as("mid"))
-        .persist()
-      val rows = sp.select(col("tree").cast("int"), col("node"), col("mid"))
-        .collect()
+    val asg = hstLeaves(points, idCol, dims, depth) { (level, sp) =>
+      val rows = sp.persist()
+        .select(col("tree").cast("int"), col("node"), col("mid")).collect()
       for (t <- 0 until k)
         splits((t, level)) = rows.iterator
           .filter(_.getInt(0) == t).map(r => r.getLong(1) -> r.getLong(2))
           .toMap
-      asg = ckptNoStats(joined.join(broadcast(sp), Seq("tree", "node"))
-        .select(col("id"), col("tree"),
-          (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
-            .as("node")))
-      sp.unpersist()
     }
     val mass = asg.groupBy("tree", "node").agg(count(lit(1)).as("m"))
       .select(col("tree").cast("int"), col("node"), col("m"))
@@ -4049,8 +3981,7 @@ object Similarity {
       model: HstModel, litBudget: Int = 65536): DataFrame = {
     require(dims.size == model.k,
       s"hstScore needs ${model.k} dims to match the model")
-    val dcols = dims.zipWithIndex.map { case (c, j) =>
-      floor(c.cast("double") * 1e6).cast("long").as(s"d$j") }
+    val dcols = dims.zipWithIndex.map { case (c, j) => micro(c).as(s"d$j") }
     val projected = df.select(col(idCol).as(idCol) +: dcols: _*)
     val entries = model.splits.valuesIterator.map(_.size).sum +
       model.mass.valuesIterator.map(_.size).sum

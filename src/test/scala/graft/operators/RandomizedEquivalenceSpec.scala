@@ -1152,4 +1152,62 @@ class RandomizedEquivalenceSpec extends SparkSpec {
       assert(got === exp, s"trial $trial n=$n depth=$depth")
     }
   }
+
+  test("dbscanGrid equals a sequential DBSCAN on random point sets") {
+    // eps = 5/32 and a 1/32 lattice are exact in binary: lattice points
+    // at multiples of 5 steps sit on cell boundaries, and lattice points
+    // 5 steps apart on an axis, or (3, 4) steps apart, are exactly eps
+    // apart. Each set plants an isolated trio at (-30, -30) steps whose
+    // corner has both others exactly eps away, so at minPts 2 and 3 the
+    // census depends on `<=`; the rest are random, half on the lattice,
+    // with coordinates of both signs.
+    val eps = 156250L
+    (1 to 3).foreach { trial =>
+      val n = 30 + rnd.nextInt(31)
+      val minPts = 2 + trial % 3
+      def lattice() = (rnd.nextInt(17) - 8) / 32.0
+      val ids = rnd.shuffle((0L until 1000L).toVector).take(n)
+      val trio = Seq((-30, -30), (-25, -30), (-27, -26))
+      val pts = ids.zip(trio).map { case (id, (x, y)) =>
+          (id, x / 32.0, y / 32.0) } ++
+        ids.drop(trio.size).map { id =>
+          if (rnd.nextBoolean()) (id, lattice(), lattice())
+          else (id, rnd.nextDouble() - 0.5, rnd.nextDouble() - 0.5)
+        }
+      // Sequential: the same micro quantization, eps test and labels
+      // (a cluster is labeled by its min core id, a border takes the
+      // min label among its core neighbors).
+      val q = pts.map { case (id, x, y) =>
+        (id, math.floor(x * 1e6).toLong, math.floor(y * 1e6).toLong) }
+      def d2(a: (Long, Long, Long), b: (Long, Long, Long)) =
+        (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3)
+      val nbrs = q.map(a =>
+        a._1 -> q.filter(b => b._1 != a._1 && d2(a, b) <= eps * eps).map(_._1))
+        .toMap
+      val core = nbrs.collect { case (id, ns) if ns.size + 1 >= minPts => id }
+        .toSet
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      core.toSeq.sorted.foreach { c =>
+        var frontier = if (label.contains(c)) Seq.empty[Long] else Seq(c)
+        while (frontier.nonEmpty) {
+          frontier.foreach(label(_) = c)
+          frontier = frontier.flatMap(nbrs)
+            .filter(b => core(b) && !label.contains(b)).distinct
+        }
+      }
+      val border = nbrs.collect {
+        case (id, ns) if !core(id) && ns.exists(core) =>
+          id -> ns.filter(core).map(label).min
+      }
+      val exp = (core.toSeq.groupBy(label).toSeq.map { case (l, cs) =>
+          val nb = border.values.count(_ == l).toLong
+          (l, cs.size + nb, cs.size.toLong, nb)
+        } :+ ((-1L, (n - core.size - border.size).toLong, 0L, 0L)))
+        .sortBy(r => (-r._2, r._1))
+      val got = Similarity.dbscanGrid(pts.toDF("id", "x", "y"), "id",
+          col("x"), col("y"), eps, minPts)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      assert(got === exp, s"trial $trial n=$n minPts=$minPts")
+    }
+  }
 }

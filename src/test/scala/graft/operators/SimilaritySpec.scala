@@ -609,6 +609,24 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("dbscanGrid, dbscanState and dbscanGridIncrement reject negative ids") {
+    // A core's label is its component's min id, so a core with id -1
+    // would collide with the census's -1 noise row.
+    val pts = Seq((-1L, 0.0, 0.0), (2L, 0.01, 0.0), (3L, 0.02, 0.0))
+      .toDF("id", "x", "y")
+    def rejected(build: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains("ids must be >= 0"), e.getMessage)
+    }
+    rejected(Similarity.dbscanGrid(pts, "id", $"x", $"y", 20000L, 2))
+    rejected(Similarity.dbscanState(pts, "id", $"x", $"y", 20000L, 2))
+    val base = Similarity.dbscanState(pts.filter($"id" >= 0L), "id",
+      $"x", $"y", 20000L, 2)
+    rejected(Similarity.dbscanGridIncrement(base,
+      Seq((-5L, 0.03, 0.0)).toDF("id", "x", "y"), "id", $"x", $"y",
+      20000L, 2))
+  }
+
   test("ivfIndexAppend: appended index equals the full rebuild, content and probes") {
     val e = graft.Tables.embeddings(spark, sf)
     val seeds = e.filter($"vec_id" < 16)
