@@ -702,7 +702,8 @@ object Dedup {
         // `old` (min over the group recovers it — every node appears in
         // that branch exactly once, and min skips the edge branch's
         // nulls), so convergence needs no |V|⨝|V| join against the
-        // previous round — just a filter over the round's own output.
+        // previous round — just a count observed on the round's own
+        // checkpoint job.
         // shuffle_hash on the |V|-sized label relation: the checkpoint
         // leaves carry no stats (deliberately), which would otherwise
         // sort the |E|-sized edge stream EVERY round under the default
@@ -728,7 +729,7 @@ object Dedup {
         // Union trips Catalyst's constraint rewrite).
         if (round.index <= 2) stepped
         else shortcut(round.ckpt(shortcut(round.ckpt(stepped))))
-      }(_.filter(col("label") =!= col("old")).count())
+      }(count_if(col("label") =!= col("old")))
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
     } finally Seq(labels0, edges, pr).foreach(release)
   }

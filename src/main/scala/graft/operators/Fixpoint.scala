@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.graftshim.GraftShim.{ckptNoStats, release}
 
 /** The driver loop of the round-based DataFrame fixpoints. Each round
@@ -10,7 +10,9 @@ import org.apache.spark.sql.graftshim.GraftShim.{ckptNoStats, release}
   * once its output exists, and on a throw all the loop's checkpoints are
   * freed with `GraftShim.release`. The caller's `init` is never freed.
   * Convergence certificates stay with the operators (count, (count,
-  * sum) or set equality — each sound for its own kind of round).
+  * sum) or set equality — each sound for its own kind of round); an
+  * [[untilStable]] certificate is an aggregate observed on the round's
+  * own checkpoint job, so reading it runs no Spark job.
   */
 object Fixpoint {
 
@@ -30,16 +32,16 @@ object Fixpoint {
     */
   def rounds(init: DataFrame, n: Int)(
       step: (Round, DataFrame) => DataFrame): (DataFrame, DataFrame) =
-    loop(init, step)((done, _) => done < n)
+    loop(init, step, None)((done, _) => done < n)
 
-  /** Run rounds until `changed(state)` is 0 and return that state. A round
-    * past `maxRounds` throws `IllegalArgumentException(guard)` instead.
+  /** Run rounds until `changed`, an aggregate over the round's output, is
+    * 0 and return that state. A round past `maxRounds` throws
+    * `IllegalArgumentException(guard)` instead.
     */
   def untilStable(init: DataFrame, maxRounds: Int, guard: => String)(
-      step: (Round, DataFrame) => DataFrame)(
-      changed: DataFrame => Long): DataFrame = {
-    val (prev, last) = loop(init, step) { (done, state) =>
-      val more = done == 0 || changed(state) > 0
+      step: (Round, DataFrame) => DataFrame)(changed: Column): DataFrame = {
+    val (prev, last) = loop(init, step, Some(changed)) { (done, n) =>
+      val more = done == 0 || n > 0
       require(!more || done < maxRounds, guard)
       more
     }
@@ -47,17 +49,31 @@ object Fixpoint {
     last
   }
 
-  private def loop(init: DataFrame, step: (Round, DataFrame) => DataFrame)(
-      more: (Int, DataFrame) => Boolean): (DataFrame, DataFrame) = {
+  /** Checkpoint `df` eagerly and read `metric`, an aggregate over its
+    * rows, from the checkpoint's own job (`Dataset.observe`); a null
+    * reads as 0.
+    */
+  private[operators] def measured(df: DataFrame,
+      metric: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val ck = ckptNoStats(df.observe(obs, metric.as("m")), eager = true)
+    (ck, Option(obs.get("m")).fold(0L)(_.asInstanceOf[Number].longValue))
+  }
+
+  private def loop(init: DataFrame, step: (Round, DataFrame) => DataFrame,
+      changed: Option[Column])(
+      more: (Int, Long) => Boolean): (DataFrame, DataFrame) = {
     def releaseOwn(df: DataFrame): Unit = if (df ne init) release(df)
-    var (prev, last, done) = (init, init, 0)
+    var (prev, last, done, n) = (init, init, 0, 0L)
     try {
-      while (more(done, last)) {
+      while (more(done, n)) {
         val round = new Round(done + 1)
-        val next = try ckptNoStats(step(round, last), eager = true)
-          finally round.pinned.foreach(release)
+        val (next, m) = try {
+          val out = step(round, last)
+          changed.fold((ckptNoStats(out, eager = true), 0L))(measured(out, _))
+        } finally round.pinned.foreach(release)
         releaseOwn(prev)
-        prev = last; last = next; done += 1
+        prev = last; last = next; done += 1; n = m
       }
       (prev, last)
     } catch { case e: Throwable => releaseOwn(prev); releaseOwn(last); throw e }

@@ -1347,27 +1347,27 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
-    // (id, score) -> normalized (id, score·1e6 div max) with every node
-    // present (absent = 0), checkpointed: each half-step's relation.
-    def normalized(raw: DataFrame): DataFrame = {
-      val full = nodes.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("s"))
-      val mx = full.agg(max(col("s")).as("mx"))
-      GraftShim.ckptNoStats(full.crossJoin(broadcast(mx))
-        .select(col("id"),
-          when(col("mx") > 0, expr("s * 1000000L div mx"))
-            .otherwise(lit(0L)).as("s")), eager = true)
+    // One Fixpoint round per half-step: odd rounds score authorities
+    // from the hubs before them, even rounds hubs from those authorities,
+    // so the last two rounds are (auth, hub). Each is the (id, score·1e6
+    // div max) relation with every node present (absent = 0).
+    val (auth, hub) = Fixpoint.rounds(
+        nodes.select(col("id"), lit(1000000L).as("s")), 2 * iterations) {
+      (round, prev) =>
+        val (from, to) = if (round.index % 2 == 1) ("src", "dst")
+          else ("dst", "src")
+        val full = nodes.join(e.join(prev.withColumnRenamed("id", "pid"),
+              col(from) === col("pid"))
+            .groupBy(col(to).as("id")).agg(sum(col("s")).as("s")),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("s"), lit(0L)).as("s"))
+        val mx = full.agg(max(col("s")).as("mx"))
+        full.crossJoin(broadcast(mx))
+          .select(col("id"),
+            when(col("mx") > 0, expr("s * 1000000L div mx"))
+              .otherwise(lit(0L)).as("s"))
     }
-    var hub = nodes.select(col("id"), lit(1000000L).as("s"))
-    var auth = hub
-    for (_ <- 1 to iterations) {
-      auth = normalized(
-        e.join(hub.withColumnRenamed("id", "hid"), col("src") === col("hid"))
-          .groupBy(col("dst").as("id")).agg(sum(col("s")).as("s")))
-      hub = normalized(
-        e.join(auth.withColumnRenamed("id", "aid"), col("dst") === col("aid"))
-          .groupBy(col("src").as("id")).agg(sum(col("s")).as("s")))
-    }
+    GraftShim.release(e)
     nodes
       .join(auth.select(col("id"), col("s").as("auth_micro")), Seq("id"))
       .join(hub.select(col("id"), col("s").as("hub_micro")), Seq("id"))
@@ -1692,8 +1692,10 @@ object Graph {
       else GraftShim.ckptNoStats(allNodes
         .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
         .limit(sources))
+    // k is 0 only on an empty graph, which reads out no rows; a 0 would
+    // still fail planning as a literal divisor.
     val k = if (sources <= 0) n else srcNodes.count()
-    closenessReadout(bfsDistances(und, srcNodes, maxDepth), n, k)
+    closenessReadout(bfsDistances(und, srcNodes, maxDepth), n, k max 1)
   }
 
   /** Symmetric deduped edge list + node universe, both pinned — the
@@ -1728,22 +1730,18 @@ object Graph {
     val start = GraftShim.ckptNoStats(srcNodes
       .select(col("node").as("src"), col("node"), lit(0L).as("d")))
     val frontiers = scala.collection.mutable.ListBuffer(start)
-    var frontier = start
-    var prev: DataFrame = null
-    var depth = 0L
     var more = true
     while (more) {
-      depth += 1
-      val seen = if (prev == null) frontier.select(col("src"), col("node"))
-        else frontier.select(col("src"), col("node"))
-          .unionAll(prev.select(col("src"), col("node")))
-      val nxt = GraftShim.ckptNoStats(frontier
+      val depth = frontiers.size.toLong
+      val seen = frontiers.takeRight(2)
+        .map(_.select(col("src"), col("node"))).reduce(_ unionAll _)
+      val (nxt, rows) = Fixpoint.measured(frontiers.last
         .join(und, col("node") === col("a"))
         .select(col("src"), col("b").as("node"))
         .distinct()
         .join(seen, Seq("src", "node"), "left_anti")
-        .withColumn("d", lit(depth)))
-      if (nxt.count() == 0) { more = false; GraftShim.release(nxt) }
+        .withColumn("d", lit(depth)), count(lit(1)))
+      if (rows == 0) { more = false; GraftShim.release(nxt) }
       else {
         // Raise only on a still-live frontier PAST the bound, so a graph
         // with eccentricity exactly maxDepth drains cleanly — matching
@@ -1751,7 +1749,7 @@ object Graph {
         require(depth <= maxDepth,
           s"BFS did not drain in $maxDepth levels — the graph has a " +
             "shortest path longer than maxDepth; raise it or cap the domain")
-        frontiers += nxt; prev = frontier; frontier = nxt
+        frontiers += nxt
       }
     }
     frontiers.map(_.select(col("src"), col("node"), col("d")))
@@ -1802,20 +1800,14 @@ object Graph {
       sources: Int, maxDepth: Int, topN: Int): DataFrame = {
     require(sources >= 1 && maxDepth >= 1 && topN >= 1,
       "betweennessSampled needs sources, maxDepth, topN >= 1")
-    // stats-ok: loop INPUT materialized once, not round state
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b")).localCheckpoint(true)
-    val und = GraftShim.ckptNoStats(e0
-      .union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct())
-    val srcs = GraftShim.ckptNoStats(und.select(col("a").as("node")).distinct()
+    val (und, allNodes) = symNodes(edges, srcCol, dstCol)
+    val srcs = GraftShim.ckptNoStats(allNodes
       .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
       .limit(sources))
     // Forward: levels(d) = (src, node, sig) at BFS depth d.
     val levels = scala.collection.mutable.ListBuffer(
       GraftShim.ckptNoStats(srcs.select(col("node").as("src"), col("node"),
         lit(1L).as("sig"))))
-    var depth = 0
     var more = true
     // Same frontier-local visited check + drain-before-raise discipline
     // as [[bfsDistances]]: on the symmetric edge list a candidate from
@@ -1823,18 +1815,18 @@ object Graph {
     // only the last TWO levels — no cumulative visited relation and no
     // per-level checkpoint rewrite of a growing pair set.
     while (more) {
-      depth += 1
+      val depth = levels.size
       val seen = levels.takeRight(2)
         .map(_.select(col("src"), col("node").as("b")))
         .reduce(_ unionAll _)
-      val nxt = GraftShim.ckptNoStats(levels.last
+      val (nxt, rows) = Fixpoint.measured(levels.last
         .join(und, col("node") === col("a"))
         .select(col("src"), col("b"), col("sig"))
         .join(seen, Seq("src", "b"), "left_anti")
         .groupBy(col("src"), col("b").as("node"))
         .agg(sum("sig").as("sig"))
-        .select(col("src"), col("node"), col("sig")))
-      if (nxt.count() == 0) more = false
+        .select(col("src"), col("node"), col("sig")), count(lit(1)))
+      if (rows == 0) { more = false; GraftShim.release(nxt) }
       else {
         require(depth <= maxDepth, s"BFS exceeded maxDepth=$maxDepth")
         levels += nxt

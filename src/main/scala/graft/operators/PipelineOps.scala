@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.release
 import graft.functions.TextFunctions._
 
 /** Training-data pipeline operators beyond dedup/similarity (SURVEY.md
@@ -969,30 +970,26 @@ object PipelineOps {
     // re-derived every round — checkpoint it once (it is metadata-sized)
     // so the iterated plan stays linear instead of doubling per pass
     // (the kCore lineage discipline).
-    var cells = df.select(rowCol.as("r"), colCol.as("c"))
+    val cells0 = df.select(rowCol.as("r"), colCol.as("c"))
       .groupBy(col("r"), col("c")).agg(count(lit(1)).as("n"))
       .withColumn("w", lit(1000000L))
       .localCheckpoint() // stats-ok: one-shot contingency collapse (rounds use ckptNoStats)
-    def scale(keyName: String, targets: DataFrame,
-        targetName: String): Unit = {
+    // One Fixpoint round per scaling pass: odd rounds scale the row
+    // margins, even rounds the column margins.
+    val (prev, cells) = Fixpoint.rounds(cells0, 2 * rounds) { (round, cells) =>
+      val (keyName, targets, targetName) =
+        if (round.index % 2 == 1) ("r", rt, "t_r") else ("c", ct, "t_c")
       val m = cells.groupBy(col(keyName))
         .agg(sum(expr("n * w")).as("m_k"))
       val tot = m.agg(sum(col("m_k")).as("mm"))
-      // State→state loop checkpoint: drop origin stats, or the join
-      // estimate (cells × m × tot) compounds geometrically per pass.
-      cells = org.apache.spark.sql.graftshim.GraftShim.ckptNoStats(
-        cells.join(m, keyName).join(targets, keyName)
-          .crossJoin(broadcast(tot))
-          .select(col("r"), col("c"), col("n"),
-            expr(s"""cast(cast(w as decimal(38,0)) * $targetName * mm
-                 div (cast(1000000 as decimal(38,0)) * greatest(m_k, 1L))
-                 as long)""").as("w")),
-        eager = true)
+      cells.join(m, keyName).join(targets, keyName)
+        .crossJoin(broadcast(tot))
+        .select(col("r"), col("c"), col("n"),
+          expr(s"""cast(cast(w as decimal(38,0)) * $targetName * mm
+               div (cast(1000000 as decimal(38,0)) * greatest(m_k, 1L))
+               as long)""").as("w"))
     }
-    for (_ <- 1 to rounds) {
-      scale("r", rt, "t_r")
-      scale("c", ct, "t_c")
-    }
+    Seq(prev, cells0).foreach(release)
     cells.select(col("r"), col("c"), col("n"), col("w").as("w_micro"))
   }
 

@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftShim.ckptNoStats
+import org.apache.spark.sql.graftshim.GraftShim.{ckptNoStats, release}
 import graft.functions.TextFunctions.{cosine, doti, quantize8}
 
 /** Vector similarity search over embedding columns (SURVEY.md §2.6).
@@ -3522,11 +3522,11 @@ object Similarity {
       yCol: Column, epsMicro: Long, minPts: Int): DataFrame = {
     require(epsMicro > 0 && minPts >= 1, "need epsMicro > 0, minPts >= 1")
     val e = lit(epsMicro)
-    val pts = ckptNoStats(gridPoints(points, idCol, xCol, yCol, e))
     // Labels share the id domain (label = min core id of the component),
     // so a negative id could collide with the census's -1 noise sentinel.
-    val minId = pts.agg(min(col("id"))).head
-    require(minId.isNullAt(0) || minId.getLong(0) >= 0L,
+    val (pts, minId) = Fixpoint.measured(
+      gridPoints(points, idCol, xCol, yCol, e), min(col("id")))
+    require(minId >= 0L,
       "dbscanState: point ids must be >= 0 (labels share the id domain; " +
         "-1 is the census noise sentinel)")
     val nbr = gridEpsPairs(pts, e)
@@ -3885,39 +3885,39 @@ object Similarity {
 
   /** The half-space-tree level loop of [[hstOutliers]] and [[hstFit]]:
     * one (id, tree, node) row per point and tree, starting at node 0;
-    * level l splits each (tree, node) at the floor midpoint of its
-    * min/max along dimension (l+tree) mod k and sends the point to
-    * 2·node+side. `onSplits(level, table)` sees each level's
-    * (tree, node, mid) table before its broadcast; a table it persists
-    * is unpersisted once the level's assignment is checkpointed.
-    * Returns the leaf assignment after `depth` levels.
+    * level l (Fixpoint round l+1) splits each (tree, node) at the floor
+    * midpoint of its min/max along dimension (l+tree) mod k and sends
+    * the point to 2·node+side. `onSplits(level, table)` sees each
+    * level's (tree, node, mid) table and returns the table the level
+    * broadcasts. Returns the leaf assignment after `depth` levels; it is
+    * the only checkpoint left cached.
     */
   private def hstLeaves(points: DataFrame, idCol: String, dims: Seq[Column],
       depth: Int)(
-      onSplits: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      onSplits: (Int, DataFrame) => DataFrame = (_, sp) => sp): DataFrame = {
     val k = dims.size
     val pts = ckptNoStats(points.select(
       (col(idCol).cast("long").as("id") +:
         dims.zipWithIndex.map { case (c, j) => micro(c).as(s"d$j") }): _*))
-    var asg = ckptNoStats(pts.select(col("id"),
-      explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
-      .withColumn("node", lit(0L)))
-    for (level <- 0 until depth) {
+    val (prev, asg) = Fixpoint.rounds(pts.select(col("id"),
+        explode(array((0 until k).map(t => lit(t.toLong)): _*)).as("tree"))
+        .withColumn("node", lit(0L)), depth) { (round, asg) =>
+      val level = round.index - 1
       val v = (0 until k).map { t =>
         (col("tree") === t.toLong, col(s"d${(level + t) % k}"))
       }.foldRight(lit(null).cast("long"): Column) { case ((p, c), rest) =>
         when(p, c).otherwise(rest)
       }
       val joined = asg.join(pts, Seq("id")).withColumn("v", v)
-      val splits = joined.groupBy("tree", "node")
-        .agg(fdiv(min(col("v")) + max(col("v")), lit(2L)).as("mid"))
-      onSplits(level, splits)
-      asg = ckptNoStats(joined.join(broadcast(splits), Seq("tree", "node"))
+      val splits = onSplits(level, joined.groupBy("tree", "node")
+        .agg(fdiv(min(col("v")) + max(col("v")), lit(2L)).as("mid")))
+      joined.join(broadcast(splits), Seq("tree", "node"))
         .select(col("id"), col("tree"),
           (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
-            .as("node")))
-      splits.unpersist()
+            .as("node"))
     }
+    // The level-0 assignment is a projection of `pts`, not a checkpoint.
+    Seq(prev, pts).foreach(release)
     asg
   }
 
@@ -3948,13 +3948,16 @@ object Similarity {
       "hstFit model must stay driver-bounded: trees * 2^depth <= 4M")
     require(!points.isEmpty, "hstFit needs rows")
     val splits = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
+    // Each level broadcasts the split table it collected, so the table
+    // is computed once.
     val asg = hstLeaves(points, idCol, dims, depth) { (level, sp) =>
-      val rows = sp.persist()
-        .select(col("tree").cast("int"), col("node"), col("mid")).collect()
+      val rows = sp.collect()
       for (t <- 0 until k)
         splits((t, level)) = rows.iterator
-          .filter(_.getInt(0) == t).map(r => r.getLong(1) -> r.getLong(2))
+          .filter(_.getLong(0) == t).map(r => r.getLong(1) -> r.getLong(2))
           .toMap
+      sp.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        sp.schema)
     }
     val mass = asg.groupBy("tree", "node").agg(count(lit(1)).as("m"))
       .select(col("tree").cast("int"), col("node"), col("m"))

@@ -124,4 +124,31 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
       s"Dataset.unpersist on a checkpoint frees nothing (use " +
         s"GraftShim.release):\n  ${violations.mkString("\n  ")}")
   }
+
+  test("round loops run on Fixpoint (no ckptNoStats result reassigned)") {
+    // `x = ...ckptNoStats(` rebinds loop state by hand: such a loop keeps
+    // every superseded round cached unless it frees them itself, which
+    // is what Fixpoint.rounds / untilStable own. Allowed only where the
+    // loop keeps every level anyway, keyed by (file, name).
+    val allowed = Map(
+      ("Graph.scala", "deltas") ->
+        "betweenness's backward sweep: the result unions every level")
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sweep must run from the repo root: $root")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Seq.empty
+    val reassign = """\s*(\w+)\s*=(?![=>]).*\bckptNoStats\(.*""".r
+    val violations = walk(root).flatMap { f =>
+      val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+      lines.zipWithIndex.collect {
+        case (reassign(name), i) if !allowed.contains((f.getName, name)) =>
+          s"${f.getPath}:${i + 1}"
+      }
+    }
+    assert(violations.isEmpty,
+      s"hand-rolled round loops (run them through Fixpoint):\n  " +
+        violations.mkString("\n  "))
+  }
 }

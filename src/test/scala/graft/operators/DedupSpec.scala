@@ -176,6 +176,15 @@ class DedupSpec extends SparkSpec {
     assert(got === (1L to 400L).map(_ -> 1L).toMap)
   }
 
+  test("dedupClusters on an empty pair list stops after one round, empty") {
+    // The round's observed change count is over zero rows: it must read
+    // as 0 and stop the loop, not wait or trip the guard.
+    val got = Dedup.dedupClusters(Seq.empty[(Long, Long)].toDF("d1", "d2"),
+      "d1", "d2", maxIters = 1)
+    assert(got.columns.toSeq === Seq("doc_id", "cluster_id"))
+    assert(got.collect().isEmpty)
+  }
+
   test("dedupKeepBest elects the highest-score member, ties to the lowest id") {
     val docs = Seq(
       (1L, "a", 5L), (2L, "b", 9L), (3L, "c", 9L),  // cluster {1,2,3}: 2 and 3 tie on score -> 2

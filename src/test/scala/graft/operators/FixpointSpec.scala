@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.BlockProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
@@ -62,5 +64,62 @@ class FixpointSpec extends SparkSpec {
     assert(err.getMessage.contains(
       "label propagation did not converge in 1 rounds"))
     assert(held.isEmpty, s"cached RDDs after the guard threw: $held")
+  }
+
+  test("an untilStable round runs one job: the change count rides its checkpoint") {
+    // A checkpoint-only step (a projection, no shuffle): v climbs to 3,
+    // so rounds 1-3 change every row and round 4 none. The jobs of this
+    // thread's job group are counted, so other suites' jobs do not show.
+    val init = spark.range(100).toDF("id").withColumn("v", lit(0L))
+      .localCheckpoint(true)
+    val group = s"fixpoint-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "untilStable job count")
+    var rounds = 0
+    val out = try Fixpoint.untilStable(init, 10, "no convergence") {
+      (round, s) =>
+        rounds = round.index
+        s.select(col("id"), least(col("v") + 1, lit(3L)).as("v"),
+          col("v").as("old"))
+    }(count_if(col("v") =!= col("old")))
+    finally {
+      spark.sparkContext.clearJobGroup()
+      GraftShim.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(rounds === 4)
+    assert(jobs.get === rounds, s"$rounds rounds ran ${jobs.get} jobs")
+    assert(out.agg(min("v"), max("v")).as[(Long, Long)].head() === ((3L, 3L)))
+    GraftShim.release(out)
+    GraftShim.release(init)
+  }
+
+  test("raking, HST levels and HITS keep only the checkpoints their result reads") {
+    def reads(df: DataFrame): Set[Int] =
+      GraftShim.analyzed(df).collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    val pts = (0 until 40).map(i => (i.toLong, (i * 7 % 13).toDouble,
+      (i * 5 % 11).toDouble, s"r${i % 3}", s"c${i % 4}"))
+      .toDF("id", "x", "y", "r", "c")
+    val edges = chain(12)
+    val ops = Seq[(String, () => DataFrame)](
+      "rakeToUniform" -> (() =>
+        PipelineOps.rakeToUniform(pts, col("r"), col("c"), 3)),
+      "hstOutliers" -> (() => Similarity.hstOutliers(pts, "id",
+        Seq(col("x"), col("y")), depth = 4, topN = 5)),
+      "hits" -> (() => Graph.hits(edges, "a", "b", 3)))
+    for ((name, run) <- ops) {
+      val (out, held) = heldBy(run())
+      assert(held.nonEmpty && held === reads(out),
+        s"$name holds $held, its result reads ${reads(out)}")
+      assert(out.collect().nonEmpty, name)
+    }
   }
 }

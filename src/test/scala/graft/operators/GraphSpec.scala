@@ -93,6 +93,14 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("closenessCentrality on an empty edge list has no rows") {
+    // The first BFS level observes zero rows and ends the sweep.
+    val edges = Seq.empty[(Long, Long)].toDF("u", "v")
+    for (sources <- Seq(0, 3))
+      assert(Graph.closenessCentrality(edges, "u", "v", sources = sources)
+        .collect().isEmpty, s"sources = $sources")
+  }
+
   test("closenessCentrality visited accumulator survives a 400-hop chain") {
     // Chain 0-1-...-400 from a single pivot: 400 level rounds. With the
     // old per-round re-union of ALL prior frontiers the plan grows

@@ -1174,36 +1174,10 @@ class RandomizedEquivalenceSpec extends SparkSpec {
           if (rnd.nextBoolean()) (id, lattice(), lattice())
           else (id, rnd.nextDouble() - 0.5, rnd.nextDouble() - 0.5)
         }
-      // Sequential: the same micro quantization, eps test and labels
-      // (a cluster is labeled by its min core id, a border takes the
-      // min label among its core neighbors).
-      val q = pts.map { case (id, x, y) =>
-        (id, math.floor(x * 1e6).toLong, math.floor(y * 1e6).toLong) }
-      def d2(a: (Long, Long, Long), b: (Long, Long, Long)) =
-        (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3)
-      val nbrs = q.map(a =>
-        a._1 -> q.filter(b => b._1 != a._1 && d2(a, b) <= eps * eps).map(_._1))
-        .toMap
-      val core = nbrs.collect { case (id, ns) if ns.size + 1 >= minPts => id }
-        .toSet
-      val label = scala.collection.mutable.Map.empty[Long, Long]
-      core.toSeq.sorted.foreach { c =>
-        var frontier = if (label.contains(c)) Seq.empty[Long] else Seq(c)
-        while (frontier.nonEmpty) {
-          frontier.foreach(label(_) = c)
-          frontier = frontier.flatMap(nbrs)
-            .filter(b => core(b) && !label.contains(b)).distinct
-        }
-      }
-      val border = nbrs.collect {
-        case (id, ns) if !core(id) && ns.exists(core) =>
-          id -> ns.filter(core).map(label).min
-      }
-      val exp = (core.toSeq.groupBy(label).toSeq.map { case (l, cs) =>
-          val nb = border.values.count(_ == l).toLong
-          (l, cs.size + nb, cs.size.toLong, nb)
-        } :+ ((-1L, (n - core.size - border.size).toLong, 0L, 0L)))
-        .sortBy(r => (-r._2, r._1))
+      // Sequential: the same micro quantization, eps test and labels.
+      val exp = SequentialDbscan.census(pts.map { case (id, x, y) =>
+        (id, math.floor(x * 1e6).toLong, math.floor(y * 1e6).toLong) },
+        eps, minPts)
       val got = Similarity.dbscanGrid(pts.toDF("id", "x", "y"), "id",
           col("x"), col("y"), eps, minPts)
         .as[(Long, Long, Long, Long)].collect().toSeq

@@ -534,12 +534,14 @@ class SimilaritySpec extends SparkSpec {
     val all = graft.Tables.embeddings(spark, sf).filter(col("vec_id") < 1024)
     val xc = col("embedding").getItem(0)
     val yc = col("embedding").getItem(1)
-    // (1) The census derived from state equals dbscanGrid directly.
-    val grid = Similarity.dbscanGrid(all, "vec_id", xc, yc, 20000L, 5)
-      .as[(Long, Long, Long, Long)].collect().toSeq
+    // (1) The census derived from state equals a sequential DBSCAN over
+    // the state's own micro coordinates.
     val full = Similarity.dbscanState(all, "vec_id", xc, yc, 20000L, 5)
+    val fullRows = stateRows(full)
     assert(Similarity.dbscanCensus(full)
-      .as[(Long, Long, Long, Long)].collect().toSeq === grid)
+      .as[(Long, Long, Long, Long)].collect().toSeq ===
+      SequentialDbscan.census(fullRows.map(r => (r._1, r._2, r._3)),
+        20000L, 5))
     // (2) Folding the appended batch into the base state reproduces the
     // full-recompute state bit for bit (labels, counts, border sets).
     val base = all.filter(col("vec_id") < 700)
@@ -547,7 +549,7 @@ class SimilaritySpec extends SparkSpec {
     val inc = Similarity.dbscanGridIncrement(
       Similarity.dbscanState(base, "vec_id", xc, yc, 20000L, 5),
       delta, "vec_id", xc, yc, 20000L, 5)
-    assert(stateRows(inc) === stateRows(full))
+    assert(stateRows(inc) === fullRows)
     // (3) Two successive folds (the production cadence: state produced
     // by one increment feeds the next) still equal the full recompute —
     // the state round-trips, including the border-label arrays.
@@ -558,7 +560,7 @@ class SimilaritySpec extends SparkSpec {
         Similarity.dbscanState(base, "vec_id", xc, yc, 20000L, 5),
         d1, "vec_id", xc, yc, 20000L, 5),
       d2, "vec_id", xc, yc, 20000L, 5)
-    assert(stateRows(inc2) === stateRows(full))
+    assert(stateRows(inc2) === fullRows)
   }
 
   test("dbscan increment merges clusters bridged by a new point (deterministic fixture)") {
@@ -607,6 +609,15 @@ class SimilaritySpec extends SparkSpec {
         Similarity.dbscanState(base, "id", $"x", $"y", eps, 3),
         pts(Seq(1L -> 0.0)), "id", $"x", $"y", eps, 3)
     }
+  }
+
+  test("dbscanGrid on no points is the empty noise row") {
+    // The id guard reads min(id) over zero rows (null) and must pass.
+    val got = Similarity.dbscanGrid(
+      Seq.empty[(Long, Double, Double)].toDF("id", "x", "y"), "id",
+      $"x", $"y", 100000L, 3)
+    assert(got.as[(Long, Long, Long, Long)].collect().toSeq ===
+      Seq((-1L, 0L, 0L, 0L)))
   }
 
   test("dbscanGrid, dbscanState and dbscanGridIncrement reject negative ids") {
