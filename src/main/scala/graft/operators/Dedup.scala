@@ -134,9 +134,9 @@ object Dedup {
         explode(minhashBands(col("toks"), NumHashes, BandRows)).as("key"))
     // Self-join as SHUFFLE hash join, not broadcast: both sides then need
     // the identical hashpartitioning(key) exchange, which ReuseExchange
-    // computes ONCE — a broadcast build side would recompute the whole
-    // signature scan a second time. (Also the right physical join at
-    // 100 TB, where neither side is broadcastable.)
+    // computes ONCE. Unhinted, the planner broadcasts one side from the
+    // parquet stats and runs the band scan (tokenize + minhash) twice:
+    // plans/hints/q27_minhash_lsh_nohint_sf0.1.txt.
     val cands = bands.as("x").join(bands.hint("shuffle_hash").as("y"),
         col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -685,7 +685,7 @@ object Dedup {
     // One pointer-doubling shortcut: each label becomes its label's label.
     def shortcut(cur: DataFrame): DataFrame = {
       val lk = cur.select(col("node").as("ln"), col("label").as("ll"))
-      cur.join(lk.hint("shuffle_hash"), col("label") === col("ln"))
+      cur.join(lk, col("label") === col("ln"))
         .select(col("node"), col("ll").as("label"), col("old"))
     }
     // Fixpoint frees its rounds on a throw and this finally the inputs,
@@ -704,14 +704,8 @@ object Dedup {
         // nulls), so convergence needs no |V|⨝|V| join against the
         // previous round — just a count observed on the round's own
         // checkpoint job.
-        // shuffle_hash on the |V|-sized label relation: the checkpoint
-        // leaves carry no stats (deliberately), which would otherwise
-        // sort the |E|-sized edge stream EVERY round under the default
-        // sort-merge choice (guide §3.1 — hash join when one side is
-        // per-partition buildable; the label table is node-sized).
         val labelT = labels.schema("label").dataType
-        val stepped = edges.join(labels.hint("shuffle_hash"),
-            col("dst") === col("node"))
+        val stepped = edges.join(labels, col("dst") === col("node"))
           .select(col("src").as("node"), col("label"),
             lit(null).cast(labelT).as("old"))
           .union(labels.select(col("node"), col("label"),
@@ -759,8 +753,7 @@ object Dedup {
       delta: DataFrame, idCol: String, textCol: String): DataFrame = {
     val dBands = ckptNoStats(lshBandIndex(delta, idCol, textCol))
     val allBands = bandIndex.unionByName(dBands)
-    // Shuffle-hash with Δ as the (small) build side; the index streams.
-    val cands = dBands.hint("shuffle_hash").as("x")
+    val cands = dBands.as("x")
       .join(allBands.as("y"),
         col("x.key") === col("y.key") &&
           col("x.doc_id") =!= col("y.doc_id"))
@@ -854,7 +847,7 @@ object Dedup {
     val mBands =
       ckptNoStats(bandIndex.join(members, Seq("doc_id"), "left_semi"))
     val cands = mBands.as("x")
-      .join(mBands.hint("shuffle_hash").as("y"),
+      .join(mBands.as("y"),
         col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
@@ -1097,7 +1090,7 @@ object Dedup {
     // from it — this fuses what used to be a row_number window (shuffle +
     // sort on the gram stream) plus a second doc-keyed groupBy into a
     // single exchange of the gram stream.
-    val byDoc = grams.hint("shuffle_hash").join(dfreq, "g")
+    val byDoc = grams.join(dfreq, "g")
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("df"), col("g"))).as("fg"))
       .withColumn("n", size(col("fg")).cast("long"))
@@ -1121,7 +1114,7 @@ object Dedup {
     // provably WEAKER than jac >= t (no float-edge false negatives).
     val tLo = math.floor(JaccardThreshold * 1000000).toLong
     val tHi = math.ceil(JaccardThreshold * 1000000).toLong
-    val cands = pref.as("a").join(pref.hint("shuffle_hash").as("b"),
+    val cands = pref.as("a").join(pref.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       // length prune: jac >= t implies min(n1,n2) >= t*max(n1,n2)
       .filter(least(col("a.n"), col("b.n")) * lit(1000000L)
@@ -1258,8 +1251,7 @@ object Dedup {
       // O(d·len) band per slot (bounded by (d+1)·(2d+1)); the final
       // distinct runs on true matches only — output-sized, not
       // candidate-sized.
-      segs.hint("shuffle_hash")
-        .join(probes, Seq("lr", "i", "seg"))
+      segs.join(probes, Seq("lr", "i", "seg"))
         .filter(col("rid") =!= col("pid"))
         .withColumn("dist", levenshtein(col("rcore"), col("pcore"), d))
         .filter(col("dist") >= 0 && col("dist") <= d)
@@ -1268,8 +1260,7 @@ object Dedup {
           col("dist").cast("long").as("dist"))
         .distinct()
     } else {
-      val cands = segs.hint("shuffle_hash")
-        .join(probes, Seq("lr", "i", "seg"))
+      val cands = segs.join(probes, Seq("lr", "i", "seg"))
         .filter(col("rid") =!= col("pid"))
         .select(least(col("rid"), col("pid")).as("d1"),
           greatest(col("rid"), col("pid")).as("d2"))

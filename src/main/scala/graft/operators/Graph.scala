@@ -56,12 +56,9 @@ object Graph {
     require(iterations >= 1, "pagerank needs at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "damping is a percent")
     // Materialize the edge list ONCE, PRE-PARTITIONED on src — every
-    // iteration joins it on src, so the shuffle that places it is paid
-    // once and each iteration's contribution join streams the big side
-    // with ZERO exchange and (with the shuffle_hash hint on the
-    // |V|-sized contribution side) zero sort. This is the local-mode
-    // analogue of the 100-TB advice below: bucket the edge list by src
-    // so iterations reuse the layout.
+    // iteration joins it on src. This is the local-mode analogue of the
+    // 100-TB advice below: bucket the edge list by src so iterations
+    // reuse the layout.
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val e = e0.repartition(col("src")).localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
@@ -83,18 +80,13 @@ object Graph {
     def settle(ranks: DataFrame): DataFrame = {
       val contrib = ranks.filter(col("deg").isNotNull)
         .select(col("id").as("cid"), expr("rank_micro div deg").as("c"))
-      // shuffle_hash: build the |V|-sized contribution side, stream the
-      // pre-partitioned edge list — a sort-merge join would re-sort the
-      // edge relation every iteration for nothing.
-      val inSums = e.join(contrib.hint("shuffle_hash"),
-          col("src") === col("cid"))
+      val inSums = e.join(contrib, col("src") === col("cid"))
         .groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
       // Σ rank over sinks, floored to a uniform per-node share.
       val dangling = ranks.filter(col("deg").isNull)
         .agg(coalesce(sum(col("rank_micro")), lit(0L)).as("dm"))
         .select(expr(s"dm div ${nNodes}L").as("dangling_share"))
-      nodesDeg.join(inSums.hint("shuffle_hash"),
-          col("id") === col("dst"), "left")
+      nodesDeg.join(inSums, col("id") === col("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"), col("deg"),
           (lit(base) + expr(s"($dampingPct * (coalesce(in_sum, 0L)" +
@@ -1692,9 +1684,10 @@ object Graph {
       else GraftShim.ckptNoStats(allNodes
         .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
         .limit(sources))
-    // k is 0 only on an empty graph, which reads out no rows; a 0 would
-    // still fail planning as a literal divisor.
-    val k = if (sources <= 0) n else srcNodes.count()
+    // The pivot set is the first min(sources, n) nodes, so k needs no
+    // count job. k is 0 only on an empty graph, which reads out no rows;
+    // a 0 would still fail planning as a literal divisor.
+    val k = if (sources <= 0) n else math.min(sources.toLong, n)
     closenessReadout(bfsDistances(und, srcNodes, maxDepth), n, k max 1)
   }
 

@@ -743,9 +743,10 @@ object PipelineOps {
     * 1.0 = the same window repeated throughout) — a boilerplate detector.
     *
     * Computed per row by the native [[graft.functions.RepetitionRatioExpr]]
-    * kernel: ZERO shuffle (the relational form below, kept as reference
-    * semantics, exploded every window and shuffled (doc_id, gram) twice —
-    * a corpus-of-windows exchange for a per-document measure).
+    * kernel: ZERO shuffle (the relational form, kept as reference
+    * semantics in TextKernelsSpec, explodes every window and shuffles
+    * (doc_id, gram) twice — a corpus-of-windows exchange for a
+    * per-document measure).
     */
   def repetitionRatio(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
@@ -753,19 +754,6 @@ object PipelineOps {
       .select(col("doc_id"),
         round(graft.functions.TextFunctions.repetitionRatio(col("toks"), n), 6)
           .as("rep_ratio"))
-
-  /** The exploded groupBy formulation of [[repetitionRatio]] — reference
-    * semantics the kernel must reproduce (PipelineOpsSpec asserts
-    * equality). Not for production use.
-    */
-  def repetitionRatioRelational(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), explode(ngrams(col("toks"), n)).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(round(max(col("c")).cast("double") / sum(col("c")), 6).as("rep_ratio"))
 
   /** PII patterns — a conservative regex subset that parses and matches
     * identically under Java regex (Spark codegen) and RE2 (DuckDB oracle):

@@ -594,6 +594,9 @@ object Relational {
       floor(col(c).cast("long") / bucketSeconds).cast("long")
     val ax = a.withColumn("__bkta", explode(sequence(bkt(aStart), bkt(aEnd))))
     val bx = b.withColumn("__bktb", explode(sequence(bkt(bStart), bkt(bEnd))))
+    // Hinted: PlanSpec "q128 interval overlap" pins a hash-partitioned
+    // join on the bucket key. Unhinted, the planner broadcasts one side
+    // from its parquet stats and that case fails.
     ax.join(bx.hint("shuffle_hash"),
         col("__bkta") === col("__bktb") &&
           col(aStart).cast("long") <= col(bEnd).cast("long") &&

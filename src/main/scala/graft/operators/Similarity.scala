@@ -3530,40 +3530,29 @@ object Similarity {
       "dbscanState: point ids must be >= 0 (labels share the id domain; " +
         "-1 is the census noise sentinel)")
     val nbr = gridEpsPairs(pts, e)
-    // Every assembly join hash-builds its node-sized side (count, core
-    // and label tables ≤ |P| rows): the checkpointed leaves carry no
-    // stats, so the default choice would sort the pair-sized stream at
-    // every join (guide §3.1).
     val base = ckptNoStats(pts.join(
-        nbr.groupBy("aid").agg(count(lit(1)).as("nc"))
-          .hint("shuffle_hash"),
+        nbr.groupBy("aid").agg(count(lit(1)).as("nc")),
         col("id") === col("aid"), "left")
       .select(col("id"), col("x"), col("y"),
         coalesce(col("nc"), lit(0L)).as("ncnt")))
     val core = base.filter(col("ncnt") + 1 >= minPts).select(col("id"))
     val ce = nbr
-      .join(core.withColumnRenamed("id", "aid").hint("shuffle_hash"),
-        Seq("aid"))
-      .join(core.withColumnRenamed("id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
+      .join(core.withColumnRenamed("id", "aid"), Seq("aid"))
+      .join(core.withColumnRenamed("id", "bid"), Seq("bid"))
       .select(col("aid"), col("bid"))
       .union(core.select(col("id").as("aid"), col("id").as("bid")))
     val labs = Dedup.dedupClusters(ce, "aid", "bid")
     val borders = nbr
-      .join(core.withColumnRenamed("id", "aid").hint("shuffle_hash"),
-        Seq("aid"), "left_anti")
-      .join(core.withColumnRenamed("id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
-      .join(labs.withColumnRenamed("doc_id", "bid").hint("shuffle_hash"),
-        Seq("bid"))
+      .join(core.withColumnRenamed("id", "aid"), Seq("aid"), "left_anti")
+      .join(core.withColumnRenamed("id", "bid"), Seq("bid"))
+      .join(labs.withColumnRenamed("doc_id", "bid"), Seq("bid"))
       .groupBy("aid")
       .agg(sort_array(collect_set(col("cluster_id"))).as("bcls"))
     base
       .join(labs.withColumnRenamed("doc_id", "id")
-        .withColumnRenamed("cluster_id", "cluster").hint("shuffle_hash"),
+        .withColumnRenamed("cluster_id", "cluster"),
         Seq("id"), "left")
-      .join(borders.withColumnRenamed("aid", "id").hint("shuffle_hash"),
-        Seq("id"), "left")
+      .join(borders.withColumnRenamed("aid", "id"), Seq("id"), "left")
       .select(col("id"), col("x"), col("y"), col("ncnt"),
         col("cluster"), col("bcls"))
   }
@@ -3644,7 +3633,7 @@ object Similarity {
       .groupBy(col("bid").as("id")).agg(count(lit(1)).as("add"))
     val dn = p1.groupBy(col("aid").as("id")).agg(count(lit(1)).as("dnc"))
     val baseUp = ckptNoStats(st
-      .join(addB.hint("shuffle_hash"), Seq("id"), "left")
+      .join(addB, Seq("id"), "left")
       .withColumn("ncnt2", col("ncnt") + coalesce(col("add"), lit(0L))))
     val deltaUp = ckptNoStats(dpts.join(dn, Seq("id"), "left")
       .withColumn("ncnt2", coalesce(col("dnc"), lit(0L))))
@@ -3664,10 +3653,8 @@ object Similarity {
     // New core-core edges at rep level (+ self-pairs so isolated new
     // cores form singleton clusters), closed transitively.
     val edges = p1.unionByName(p2)
-      .join(reps.select(col("id").as("aid"), col("rep").as("r1"))
-        .hint("shuffle_hash"), Seq("aid"))
-      .join(reps.select(col("id").as("bid"), col("rep").as("r2"))
-        .hint("shuffle_hash"), Seq("bid"))
+      .join(reps.select(col("id").as("aid"), col("rep").as("r1")), Seq("aid"))
+      .join(reps.select(col("id").as("bid"), col("rep").as("r2")), Seq("bid"))
       .select(col("r1"), col("r2"))
       .unionByName(newCoreBase.select(col("id")).unionByName(coreDelta)
         .select(col("id").as("r1"), col("id").as("r2")))
@@ -3719,14 +3706,10 @@ object Similarity {
         col("bcls"))
       .unionByName(deltaUp.select(col("id"), col("x"), col("y"),
         col("ncnt2").as("ncnt"), lit(null).cast("array<long>").as("bcls")))
-    // Hash-build the node-or-smaller right sides (core labels, rebuilt
-    // border sets, touched ids) — the stats-dropped leaves would default
-    // the whole assembly chain to sort-merge (guide §3.1).
     merged
-      .join(clustered.hint("shuffle_hash"), Seq("id"), "left")
-      .join(rebuilt.hint("shuffle_hash"), Seq("id"), "left")
-      .join(touchedIds.withColumn("touched", lit(true))
-        .hint("shuffle_hash"), Seq("id"), "left")
+      .join(clustered, Seq("id"), "left")
+      .join(rebuilt, Seq("id"), "left")
+      .join(touchedIds.withColumn("touched", lit(true)), Seq("id"), "left")
       .select(col("id"), col("x"), col("y"), col("ncnt"),
         col("clab").as("cluster"),
         when(col("clab").isNotNull, lit(null).cast("array<long>"))
@@ -3775,7 +3758,7 @@ object Similarity {
     // (a) neighbor-count drops: deleted × remaining pairs, one grid probe.
     val p1 = ckptNoStats(gridPairs(dpts, restPts, e))
     val sub = p1.groupBy(col("bid").as("id")).agg(count(lit(1)).as("drop"))
-    val up = ckptNoStats(rest.join(sub.hint("shuffle_hash"), Seq("id"), "left")
+    val up = ckptNoStats(rest.join(sub, Seq("id"), "left")
       .withColumn("ncnt2", col("ncnt") - coalesce(col("drop"), lit(0L)))
       .withColumn("isCore", col("ncnt2") + 1 >= minPts))
     // (b)/(c) touched clusters: lost a core (deleted) or had one demote.
@@ -3805,9 +3788,8 @@ object Similarity {
     // recomputed component min (labels can INCREASE on delete — the old
     // min may be gone — but never collide: a label is a member min, and
     // components are disjoint point sets).
-    // relab is MEMBER-sized (one touched component can be big) — a plain
-    // equi-join, no broadcast or shuffle_hash hint (a hashed build side
-    // cannot spill); AQE picks the strategy.
+    // relab is MEMBER-sized (one touched component can be big) — no
+    // broadcast hint; AQE picks the strategy.
     val coreLabs = ckptNoStats(up.filter(col("isCore"))
       .join(relab, Seq("id"), "left")
       .select(col("id"), col("x"), col("y"), col("ncnt2"),
@@ -3826,21 +3808,17 @@ object Similarity {
       .select(col("id"), col("x"), col("y")), e)
     val coreCells = cells(coreLabs.select(col("id"), col("x"), col("y")), e)
     val newB = ckptNoStats(gridPairs(rebuildPts, coreCells, e)
-      .join(coreLabs.select(col("id").as("bid"), col("clab"))
-        .hint("shuffle_hash"), Seq("bid"))
+      .join(coreLabs.select(col("id").as("bid"), col("clab")), Seq("bid"))
       .groupBy(col("aid").as("id"))
       .agg(sort_array(collect_set(col("clab"))).as("bcls2")))
     // Assemble: cores drop their set; non-core rows take the rebuilt set
     // where rebuilt (absent row = no remaining core neighbor = noise),
-    // else carry the old one. Node-sized right sides hash-build — the
-    // stats-dropped leaves would default the chain to sort-merge.
+    // else carry the old one.
     up.select(col("id"), col("x"), col("y"), col("ncnt2").as("ncnt"),
         col("isCore"), col("bcls"))
-      .join(coreLabs.select(col("id"), col("clab")).hint("shuffle_hash"),
-        Seq("id"), "left")
-      .join(rebuildIds.withColumn("rebuilt", lit(true))
-        .hint("shuffle_hash"), Seq("id"), "left")
-      .join(newB.hint("shuffle_hash"), Seq("id"), "left")
+      .join(coreLabs.select(col("id"), col("clab")), Seq("id"), "left")
+      .join(rebuildIds.withColumn("rebuilt", lit(true)), Seq("id"), "left")
+      .join(newB, Seq("id"), "left")
       .select(col("id"), col("x"), col("y"), col("ncnt"),
         when(col("isCore"), col("clab"))
           .otherwise(lit(null).cast("long")).as("cluster"),

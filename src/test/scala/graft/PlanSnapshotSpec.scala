@@ -10,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * a join strategy or doubles an exchange shows up as a diff here before
   * it shows up as a benchmark regression.
   *
-  * Counts reflect the INITIAL adaptive plan on the sf0.001 fixture (AQE
-  * picks broadcast joins at this scale where sf0.1+ keeps the hinted
-  * shuffle-hash — the hint is advisory; PlanSpec pins the properties
-  * that must hold regardless). q30's BroadcastNestedLoopJoin is the
+  * Counts reflect the INITIAL adaptive plan on the sf0.001 fixture. AQE
+  * re-plans joins at run time from measured shuffle sizes, so the join
+  * a query finally runs can differ from the one counted here; PlanSpec
+  * pins the final plans of the iterative and blocking-join queries
+  * (`PlanDump.traced`). q30's BroadcastNestedLoopJoin is the
   * intentional broadcast scatter of the tiny query set — keyless by
   * design, not a regression.
   *

@@ -245,6 +245,27 @@ class PlanSpec extends SparkSpec {
       s"expected a hash-partitioned join on the bucket key:\n${p.take(1500)}")
   }
 
+  test("loop and blocking-join queries: final plans hold no cartesian or sort-merge") {
+    // These queries run most of their joins inside eager round
+    // checkpoints, whose leaves carry no stats; AQE picks each join from
+    // the measured shuffle sizes. So the plans to check are the final
+    // adaptive plans of every SQL execution the run starts.
+    // q404's one sort-merge is the census noise count's left join of the
+    // point table with the border sets (plans/hints/q404_dbscan_sf0.1.txt):
+    // neither side has a shuffle stage of its own to measure, and both
+    // are point-sized, never pair-sized.
+    val sortMerges = Map("q404_dbscan" -> 1).withDefaultValue(0)
+    Seq("q404_dbscan", "q243_sql_dedup_clusters", "q159_pagerank",
+        "q123_editdist_join", "q124_jaccard_prefix").foreach { q =>
+      val run = PlanDump.traced(spark)(SparkEntry.queries(q)(spark, sf))
+      val joins = run.joinTotals
+      assert(joins.nonEmpty, s"$q: no joins traced")
+      assert(!joins.contains("CartesianProduct"), s"$q: $joins")
+      assert(joins.getOrElse("SortMergeJoin", 0) <= sortMerges(q),
+        s"$q: $joins")
+    }
+  }
+
   test("q154 roc-auc: corpus collapses to (score, counts) partials below the exchange") {
     // The rank-sum window runs over the distinct-score relation; the
     // corpus-sized scan must reach its only exchange as map-side

@@ -1,11 +1,24 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TextKernelsSpec extends SparkSpec {
   import spark.implicits._
   import TextFunctions._
+
+  /** The exploded groupBy formulation of `PipelineOps.repetitionRatio` —
+    * the reference semantics its kernel must reproduce.
+    */
+  private def repetitionRatioRelational(df: DataFrame, idCol: String,
+      textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .filter(size(col("toks")) >= n)
+      .select(col("doc_id"), explode(ngrams(col("toks"), n)).as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
+      .agg(round(max(col("c")).cast("double") / sum(col("c")), 6).as("rep_ratio"))
 
   test("polyhash kernel equals the aggregate/split built-ins form on the corpus") {
     val bad = Tables.documents(spark, sf)
@@ -115,8 +128,7 @@ class TextKernelsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val k = graft.operators.PipelineOps
       .repetitionRatio(docs, "doc_id", "text", 3)
-    val rel = graft.operators.PipelineOps
-      .repetitionRatioRelational(docs, "doc_id", "text", 3)
+    val rel = repetitionRatioRelational(docs, "doc_id", "text", 3)
     assert(k.count() === rel.count())
     val bad = k.as("k").join(rel.as("r"), "doc_id")
       .filter($"k.rep_ratio" =!= $"r.rep_ratio")
