@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.tokens
+import FixedPoint.{bin6, fd, floorDiv}
 
 /** Analytic SQL surface beyond Relational's q01-q20 (SURVEY.md §2.5):
   * lateral/positional explode, exact percentiles, moment statistics,
@@ -378,17 +379,6 @@ object Analytics {
     * `localCheckpoint` the daily aggregate (the q66 funnel pattern) or
     * persist it — it is |key × active-days| rows, trivially cacheable.
     */
-  /** Binary-deterministic 6-decimal rounding: floor(x·1e6 + 0.5)/1e6 as
-    * plain IEEE ops, written TEXTUALLY IDENTICALLY in the oracle SQL — on
-    * bit-identical inputs both engines produce bit-identical outputs.
-    * Library round() is NOT cross-engine stable on half boundaries (Spark
-    * rounds the value's shortest decimal representation, DuckDB the
-    * binary double — an exact .xxxxxx5, common for small-denominator
-    * rationals like interpolated averages, flips between them). Valid for
-    * |x| < 2^63/1e6 ≈ 9.2e12; NULL passes through.
-    */
-  private def binRound6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-
   def gapFillDaily(df: DataFrame, keyCol: String, tsCol: String,
       valueCol: String): DataFrame = {
     val daily = df
@@ -401,7 +391,7 @@ object Analytics {
         // partition order, so engines differ by an ulp). NOT rounded here:
         // round() itself is engine-divergent on half boundaries (Spark
         // rounds the shortest decimal representation, DuckDB the binary
-        // value), so rounding happens once, at output, via binRound6.
+        // value), so rounding happens once, at output, via bin6.
         (sum(col("v").cast("decimal(38,6)")).cast("double")
           / count(lit(1))).as("day_avg"))
     val spine = daily.groupBy(col("k"))
@@ -414,7 +404,7 @@ object Analytics {
     spine.join(daily, Seq("k", "day"), "left")
       .select(col("k"), col("day"),
         coalesce(col("n_obs"), lit(0L)).as("n_obs"),
-        binRound6(last(col("day_avg"), ignoreNulls = true).over(w))
+        bin6(last(col("day_avg"), ignoreNulls = true).over(w))
           .as("filled_avg"))
   }
 
@@ -443,7 +433,7 @@ object Analytics {
         // partition order, so engines differ by an ulp). NOT rounded here:
         // round() itself is engine-divergent on half boundaries (Spark
         // rounds the shortest decimal representation, DuckDB the binary
-        // value), so rounding happens once, at output, via binRound6.
+        // value), so rounding happens once, at output, via bin6.
         (sum(col("v").cast("decimal(38,6)")).cast("double")
           / count(lit(1))).as("day_avg"))
     val spine = daily.groupBy(col("k"))
@@ -464,7 +454,7 @@ object Analytics {
         first(col("day_avg"), ignoreNulls = true).over(fwd).as("nv"),
         first(obsDay, ignoreNulls = true).over(fwd).as("nd"))
       .select(col("k"), col("day"), col("n_obs"),
-        binRound6(when(col("pd") === col("nd"), col("pv"))
+        bin6(when(col("pd") === col("nd"), col("pv"))
           .otherwise(col("pv") + (col("nv") - col("pv"))
             * datediff(col("day"), col("pd"))
             / datediff(col("nd"), col("pd"))))
@@ -615,7 +605,7 @@ object Analytics {
   // prev + (next−prev)·i/m double expression over bit-identical inputs
   // (exact-decimal day sums, datediff as integer arithmetic), and the
   // output rounding is the shared binary floor(x·1e6+0.5)/1e6 — library
-  // round() flips on exact half boundaries (see binRound6).
+  // round() flips on exact half boundaries (see FixedPoint.bin6).
   private def q125(s: SparkSession, d: String): DataFrame =
     gapFillInterpolate(Tables.events(s, d).filter(col("user_id") < 300),
         "user_id", "ts", "value")
@@ -2037,7 +2027,6 @@ object Analytics {
     markovPerplexity(Tables.events(s, d), col("user_id"),
       Seq(col("ts"), col("event_id")), col("event_type"))
   private val q401Sql = {
-    import Supervised.fd
     s"""WITH ev AS (
         SELECT user_id, event_type,
           lag(event_type) OVER (PARTITION BY user_id
@@ -2096,7 +2085,6 @@ object Analytics {
       col("o_orderkey"), round(col("o_totalprice") * 100),
       trimPerMille = 100)
   private val q402Sql = {
-    import Supervised.fd
     s"""WITH r AS (
         SELECT o_orderpriority AS g, round(o_totalprice*100)::BIGINT AS c,
           o_orderkey AS k FROM orders),
@@ -2132,9 +2120,6 @@ object Analytics {
     */
   def yuleWalkerAr2(df: DataFrame, groupCol: String, periodCol: Column,
       valueCol: Column): DataFrame = {
-    def fdC(a: Column, b: Column): Column =
-      (call_function("div", a, b) +
-        when((a % b) < 0, -1L).otherwise(0L)).cast("long")
     val m = df.select(col(groupCol).as("g"), periodCol.cast("long").as("p"),
         valueCol.cast("long").as("y"))
       .groupBy("g", "p").agg(sum("y").as("y"))
@@ -2153,9 +2138,9 @@ object Analytics {
     val den = (col("c0") * col("c0") - col("c1") * col("c1"))
       .cast("decimal(38,0)")
     c.select(col("g"),
-        fdC(((col("c1") * col("c0") - col("c1") * col("c2")) *
+        floorDiv(((col("c1") * col("c0") - col("c1") * col("c2")) *
           lit(1000000L)).cast("decimal(38,0)"), den).as("phi1_ppm"),
-        fdC(((col("c0") * col("c2") - col("c1") * col("c1")) *
+        floorDiv(((col("c0") * col("c2") - col("c1") * col("c1")) *
           lit(1000000L)).cast("decimal(38,0)"), den).as("phi2_ppm"))
       .orderBy("g")
   }
@@ -2167,7 +2152,6 @@ object Analytics {
         " + month(cast(o_orderdate as date))"),
       lit(1L))
   private[operators] val q390Sql = {
-    import Supervised.fd
     s"""WITH m AS (
         SELECT o_orderpriority AS g,
           year(o_orderdate::DATE)*12 + month(o_orderdate::DATE) AS p,
@@ -2864,7 +2848,7 @@ object Analytics {
     * stock z·σ·√L and the reorder point μ·L + safety — the operations
     * readout behind "when do we restock". Variance numerator is exact
     * decimal(38,0) algebra; the single √/÷ finish follows the repo's
-    * one-float-step + binRound6 convention (identical expression text on
+    * one-float-step + bin6 convention (identical expression text on
     * both engines, so the IEEE result is bit-stable). Demand is carried
     * in quantity-cents.
     *
@@ -3376,7 +3360,6 @@ object Analytics {
     * quartet per iteration, the [[Supervised.logisticFitSql]] pattern.
     */
   private def coxFitSql(subjSql: String, iters: Int): String = {
-    import Supervised.fd
     val levels = scala.collection.mutable.ArrayBuffer(
       s"subj AS MATERIALIZED ($subjSql)",
       "b0 AS (SELECT 0::BIGINT AS beta)")
@@ -3442,14 +3425,6 @@ object Analytics {
       eventCol.cast("long").as("e"), x1Col.cast("long").as("x1"),
       x2Col.cast("long").as("x2")).persist()
     try {
-      def fdC(a: Column, b: Column): Column =
-        (call_function("div", a.cast("decimal(38,0)"), b) +
-          when((a.cast("decimal(38,0)") % b) < 0, -1L).otherwise(0L))
-          .cast("long")
-      def fdB(a: BigInt, b: BigInt): BigInt = {
-        val (q, rem) = a /% b
-        if (rem.signum != 0 && rem.signum != b.signum) q - 1 else q
-      }
       var b1 = BigInt(0); var b2 = BigInt(0)
       var lastU1 = BigInt(0); var lastU2 = BigInt(0)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("t").desc)
@@ -3473,19 +3448,16 @@ object Analytics {
           sum(col("sw11")).over(w).as("s11"),
           sum(col("sw12")).over(w).as("s12"),
           sum(col("sw22")).over(w).as("s22"))
-        def bq(sj: String) = fdC(col(sj) * lit(1000000L), col("s0"))
+        def bq(sj: String) =
+          floorDiv((col(sj) * lit(1000000L)).cast("decimal(38,0)"), col("s0"))
+        def bb(si: String, sj: String) =
+          floorDiv((bq(si) * bq(sj)).cast("decimal(38,0)"), lit(1000000L))
         val ui = rs.filter(col("d") > 0).agg(
           sum(col("dx1") * lit(1000000L) - col("d") * bq("s1")).as("u1"),
           sum(col("dx2") * lit(1000000L) - col("d") * bq("s2")).as("u2"),
-          sum(col("d") * (fdC(col("s11") * lit(1000000L), col("s0")) -
-            fdC((bq("s1") * bq("s1")).cast("decimal(38,0)"),
-              lit(1000000L)))).as("i11"),
-          sum(col("d") * (fdC(col("s12") * lit(1000000L), col("s0")) -
-            fdC((bq("s1") * bq("s2")).cast("decimal(38,0)"),
-              lit(1000000L)))).as("i12"),
-          sum(col("d") * (fdC(col("s22") * lit(1000000L), col("s0")) -
-            fdC((bq("s2") * bq("s2")).cast("decimal(38,0)"),
-              lit(1000000L)))).as("i22"))
+          sum(col("d") * (bq("s11") - bb("s1", "s1"))).as("i11"),
+          sum(col("d") * (bq("s12") - bb("s1", "s2"))).as("i12"),
+          sum(col("d") * (bq("s22") - bb("s2", "s2"))).as("i22"))
           .head()
         val (u1, u2) = (BigInt(ui.getLong(0)), BigInt(ui.getLong(1)))
         val (i11, i12, i22) = (BigInt(ui.getLong(2)), BigInt(ui.getLong(3)),
@@ -3493,8 +3465,8 @@ object Analytics {
         lastU1 = u1; lastU2 = u2
         val det = i11 * i22 - i12 * i12
         if (det > 0) {
-          b1 += fdB((i22 * u1 - i12 * u2) * 1000000, det)
-          b2 += fdB((i11 * u2 - i12 * u1) * 1000000, det)
+          b1 += floorDiv((i22 * u1 - i12 * u2) * 1000000, det)
+          b2 += floorDiv((i11 * u2 - i12 * u1) * 1000000, det)
         }
       }
       val counts = subj.agg(sum("e"), count(lit(1))).head()
@@ -3522,7 +3494,6 @@ object Analytics {
     coxFit2(cust, col("dur"), col("ev"), col("x1"), col("x2"), iters = 6)
   }
   private def coxFit2Sql(subjSql: String, iters: Int): String = {
-    import Supervised.fd
     val levels = scala.collection.mutable.ArrayBuffer(
       s"subj AS MATERIALIZED ($subjSql)",
       "b0 AS (SELECT 0::BIGINT AS b1, 0::BIGINT AS b2)")
@@ -3664,10 +3635,6 @@ object Analytics {
     val subj = df.select(durationCol.cast("long").as("t"),
       eventCol.cast("long").as("e"), xCol.cast("long").as("x")).persist()
     try {
-      def fdC(a: Column, b: Column): Column =
-        (call_function("div", a.cast("decimal(38,0)"), b) +
-          when((a.cast("decimal(38,0)") % b) < 0, -1L).otherwise(0L))
-          .cast("long")
       var beta = BigInt(0)
       var lastU = BigInt(0)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("t").desc)
@@ -3683,20 +3650,17 @@ object Analytics {
         val rs = byt.select(col("t"), col("d"), col("dx"),
           sum(col("sw")).over(w).as("s0"), sum(col("swx")).over(w).as("s1"),
           sum(col("swx2")).over(w).as("s2"))
-        val b = fdC(col("s1") * lit(1000000L), col("s0"))
+        def bq(sj: String) =
+          floorDiv((col(sj) * lit(1000000L)).cast("decimal(38,0)"), col("s0"))
+        val b = bq("s1")
         val ui = rs.filter(col("d") > 0).agg(
-          sum(col("dx") * lit(1000000L) -
-            col("d") * fdC(col("s1") * lit(1000000L), col("s0"))).as("u"),
-          sum(col("d") * (fdC(col("s2") * lit(1000000L), col("s0")) -
-            fdC((b * b).cast("decimal(38,0)"), lit(1000000L)))).as("i"))
+          sum(col("dx") * lit(1000000L) - col("d") * b).as("u"),
+          sum(col("d") * (bq("s2") -
+            floorDiv((b * b).cast("decimal(38,0)"), lit(1000000L)))).as("i"))
           .head()
         val (u, inf) = (BigInt(ui.getLong(0)), BigInt(ui.getLong(1)))
         lastU = u
-        if (inf > 0) {
-          val (q, rem) = (u * 1000000) /% inf
-          beta += (if (rem.signum != 0 && rem.signum != inf.signum) q - 1
-            else q)
-        }
+        if (inf > 0) beta += floorDiv(u * 1000000, inf)
       }
       val counts = subj.agg(sum("e"), count(lit(1))).head()
       s.createDataset(Seq(
@@ -5387,7 +5351,7 @@ object Analytics {
             val sd = sqrt((col("n") * col("sgg") - col("sg") * col("sg"))
               .cast("double"))
             val mu = col("sg").cast("double")
-            floor((sd - mu) / (sd + mu) * lit(1e6) + lit(0.5)) / lit(1e6)
+            bin6((sd - mu) / (sd + mu))
           }.as("burstiness"))
   }
 

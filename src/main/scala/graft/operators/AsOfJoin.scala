@@ -185,23 +185,4 @@ object AsOfJoin {
     GraftShim.ofRows(left.sparkSession,
       graft.plans.AsOfJoinNode(ls, rs, lk, rk, lt, rt, payload, payloadOut, direction))
   }
-
-  /** Range join: left rows matched to right rows of the same key with
-    * rightTime in [leftTime - before, leftTime + after]. Spark plans this as
-    * an equi-join on the keys with the range as a post-filter, so it shuffles
-    * once on the key; for keyless range joins prefer bucketing the time axis.
-    */
-  def rangeJoin(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      before: Column,
-      after: Column): DataFrame = {
-    val cond = keys.map(k => left(k) === right(k)).reduce(_ && _) &&
-      right(rightTime) >= left(leftTime) - before &&
-      right(rightTime) <= left(leftTime) + after
-    left.join(right, cond, "inner")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed (pre-shuffled) tables for co-located joins — the storage-side
   * answer to the biggest shuffle in a pipeline (SURVEY.md §4).
@@ -33,14 +33,4 @@ object Bucketing {
     df.write.mode("append")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
-
-  /** Join two same-bucket-count tables on their bucket keys: planner emits
-    * a sort-merge join with NO exchange on either side.
-    */
-  def colocatedJoin(spark: SparkSession, left: String, right: String,
-      leftKey: String, rightKey: String): DataFrame = {
-    val l = spark.table(left)
-    val r = spark.table(right)
-    l.join(r, l(leftKey) === r(rightKey))
-  }
 }

@@ -1,0 +1,48 @@
+package graft.operators
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+/** The two rounding rules every fixed-point operator rounds with, and the
+  * oracle's spelling of the first. Operators keep their state in exact
+  * integers and round at one site, so a query gives the same bits as its
+  * DuckDB oracle under any partitioning — and a recomputed partition
+  * gives the same bits as the lost one.
+  *
+  * Floor division: Spark's `div` (like DuckDB's `//`) truncates toward
+  * zero; adding −1 when the remainder is negative makes it a floor. The
+  * Column form and [[fd]] assume a positive divisor (for b < 0 they are
+  * not a floor), and parity needs the two to agree, so neither is
+  * "fixed" alone. The BigInt form is a true floor for either sign.
+  *
+  * `bin6`: round half up to 6 decimals, floor(x·1e6 + 0.5)/1e6, as plain
+  * IEEE ops written the same way in the oracle SQL, so bit-identical
+  * inputs give bit-identical outputs. Library `round()` is not stable
+  * across engines on half boundaries: Spark rounds the value's shortest
+  * decimal form, DuckDB the binary double, and an exact .xxxxxx5 (common
+  * for small-denominator rationals) flips between them. Valid for
+  * |x| < 2^63/1e6 ≈ 9.2e12; NULL passes through.
+  */
+private[operators] object FixedPoint {
+
+  /** floor(a / b) for b > 0, as a long. */
+  def floorDiv(a: Column, b: Column): Column =
+    (call_function("div", a, b) +
+      when((a % b) < 0, -1L).otherwise(0L)).cast("long")
+
+  /** floor(a / b) for either sign of b. */
+  def floorDiv(a: BigInt, b: BigInt): BigInt = {
+    val (q, rem) = a /% b
+    if (rem.signum != 0 && rem.signum != b.signum) q - 1 else q
+  }
+
+  /** x rounded half up to 6 decimals. */
+  def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+
+  /** Oracle-side floor division (both engines' `//`/`div` truncate
+    * toward zero; the remainder-sign correction makes it a floor —
+    * [[Analytics.floorDivSql]] in DuckDB spelling).
+    */
+  def fd(a: String, b: String): String =
+    s"(($a)//($b) + (case when ($a) % ($b) < 0 then -1 else 0 end))"
+}

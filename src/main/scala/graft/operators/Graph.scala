@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import FixedPoint.bin6
 import org.apache.spark.sql.graftshim.GraftShim
 
 /** Iterative graph propagation — the execution class behind influence /
@@ -55,24 +56,19 @@ object Graph {
       iterations: Int, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1, "pagerank needs at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "damping is a percent")
-    // Materialize the edge list ONCE, PRE-PARTITIONED on src — every
-    // iteration joins it on src. This is the local-mode analogue of the
-    // 100-TB advice below: bucket the edge list by src so iterations
-    // reuse the layout.
-    val e0 = edges
+    // Materialize the edge list ONCE — every iteration joins it on src.
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = e0.repartition(col("src")).localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     // Node universe WITH out-degree fused in: the rank relation carries
     // `deg` through every iteration, so the contribution step needs no
-    // per-iteration degree join. Pre-partitioned on id: the per-
-    // iteration settle join receives inSums already hash-partitioned on
-    // dst from its aggregation, so neither side exchanges.
+    // per-iteration degree join.
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodesDeg0 = e.select(col("src").as("id"))
+    val nodesDeg = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .join(deg, col("id") === col("src"), "left")
       .select(col("id"), col("deg"))
-    val nodesDeg = nodesDeg0.repartition(col("id")).localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
+      .localCheckpoint() // stats-ok: loop INPUT materialized once, not round state
     // |V| as a driver-side scalar for the integer dangling share (one
     // count job over the node set — metadata, not data).
     val nNodes = nodesDeg.count()
@@ -225,7 +221,7 @@ object Graph {
     * relation so the score is internally consistent.
     *
     * Determinism: integer counts, one √·÷ double finish on the
-    * identical path both engines, binRound6 (Salton ∈ [0, 1] — no −0.0
+    * identical path both engines, bin6 (Salton ∈ [0, 1] — no −0.0
     * class).
     */
   /** The capped (key, item) relation every co-occurrence consumer
@@ -253,9 +249,8 @@ object Graph {
     co.join(deg.select(col("i").as("i1"), col("d").as("d1")), Seq("i1"))
       .join(deg.select(col("i").as("i2"), col("d").as("d2")), Seq("i2"))
       .select(col("i1"), col("i2"), col("w"), col("d1"), col("d2"),
-        (floor(col("w").cast("double")
-          / sqrt((col("d1") * col("d2")).cast("double")) * lit(1e6)
-          + lit(0.5)) / lit(1e6)).as("salton"))
+        bin6(col("w").cast("double")
+          / sqrt((col("d1") * col("d2")).cast("double"))).as("salton"))
 
   def saltonPairs(pairs: DataFrame, keyCol: String, itemCol: String,
       maxItemsPerKey: Int): DataFrame = {
@@ -1581,11 +1576,10 @@ object Graph {
       .select(col("mm").as("n_endpoints"),
         when(col("mm") * col("sjj") === col("sj") * col("sj"),
           lit(null).cast("double"))
-          .otherwise(floor(
+          .otherwise(bin6(
             (col("mm") * col("sjk") - col("sj") * col("sj")).cast("double")
               / (col("mm") * col("sjj") - col("sj") * col("sj"))
-              .cast("double")
-              * lit(1e6) + lit(0.5)) / lit(1e6))
+              .cast("double")))
           .as("assortativity"))
   }
 

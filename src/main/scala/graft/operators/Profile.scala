@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import FixedPoint.bin6
 
 /** Dataset hygiene operators every large-scale pipeline runs before (and
   * after) a training build: one-pass column profiling and latest-record-
@@ -885,7 +886,6 @@ object Profile {
     val cb = joined.groupBy(col("lb").as("lab")).agg(count(lit(1)).as("cb"))
     val chance = ca.join(cb, "lab")
       .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("s"))
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     tot.crossJoin(broadcast(chance))
       .select(col("n").as("n_items"), col("agree").as("n_agree"),
         bin6(col("agree").cast("double") / col("n")).as("po"),
@@ -983,7 +983,6 @@ object Profile {
       else
         DistributedPrefix.cumSums(byScore, Nil, Seq(col("s")), Seq("g"))
           .withColumn("neg_lt", col("cum_g") - col("g"))
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     ranked
       .agg(sum(col("p")).as("n_pos"), sum(col("g")).as("n_neg"),
         sum(col("p") * (lit(2L) * col("neg_lt") + col("g"))).as("u2"))
@@ -1029,7 +1028,7 @@ object Profile {
     *
     * Cross-engine determinism: with weights x sorted ascending and
     * ranked i = 1..n,  G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx) — exact
-    * BIGINT numerator and denominator, ONE double division, binRound6.
+    * BIGINT numerator and denominator, ONE double division, bin6.
     * Rank assignment among equal weights is arbitrary but Σ i·xᵢ is
     * invariant under permuting ties, so the output is deterministic.
     * Zero total (or an empty input) yields null on both engines.
@@ -1043,7 +1042,6 @@ object Profile {
     val ranked = grouped
       .select(col(valueCol).cast("long").as("x"))
       .withColumn("i", row_number().over(Window.orderBy(col("x"))))
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     ranked
       .agg(count(lit(1)).as("n_groups"), sum(col("x")).as("total"),
         sum(col("i").cast("long") * col("x")).as("s1"))
@@ -1094,7 +1092,6 @@ object Profile {
           .cumSums(byScore, Nil, Seq(col("s").desc), Seq("p", "g"))
           .select(col("s"), col("cum_p").as("tp"), col("cum_g").as("fp"))
     val tot = byScore.agg(sum(col("p")).as("pos"), sum(col("g")).as("neg"))
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     cum.crossJoin(broadcast(tot))
       .select(col("s").as("threshold"), col("tp"), col("fp"),
         (col("pos") - col("tp")).as("fn"), (col("neg") - col("fp")).as("tn"),
@@ -1147,7 +1144,7 @@ object Profile {
     *   ARI = 2·(I2·n2 − A2·B2) / (n2·(A2+B2) − 2·A2·B2)
     * — exact BIGINT numerator and denominator (safe through ~10⁶ rows;
     * beyond, promote the factor chain to doubles in fixed order), ONE
-    * double division + binRound6. Degenerate partitions (both trivial:
+    * double division + bin6. Degenerate partitions (both trivial:
     * everything one cluster, or all singletons) make the denominator 0
     * → null on both engines.
     *
@@ -1164,7 +1161,6 @@ object Profile {
       .agg(sum(col("ai") * (col("ai") - 1)).as("a2"))
     val rb = cells.groupBy(col("b")).agg(sum(col("nij")).as("bj"))
       .agg(sum(col("bj") * (col("bj") - 1)).as("b2"))
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val n2 = col("n") * (col("n") - 1)
     val den = n2 * (col("a2") + col("b2")) - lit(2L) * col("a2") * col("b2")
     tot.crossJoin(broadcast(ra)).crossJoin(broadcast(rb))
@@ -2491,7 +2487,6 @@ object Profile {
     val t = (dd("s_a") / dd("n_a") - dd("s_b") / dd("n_b")) / sqrt(se2)
     val nu = (se2 * se2) /
       (sea * sea / (dd("n_a") - lit(1d)) + seb * seb / (dd("n_b") - lit(1d)))
-    def bin6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val degenerate = col("n_a") < 2 || col("n_b") < 2 || se2 <= lit(0d)
     def meanMicro(s: String, n: String) =
       expr(s"""cast((case when $s < 0 then -1L else 1L end)
@@ -3912,13 +3907,12 @@ object Profile {
             || col("n") * col("sxx") === col("sx") * col("sx")
             || col("n") * col("syy") === col("sy") * col("sy"),
           lit(null).cast("double"))
-          .otherwise(floor(
+          .otherwise(bin6(
             (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
               / (sqrt((col("n") * col("sxx") - col("sx") * col("sx"))
                   .cast("double"))
                 * sqrt((col("n") * col("syy") - col("sy") * col("sy"))
-                  .cast("double")))
-              * lit(1e6) + lit(0.5)) / lit(1e6))
+                  .cast("double")))))
           .as("rho"))
   }
 

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{doti, quantize8}
+import FixedPoint.{fd, floorDiv}
 
 /** Retrieval-quality metrics over ranked candidate lists, plus the
   * quantized (ADC-style) ranking path they evaluate — the acceptance
@@ -433,9 +434,6 @@ object Ranking {
     require(iters >= 1 && topUsers >= 1, "need iters >= 1, topUsers >= 1")
     val s = ratings.sparkSession
     import s.implicits._
-    def fdC(a: Column, b: Column): Column =
-      (call_function("div", a, b) +
-        when((a % b) < 0, -1L).otherwise(0L)).cast("long")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val r = ratings.select(userCol.cast("string").as("i"),
         itemCol.cast("string").as("j"), valueCol.cast("long").as("r"))
@@ -459,11 +457,11 @@ object Ranking {
           .groupBy("i")
           // Widen ONE operand before each product (the oracle's
           // ::HUGEINT placement) — a LONG r·v_micro wraps at r ~ 1e13.
-          .agg(fdC(dec(sum(dec(col("r")) * col("v"))) * sc,
+          .agg(floorDiv(dec(sum(dec(col("r")) * col("v"))) * sc,
             dec(sum(dec(col("v")) * col("v")))).as("u"))
         v = r.join(u, Seq("i"))
           .groupBy("j")
-          .agg(fdC(dec(sum(dec(col("r")) * col("u"))) * sc,
+          .agg(floorDiv(dec(sum(dec(col("r")) * col("u"))) * sc,
             dec(sum(dec(col("u")) * col("u")))).as("v"))
           .as[(String, Long)].collect().sortBy(_._1).toSeq
       }
@@ -490,7 +488,6 @@ object Ranking {
     */
   private def alsRank1Sql(ratingsSql: String, iters: Int,
       topUsers: Int): String = {
-    import Supervised.fd
     // HUGEINT keeps the quotient exact — DuckDB's DECIMAL `//` detours
     // through doubles past 2^53 (Spark's Decimal quotient is exact).
     def upd(num: String, den: String) =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim.{ckptNoStats, release}
 import graft.functions.TextFunctions.{cosine, doti, quantize8}
+import FixedPoint.{bin6, fd, floorDiv}
 
 /** Vector similarity search over embedding columns (SURVEY.md §2.6).
   * Parameterized library functions plus fixture-bound oracle queries.
@@ -732,7 +733,7 @@ object Similarity {
     *
     * Cross-engine determinism: concordant/discordant PAIR COUNTS are
     * exact integers and tau = 2(C − D)/(m(m − 1)) is one double
-    * division + binRound6; rankings are permutations (row_number), so
+    * division + bin6; rankings are permutations (row_number), so
     * no pair product is ever zero and C + D = m(m−1)/2. Groups with
     * fewer than two common items have no pairs — tau is null, not an
     * error.
@@ -768,11 +769,10 @@ object Similarity {
         coalesce(col("n_concordant"), lit(0L)).as("n_concordant"),
         coalesce(col("n_discordant"), lit(0L)).as("n_discordant"),
         when(col("n_common") < 2, lit(null).cast("double"))
-          .otherwise(floor(
+          .otherwise(bin6(
             (lit(2) * (coalesce(col("n_concordant"), lit(0L))
               - coalesce(col("n_discordant"), lit(0L)))).cast("double")
-              / (col("n_common") * (col("n_common") - 1))
-              * lit(1e6) + lit(0.5)) / lit(1e6))
+              / (col("n_common") * (col("n_common") - 1))))
           .as("tau"))
   }
 
@@ -1546,7 +1546,7 @@ object Similarity {
       .join(norms.select(col("doc_id").as("b"), col("norm_sq").as("nb")), "b")
       .filter(cos >= minCos)
       .select(col("a"), col("b"), col("dot"), col("na"), col("nb"),
-        (floor(cos * lit(1e6) + lit(0.5)) / lit(1e6)).as("cos"))
+        bin6(cos).as("cos"))
   }
 
   // ---- q150: sparse tf-vector cosine pairs -----------------------------------
@@ -1968,7 +1968,7 @@ object Similarity {
     * and the per-(group, cohort, pos) means are BIGINT (sign-split
     * floor), and the centroid cosine's dot/norms accumulate as exact
     * BIGINTs over positions — ONE double finish (sqrt·sqrt·divide,
-    * correctly-rounded single ops), binRound6, −0.0-canonicalized.
+    * correctly-rounded single ops), bin6, −0.0-canonicalized.
     *
     * Scale: the corpus collapses to (group, cohort, pos) partials below
     * the one exchange — dims·|groups|·2 rows; everything after is
@@ -2375,7 +2375,6 @@ object Similarity {
     */
   private def kmeansCtes(k: Int, iters: Int, d: Int)
       : (Seq[String], String) = {
-    import Supervised.fd
     val levels = scala.collection.mutable.ArrayBuffer(
       """q8 AS MATERIALIZED (
         SELECT vec_id AS vid, list_transform(embedding, x -> floor(x::DOUBLE /
@@ -2401,7 +2400,6 @@ object Similarity {
   }
 
   private val q381Sql = {
-    import Supervised.fd
     val (levels, cFin) = kmeansCtes(k = 4, iters = 3, d = 64)
     s"""WITH ${(levels :+ kmAssignLevel("fin", "q8", cFin, 64))
         .mkString(",\n")}
@@ -3390,13 +3388,6 @@ object Similarity {
       .unionByName(affState)
   }
 
-  /** Floor division a div b: rounds toward -inf where SQL `div`
-    * truncates, so negative coordinates get the right cell or midpoint.
-    */
-  private def fdiv(a: Column, b: Column): Column =
-    (call_function("div", a, b) +
-      when((a % b) < 0, -1L).otherwise(0L)).cast("long")
-
   /** A coordinate or vector component in exact micro units,
     * floor(c·1e6) as a long.
     */
@@ -3405,7 +3396,8 @@ object Similarity {
 
   /** Adds the eps-sized grid cell (cx, cy) of micro points (x, y). */
   private def cells(df: DataFrame, e: Column): DataFrame = df
-    .withColumn("cx", fdiv(col("x"), e)).withColumn("cy", fdiv(col("y"), e))
+    .withColumn("cx", floorDiv(col("x"), e))
+    .withColumn("cy", floorDiv(col("y"), e))
 
   /** Grid points (id, x, y, cx, cy) of a 2-D point table. */
   private def gridPoints(points: DataFrame, idCol: String, xCol: Column,
@@ -3888,7 +3880,7 @@ object Similarity {
       }
       val joined = asg.join(pts, Seq("id")).withColumn("v", v)
       val splits = onSplits(level, joined.groupBy("tree", "node")
-        .agg(fdiv(min(col("v")) + max(col("v")), lit(2L)).as("mid")))
+        .agg(floorDiv(min(col("v")) + max(col("v")), lit(2L)).as("mid")))
       joined.join(broadcast(splits), Seq("tree", "node"))
         .select(col("id"), col("tree"),
           (col("node") * 2 + when(col("v") > col("mid"), 1L).otherwise(0L))
@@ -4027,7 +4019,6 @@ object Similarity {
     */
   private def hstOutliersSql(dimsSql: String, k: Int, depth: Int,
       topN: Int): String = {
-    import Supervised.fd
     val levels = scala.collection.mutable.ArrayBuffer(
       s"pts AS MATERIALIZED ($dimsSql)",
       ("a0 AS (SELECT id, t AS tree, 0::BIGINT AS node FROM pts, " +

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import FixedPoint.{fd, floorDiv}
 
 /** Supervised learning primitives as pure aggregation pipelines — the
   * "train a small model inside the warehouse" surface (reference:
@@ -19,9 +20,8 @@ import org.apache.spark.sql.functions._
   * floating-point op — the per-row sigmoid — is a pure function of
   * exact integer inputs, and the sum itself is order-independent
   * integer addition. The weight update is floor-division integer
-  * algebra (`Math.floorDiv` here, the `// + remainder-sign` idiom in
-  * the oracle — both engines truncate toward zero, so the correction
-  * term makes both a true floor). The oracle replays the identical
+  * algebra ([[FixedPoint]] holds the rule and its oracle spelling,
+  * [[FixedPoint.fd]]). The oracle replays the identical
   * fold as an UNROLLED per-iteration CTE chain (the [[Graph.kCore]]
   * generated-peel pattern).
   *
@@ -62,27 +62,33 @@ object Supervised {
     } else (p0, n)
   }
 
-  /** The quantized sigmoid of w·x over columns x0..x{k-1}: z from the
-    * EXACT integer dot product; p quantized to 1/2^20 before anything
-    * is summed (the one float op, a pure function of integer inputs).
-    */
-  private def sigmoidQ(w: Array[Long], k: Int): Column = {
-    val z = (0 until k).map(j => lit(w(j)) * col(s"x$j"))
+  /** w·x/10⁶ over columns x0..x{k-1}, from the EXACT integer dot product. */
+  private def wx(w: Array[Long], k: Int): Column =
+    (0 until k).map(j => lit(w(j)) * col(s"x$j"))
       .reduce(_ + _).cast("double") / lit(1e6)
+
+  /** The quantized sigmoid of z: p quantized to 1/2^20 before anything is
+    * summed (the one float op, a pure function of integer inputs).
+    */
+  private def sigmoidQ(z: Column): Column =
     floor(lit(1.0) / (lit(1.0) + exp(-z)) * lit(SigScale.toDouble) +
       lit(0.5)).cast("long")
-  }
 
-  /** The shared full-batch logistic GD loop over a persisted cell table
-    * (columns y, x0.., cnt): T iterations, each ONE map-side-partial
-    * aggregation; returns the fitted weights in micros. Used by
-    * [[logisticFit]] (the readout) and [[ipwAte]] (the propensity).
+  /** The quantized sigmoid of w·x over columns x0..x{k-1}. */
+  private def sigmoidQ(w: Array[Long], k: Int): Column = sigmoidQ(wx(w, k))
+
+  /** The shared full-batch GD loop over a persisted cell table (columns
+    * y, x0.., cnt): T iterations, each ONE map-side-partial aggregation
+    * of the residual link(w) − y·2^20; returns the fitted weights in
+    * micros. `link` is the quantized mean response at weights w: the
+    * sigmoid for [[logisticFit]], [[ipwAte]] and [[psmAtt]], the clamped
+    * exp for [[poissonFit]].
     */
   private def gdWeights(cells: DataFrame, k: Int, n: Long, den: Long,
-      iters: Int): Array[Long] = {
+      iters: Int, link: Array[Long] => Column): Array[Long] = {
     val w = Array.fill(k)(0L)
     for (_ <- 1 to iters) {
-      val r = (sigmoidQ(w, k) - col("y") * lit(SigScale)).as("r")
+      val r = (link(w) - col("y") * lit(SigScale)).as("r")
       val g = cells.select((r +: col("cnt") +:
           (0 until k).map(j => col(s"x$j"))): _*)
         .agg(sum(col("r") * col("x0") * col("cnt")).as("g0"),
@@ -126,7 +132,7 @@ object Supervised {
       .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt")))
     try {
       require(n > 0, "logisticFit needs rows")
-      val w = gdWeights(proj, k, n, den, iters)
+      val w = gdWeights(proj, k, n, den, iters, sigmoidQ(_, k))
       // One scoring pass with the final weights: predict 1 iff p >= 1/2,
       // i.e. quantized p >= 2^19 — integer compare, no tie ambiguity.
       val pred = sigmoidQ(w, k) >= lit(SigScale / 2)
@@ -138,13 +144,6 @@ object Supervised {
       s.createDataset(rows).toDF("term", "value").orderBy("term")
     } finally proj.unpersist()
   }
-
-  /** Oracle-side floor division (both engines' `//`/`div` truncate
-    * toward zero; the remainder-sign correction makes it a floor —
-    * [[Analytics.floorDivSql]] in DuckDB spelling).
-    */
-  private[operators] def fd(a: String, b: String): String =
-    s"(($a)//($b) + (case when ($a) % ($b) < 0 then -1 else 0 end))"
 
   /** Generated unrolled-fold oracle for [[logisticFit]]: w0 carries the
     * zero weights, then per iteration one gradient CTE over the feature
@@ -248,16 +247,12 @@ object Supervised {
         s2 * (s1 * s2y - s1y * s2)
       val det2 = n * (s11 * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2) +
         sy * (s1 * s12 - s11 * s2)
-      def fdB(a: BigInt, b: BigInt): BigInt = {
-        val (q, rem) = a /% b
-        if (rem.signum != 0 && (rem.signum != b.signum)) q - 1 else q
-      }
       val M = BigInt(1000000)
-      val (b0, b1, b2) = (fdB(det0 * M, det), fdB(det1 * M, det),
-        fdB(det2 * M, det))
+      val (b0, b1, b2) = (floorDiv(det0 * M, det), floorDiv(det1 * M, det),
+        floorDiv(det2 * M, det))
       require(b0.isValidLong && b1.isValidLong && b2.isValidLong,
         "olsFit2: coefficient out of BIGINT micro range — rescale inputs")
-      val ym = fdB(sy * M, n)
+      val ym = floorDiv(sy * M, n)
       val resid = (col("y") * lit(1000000L) - (lit(b0.toLong) +
         lit(b1.toLong) * col("x1") + lit(b2.toLong) * col("x2")))
         .cast("decimal(38,0)")
@@ -267,7 +262,7 @@ object Supervised {
         .head()
       val (sse, sst) = (BigInt(e.getDecimal(0).toBigInteger),
         BigInt(e.getDecimal(1).toBigInteger))
-      val r2 = if (sst == 0) BigInt(0) else M - fdB(sse, fdB(sst, M))
+      val r2 = if (sst == 0) BigInt(0) else M - floorDiv(sse, floorDiv(sst, M))
       s.createDataset(Seq(
         ("b0_micro", b0.toLong), ("b1_micro", b1.toLong),
         ("b2_micro", b2.toLong), ("n_rows", n.toLong),
@@ -308,12 +303,8 @@ object Supervised {
     require(m.getLong(0) > 2, "ridgePath2 needs more rows than parameters")
     val Seq(n, s1, s2, s11, s12, s22, sy, s1y, s2y, syy) =
       (0 until 10).map(i => BigInt(m.getLong(i)))
-    def fdB(a: BigInt, b: BigInt): BigInt = {
-      val (q, rem) = a /% b
-      if (rem.signum != 0 && (rem.signum != b.signum)) q - 1 else q
-    }
     val M = BigInt(1000000)
-    val ym = fdB(sy * M, n)
+    val ym = floorDiv(sy * M, n)
     val sst = M * M * syy - 2 * ym * M * sy + n * ym * ym
     val rows = lambdas.map { lam =>
       val (a, c) = (s11 + lam, s22 + lam)
@@ -326,15 +317,15 @@ object Supervised {
         s2 * (s1 * s2y - s1y * s2)
       val det2 = n * (a * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2) +
         sy * (s1 * s12 - a * s2)
-      val (b0, b1, b2) = (fdB(det0 * M, det), fdB(det1 * M, det),
-        fdB(det2 * M, det))
+      val (b0, b1, b2) = (floorDiv(det0 * M, det), floorDiv(det1 * M, det),
+        floorDiv(det2 * M, det))
       require(b0.isValidLong && b1.isValidLong && b2.isValidLong,
         "ridgePath2: coefficient out of BIGINT micro range — rescale")
       // SSE from moments with the UNPENALIZED data sums.
       val sse = M * M * syy + n * b0 * b0 + b1 * b1 * s11 +
         b2 * b2 * s22 - 2 * M * (b0 * sy + b1 * s1y + b2 * s2y) +
         2 * (b0 * b1 * s1 + b0 * b2 * s2 + b1 * b2 * s12)
-      val r2 = if (sst == 0) BigInt(0) else M - fdB(sse, fdB(sst, M))
+      val r2 = if (sst == 0) BigInt(0) else M - floorDiv(sse, floorDiv(sst, M))
       (lam, b0.toLong, b1.toLong, b2.toLong, r2.toLong)
     }
     s.createDataset(rows)
@@ -631,7 +622,7 @@ object Supervised {
       .agg(count(lit(1)).as("cnt"), sum("yo").as("sy")))
     try {
       require(n > 0, "ipwAte needs rows")
-      val w = gdWeights(cells, k, n, den, iters)
+      val w = gdWeights(cells, k, n, den, iters, sigmoidQ(_, k))
       val pc = greatest(lit(1L), least(lit(SigScale - 1), sigmoidQ(w, k)))
       val wt = when(col("y") === 1L,
           call_function("div", lit(SigScale * 1000000L), pc))
@@ -657,11 +648,12 @@ object Supervised {
       val (nt, nc) = (r.getLong(0), r.getLong(1))
       require(nt > 0 && nc > 0, "ipwAte needs both treated and control rows")
       def bi(i: Int) = BigInt(r.getDecimal(i).toBigInteger)
-      def fdB(a: BigInt, b: BigInt): Long =
-        { val q = a / b; (if (a % b < 0) q - 1 else q).toLong }
-      val naive = fdB(BigInt(r.getLong(2)) * 10000, BigInt(nt)) -
-        fdB(BigInt(r.getLong(3)) * 10000, BigInt(nc))
-      val ate = fdB(bi(4) * 10000, bi(6)) - fdB(bi(5) * 10000, bi(7))
+      // Every divisor is a row count or a sum of weights >= 1, so it is
+      // positive and the oracle's fd floors it the same way.
+      val naive = (floorDiv(BigInt(r.getLong(2)) * 10000, BigInt(nt)) -
+        floorDiv(BigInt(r.getLong(3)) * 10000, BigInt(nc))).toLong
+      val ate = (floorDiv(bi(4) * 10000, bi(6)) -
+        floorDiv(bi(5) * 10000, bi(7))).toLong
       s.createDataset(Seq((nt, nc, naive, ate)))
         .toDF("n_treated", "n_control", "naive_diff_micro", "ate_ipw_micro")
     } finally cells.unpersist()
@@ -731,12 +723,10 @@ object Supervised {
         sum(when(col("t") === 0L, col("cnt")).otherwise(0L)).as("n0"),
         sum(when(col("t") === 1L, col("sy")).otherwise(0L)).as("sy1"),
         sum(when(col("t") === 0L, col("sy")).otherwise(0L)).as("sy0"))
-    def fdc(a: Column, b: Column): Column =
-      (call_function("div", a, b) +
-        when((a % b) < 0, -1L).otherwise(0L)).cast("long")
     val kept = strata.filter(col("n1") > 0 && col("n0") > 0)
       .withColumn("diff_micro",
-        fdc(col("sy1") * 10000, col("n1")) - fdc(col("sy0") * 10000, col("n0")))
+        floorDiv(col("sy1") * 10000, col("n1")) -
+          floorDiv(col("sy0") * 10000, col("n0")))
     val r = kept.agg(count(lit(1)).as("n_strata"),
         sum(col("n1") + col("n0")).as("n_kept"),
         // Widen BEFORE the product (the oracle's ::HUGEINT placement) —
@@ -747,16 +737,13 @@ object Supervised {
         strata.agg(sum(col("n1") + col("n0")).as("n_total"))))
       .select(col("n_strata"), col("n_kept"),
         (col("n_total") - col("n_kept")).as("n_dropped"),
-        ((call_function("div", col("wsum"),
-            col("n_kept").cast("decimal(38,0)")) +
-          when((col("wsum") % col("n_kept").cast("decimal(38,0)")) < 0, -1L)
-            .otherwise(0L)).cast("long")).as("ate_gcomp_micro"))
+        floorDiv(col("wsum"), col("n_kept").cast("decimal(38,0)"))
+          .as("ate_gcomp_micro"))
     r
   }
 
   /** Oracle for [[gcompAte]] — the same two group-bys and floors. */
   private def gcompAteSql(projSql: String, k: Int): String = {
-    import Supervised.fd
     val xs = (0 until k).map(j => s"x$j").mkString(", ")
     s"""WITH f AS MATERIALIZED ($projSql),
       cells AS (SELECT t, $xs, count(*)::BIGINT AS cnt,
@@ -819,12 +806,9 @@ object Supervised {
       .agg(count(lit(1)).as("cnt"), sum("yo").as("sy")))
     try {
       require(n > 0, "psmAtt needs rows")
-      val w = gdWeights(cells, k, n, den, iters)
-      def fdc(a: Column, b: Column): Column =
-        (call_function("div", a, b) +
-          when((a % b) < 0, -1L).otherwise(0L)).cast("long")
+      val w = gdWeights(cells, k, n, den, iters, sigmoidQ(_, k))
       val scoredCells = cells.withColumn("pq", sigmoidQ(w, k))
-        .withColumn("m", fdc(col("sy") * 10000, col("cnt")))
+        .withColumn("m", floorDiv(col("sy") * 10000, col("cnt")))
       val tc = scoredCells.filter(col("y") === 1L).select(
         (xCols.map(j => col(j).as(s"t_$j")) :+ col("pq").as("tpq") :+
           col("cnt").as("tcnt") :+ col("m").as("tm")): _*)
@@ -847,11 +831,8 @@ object Supervised {
         .crossJoin(broadcast(tc.agg(sum("tcnt").as("n_treated"))))
       agg.select(col("n_matched"),
           (col("n_treated") - col("n_matched")).as("n_unmatched"),
-          ((call_function("div", col("wsum"),
-              col("n_matched").cast("decimal(38,0)")) +
-            when((col("wsum") %
-              col("n_matched").cast("decimal(38,0)")) < 0, -1L)
-              .otherwise(0L)).cast("long")).as("att_psm_micro"))
+          floorDiv(col("wsum"), col("n_matched").cast("decimal(38,0)"))
+            .as("att_psm_micro"))
     } finally cells.unpersist()
   }
 
@@ -978,16 +959,14 @@ object Supervised {
         "bradleyTerry holds O(entities) driver state — bounded domain")
       val score = scala.collection.mutable.LinkedHashMap(
         entities.map(_ -> 0L): _*)
-      def fdL(a: Long, b: Long): Long = Math.floorDiv(a, b)
       for (_ <- 1 to iters) {
         val st = broadcast(s.createDataset(score.toSeq).toDF("e", "sv"))
         val scored = p
           .join(st.select(col("e").as("w"), col("sv").as("sw")), Seq("w"))
           .join(st.select(col("e").as("l"), col("sv").as("sl")), Seq("l"))
           .select(col("w"), col("l"), col("cnt"),
-            floor(lit(1.0) / (lit(1.0) +
-              exp(-((col("sw") - col("sl")).cast("double") / lit(1e6)))) *
-              lit(SigScale.toDouble) + lit(0.5)).cast("long").as("p"))
+            sigmoidQ((col("sw") - col("sl")).cast("double") / lit(1e6))
+              .as("p"))
         val grad = scored.select(explode(array(
             struct(col("w").as("e"),
               ((col("p") - lit(SigScale)) * col("cnt")).as("r")),
@@ -999,7 +978,8 @@ object Supervised {
           .collect()
         grad.foreach { row =>
           val e = row.getString(0)
-          score(e) = score(e) - fdL(fdL(row.getLong(1), n) * 1000000L, den)
+          score(e) = score(e) -
+            Math.floorDiv(Math.floorDiv(row.getLong(1), n) * 1000000L, den)
         }
       }
       val wl = p.select(explode(array(
@@ -1113,25 +1093,9 @@ object Supervised {
       .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt")))
     try {
       require(n > 0, "poissonFit needs rows")
-      val w = Array.fill(k)(0L)
-      def residual: Column = {
-        val z = (0 until k).map(j => lit(w(j)) * col(s"x$j"))
-          .reduce(_ + _).cast("double") / lit(1e6)
-        floor(exp(least(z, lit(10.0))) * lit(SigScale.toDouble) +
-          lit(0.5)).cast("long") - col("y") * lit(SigScale)
-      }
-      for (_ <- 1 to iters) {
-        val g = proj
-          .agg(sum(residual * col("x0") * col("cnt")).as("g0"),
-            (1 until k).map(j =>
-              sum(residual * col(s"x$j") * col("cnt")).as(s"g$j")): _*)
-          .head()
-        var j = 0
-        while (j < k) {
-          w(j) -= Math.floorDiv(Math.floorDiv(g.getLong(j), n) * 1000000L, den)
-          j += 1
-        }
-      }
+      val w = gdWeights(proj, k, n, den, iters, v =>
+        floor(exp(least(wx(v, k), lit(10.0))) * lit(SigScale.toDouble) +
+          lit(0.5)).cast("long"))
       val rows = features.map(_._1).zip(w)
         .map { case (nm, wj) => (s"w_$nm", wj) } :+ (("n_rows", n))
       s.createDataset(rows).toDF("term", "value").orderBy("term")
@@ -1237,10 +1201,6 @@ object Supervised {
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
       .persist()
     try {
-      def fdB(a: BigInt, b: BigInt): BigInt = {
-        val (q, rem) = a /% b
-        if (rem.signum != 0 && rem.signum != b.signum) q - 1 else q
-      }
       var stumps = Vector.empty[(Int, Long, Long, Long)] // (j, v, lo, hi)
       for (_ <- 1 to rounds) {
         val pred = stumps.foldLeft(lit(0L)) { case (acc, (j, v, lo, hi)) =>
@@ -1272,15 +1232,16 @@ object Supervised {
           .map { case (f, v, sl, nl) =>
             val sr = bigS - sl
             val nr = bigN - nl
-            (fdB(sl * sl, nl) + fdB(sr * sr, nr), f, v, sl, nl, sr, nr)
+            (floorDiv(sl * sl, nl) + floorDiv(sr * sr, nr),
+              f, v, sl, nl, sr, nr)
           }
           .sortBy { case (gain, f, v, _, _, _, _) => (-gain, f, v) }
           .headOption
           .getOrElse(sys.error("gbStumps: no admissible split " +
             "(single feature cell)"))
         val (_, f, v, sl, nl, sr, nr) = best
-        stumps :+= ((f, v, fdB(sl, BigInt(2) * nl).toLong,
-          fdB(sr, BigInt(2) * nr).toLong))
+        stumps :+= ((f, v, floorDiv(sl, BigInt(2) * nl).toLong,
+          floorDiv(sr, BigInt(2) * nr).toLong))
       }
       s.createDataset(stumps.zipWithIndex.map { case ((j, v, lo, hi), i) =>
         ((i + 1).toLong, names(j), v, lo, hi)

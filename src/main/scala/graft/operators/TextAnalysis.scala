@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import FixedPoint.{bin6, fd}
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2.6 /
   * north-star surface): token counting, quality scoring, language ID,
@@ -523,17 +524,16 @@ object TextAnalysis {
       transform(split($textCol, ' '),
         w -> cast(greatest(1, regexp_count(lower(w), '[aeiouy]+')) as bigint)),
       0L, (a, x) -> a + x)""")
-    def bin6(c: Column): Column =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6) + lit(0.0)
     val ws = col("n_words").cast("double") / col("n_sentences").cast("double")
     val sw = col("n_syllables").cast("double") / col("n_words").cast("double")
     df.select(col(idCol), nSent.as("n_sentences"), nWords.as("n_words"),
         nSyll.as("n_syllables"))
       .select(col(idCol), col("n_sentences"), col("n_words"),
         col("n_syllables"),
-        bin6(lit(206.835) - lit(1.015) * ws - lit(84.6) * sw)
+        (bin6(lit(206.835) - lit(1.015) * ws - lit(84.6) * sw) + lit(0.0))
           .as("flesch_ease"),
-        bin6(lit(0.39) * ws + lit(11.8) * sw - lit(15.59)).as("fk_grade"))
+        (bin6(lit(0.39) * ws + lit(11.8) * sw - lit(15.59)) + lit(0.0))
+          .as("fk_grade"))
   }
 
   // ---- q365: readability scores over the corpus --------------------------------
@@ -1410,10 +1410,10 @@ object TextAnalysis {
       .join(broadcast(dfreq), "term")
       .select(col("term"), col("doc_id"), col("tf"), col("dl"),
         col("doc_freq"),
-        (floor((lit(22) * col("tf") * col("l") * col("n")).cast("double")
+        bin6((lit(22) * col("tf") * col("l") * col("n")).cast("double")
             / ((lit(10) * col("l") * col("tf") + lit(3) * col("l")
-                + lit(9) * col("dl") * col("n")) * col("doc_freq"))
-            * lit(1e6) + lit(0.5)) / lit(1e6)).as("score"))
+                + lit(9) * col("dl") * col("n")) * col("doc_freq")))
+          .as("score"))
     val top = new TypedAggs.BoundedTopK[Bm25Score](k, bm25Ord).toColumn
     scored.as[Bm25Score]
       .groupByKey(_.term)
@@ -1469,7 +1469,7 @@ object TextAnalysis {
     * N·(ad−bc)² and denominator df·(N−df)·n⁺·n⁻ stay integer (safe
     * through ~10⁵ docs; beyond that, promote the factor chain to doubles
     * in a fixed order — each * is correctly rounded, so the chain stays
-    * bit-stable). The output value is ONE division + binRound6, and the
+    * bit-stable). The output value is ONE division + bin6, and the
     * top-k ORDER BY uses the un-rounded division (bit-identical both
     * engines) with the term string as unique tiebreaker.
     *
@@ -1504,7 +1504,6 @@ object TextAnalysis {
     val den = (col("a") + col("b")) *
       (col("npos") + col("nneg") - col("a") - col("b")) *
       col("npos") * col("nneg")
-    def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     counts.crossJoin(broadcast(tot))
       .withColumn("num", num).withColumn("den", den)
       .where(col("den") > 0)
@@ -2162,7 +2161,6 @@ object TextAnalysis {
     looSourcePerplexity(Tables.documents(s, d), col("doc_id"), col("text"),
       col("source"))
   private val q410Sql = {
-    import Supervised.fd
     s"""WITH toks AS (
         SELECT doc_id, source AS src,
           substr(md5(doc_id::VARCHAR), 1, 1) < '4' AS test,
@@ -2230,7 +2228,6 @@ object TextAnalysis {
   private def q403(s: SparkSession, d: String): DataFrame =
     kneserNeyPerplexity(Tables.documents(s, d), col("doc_id"), col("text"))
   private val q403Sql = {
-    import Supervised.fd
     s"""WITH toks AS (
         SELECT doc_id, substr(md5(doc_id::VARCHAR), 1, 1) < '4' AS test,
           string_split(text, ' ') AS tk FROM documents),

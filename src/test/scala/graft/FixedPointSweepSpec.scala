@@ -1,0 +1,51 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source sweep that keeps the rounding rules in one place. Operators
+  * round with `operators.FixedPoint` (floor division and `bin6`); a local
+  * copy can drift from the oracle's spelling without any single query
+  * noticing. Outside `FixedPoint.scala`, `src/main` may hold no
+  * remainder-sign floor correction, no `/%` floor and no local rounding
+  * helper under one of the names the copies used to carry. A plain
+  * `div` on operands known to be non-negative is a floor already and is
+  * not flagged.
+  */
+class FixedPointSweepSpec extends AnyFunSuite {
+
+  private val patterns = Seq(
+    "remainder-sign floor correction" ->
+      """(?s)%[^%]{0,160}?\)\s*<\s*0\s*,\s*-1L""".r,
+    "BigInt /% floor" -> """/%""".r,
+    "local rounding helper" ->
+      """\bdef\s+(bin6|binRound6|fdC|fdc|fdiv|fdB|fdL)\b""".r)
+
+  test("floor division and bin6 live only in FixedPoint") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sweep must run from the repo root: $root")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Seq.empty
+    val hits = walk(root).filterNot(_.getName == "FixedPoint.scala")
+      .sortBy(_.getPath).flatMap { f =>
+        val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+        // Comment lines become blank so matches keep their line numbers.
+        val code = lines.map { l =>
+          val t = l.trim
+          if (t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) ""
+          else l
+        }.mkString("\n")
+        for {
+          (what, re) <- patterns
+          m <- re.findAllMatchIn(code)
+        } yield {
+          val line = code.substring(0, m.start).count(_ == '\n') + 1
+          s"${f.getPath}:$line: $what"
+        }
+      }
+    if (hits.nonEmpty)
+      fail("rounding rules outside operators.FixedPoint (use " +
+        s"FixedPoint.floorDiv or FixedPoint.bin6):\n  ${hits.mkString("\n  ")}")
+  }
+}

@@ -98,21 +98,4 @@ class AsOfJoinSpec extends SparkSpec {
       4L -> Some(4L),  // backward null -> forward
       5L -> Some(5L))) // forward null -> backward
   }
-
-  test("rangeJoin keeps rows within the window only") {
-    val left = Seq((1L, "u1", ts("2024-01-01 10:00:00"))).toDF("id", "user", "t")
-    val right = Seq(
-      ("u1", ts("2024-01-01 09:10:00"), 1L),  // outside (before window)
-      ("u1", ts("2024-01-01 09:30:00"), 2L),  // inside
-      ("u1", ts("2024-01-01 10:30:00"), 3L),  // inside
-      ("u1", ts("2024-01-01 11:30:00"), 4L),  // outside (after)
-      ("u2", ts("2024-01-01 10:00:00"), 5L)   // wrong key
-    ).toDF("user", "rt", "rid")
-
-    val got = AsOfJoin.rangeJoin(left, right, Seq("user"), "t", "rt",
-        org.apache.spark.sql.functions.expr("INTERVAL 45 MINUTES"),
-        org.apache.spark.sql.functions.expr("INTERVAL 45 MINUTES"))
-      .select($"rid").as[Long].collect().toSet
-    assert(got === Set(2L, 3L))
-  }
 }

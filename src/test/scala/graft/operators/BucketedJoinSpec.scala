@@ -29,8 +29,8 @@ class BucketedJoinSpec extends SparkSpec {
         "l_orderkey", buckets = 8)
       Bucketing.writeBucketed(Tables.orders(spark, sf), "ord_bucketed",
         "o_orderkey", buckets = 8)
-      val j = Bucketing.colocatedJoin(spark, "li_bucketed", "ord_bucketed",
-        "l_orderkey", "o_orderkey")
+      val (l, r) = (spark.table("li_bucketed"), spark.table("ord_bucketed"))
+      val j = l.join(r, l("l_orderkey") === r("o_orderkey"))
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n${plan.take(1200)}")
       assert(!plan.contains("Exchange"),
