@@ -26,16 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * fold) — rather than reading an undefined slot value.
   */
 final case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorPairInput {
 
   override def dataType: DataType = DoubleType
-
-  private def mayHaveNullElements: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  // Even with non-null inputs the result is null when an element is null.
-  override def nullable: Boolean = super.nullable || mayHaveNullElements
 
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
@@ -85,13 +78,7 @@ final case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
-      // The per-element null check is emitted only when the schema admits
-      // null elements — the common containsNull=false case keeps the fused
-      // three-accumulator loop branch-free.
-      val nullCheck =
-        if (mayHaveNullElements)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
+      val nullCheck = elementNullCheck(ev, a, b, i)
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
 /** Pool-adjacent-violators kernel: the O(n) stack algorithm over a
   * group's (x, weight, value-sum) blocks, exact rational pooled means
   * (BigInt cross-multiplication — no float ever enters a comparison),
-  * flooring to micro ONLY at emission with the engine-wide sign-split
-  * convention. The oracle replays the identical stack machine as a
-  * recursive CTE, so fitted values are bit-identical cross-engine.
+  * truncated toward zero to micro ONLY at emission, as Spark's `div`
+  * and DuckDB's `//` both do. The oracle replays the identical stack
+  * machine as a recursive CTE, so fitted values are bit-identical
+  * cross-engine.
   */
 object PavUtil {
   /** arr: array<struct<x long, n long, s long>> sorted by x (n = row
@@ -50,7 +51,7 @@ object PavUtil {
     while (b <= top) {
       val end = if (b < top) start(b + 1) else n
       val t = num(b) * 1000000
-      val f = ((if (t < 0) BigInt(-1) else BigInt(1)) * (t.abs / den(b))).toLong
+      val f = (t / den(b)).toLong
       var j = start(b)
       while (j < end) {
         out(j) = InternalRow(xs(j), f)

@@ -78,6 +78,29 @@ private[functions] trait VectorArrayInput extends UnaryExpression {
   }
 }
 
+/** The pair kernels' element-null rule: a null element in either array
+  * makes the result null, as it does in `aggregate(zip_with(...))`. So
+  * the result is nullable whenever either schema admits null elements,
+  * and the generated loop checks each element only then — the common
+  * containsNull=false case keeps the fused loop branch-free.
+  */
+private[functions] trait VectorPairInput extends BinaryExpression {
+  protected def mayHaveNullElements: Boolean =
+    left.dataType.asInstanceOf[ArrayType].containsNull ||
+      right.dataType.asInstanceOf[ArrayType].containsNull
+
+  override def nullable: Boolean = super.nullable || mayHaveNullElements
+
+  /** Java that sets the result null and leaves the loop when element `i`
+    * of array `a` or `b` is null; empty when neither can be.
+    */
+  protected def elementNullCheck(ev: ExprCode, a: String, b: String,
+      i: String): String =
+    if (mayHaveNullElements)
+      s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+    else ""
+}
+
 /** L2 squared norm of a float/double vector (take `sqrt` with the built-in
   * on top — keeping sqrt/round in Column space preserves the exact
   * rounding behavior shared with every other oracle-green query).
@@ -155,15 +178,9 @@ final case class QuantizeInt8(child: Expression)
   * dimension-d product by d·2^14 « 2^63.
   */
 final case class DotProductInt(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorPairInput {
 
   override def dataType: DataType = LongType
-
-  private def mayHaveNullElements: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullable: Boolean = super.nullable || mayHaveNullElements
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -195,10 +212,7 @@ final case class DotProductInt(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val dot = ctx.freshName("dot")
-      val nullCheck =
-        if (mayHaveNullElements)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
+      val nullCheck = elementNullCheck(ev, a, b, i)
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |long $dot = 0L;
@@ -231,18 +245,12 @@ final case class DotProductInt(left: Expression, right: Expression)
   * element poisons the result to null.
   */
 final case class L2SquaredDist(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorPairInput {
 
   override def dataType: DataType = DoubleType
 
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def mayHaveNullElements: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullable: Boolean = super.nullable || mayHaveNullElements
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -281,10 +289,7 @@ final case class L2SquaredDist(left: Expression, right: Expression)
       val d = ctx.freshName("d")
       def getter(isFloat: Boolean, arr: String, idx: String): String =
         if (isFloat) s"(double) $arr.getFloat($idx)" else s"$arr.getDouble($idx)"
-      val nullCheck =
-        if (mayHaveNullElements)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
+      val nullCheck = elementNullCheck(ev, a, b, i)
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;

@@ -22,31 +22,15 @@ import FixedPoint.{bin6, fd, floorDiv}
   */
 object Analytics {
 
-  /** SQL snippet: FLOOR division of `a` by the positive literal `b`,
-    * engine-agnostic for any sign of `a`. Spark's `div` truncates toward
-    * zero while DuckDB's `//` floors — the two disagree exactly on
-    * negative non-multiples, i.e. pre-1970 timestamps at every
-    * ts-bucketing site, so bucketing goes through this idiom instead of
-    * a bare `div` (for non-negative inputs it compiles to the same
-    * result; the correction branch keeps the pair engine-agnostic for
-    * ANY timestamp).
+  /** Calendar-day bucket of a timestamp: micros since epoch,
+    * floor-divided, so a pre-1970 instant lands on its own day.
     */
-  def floorDivSql(a: String, b: Long): String = {
-    require(b > 0, "floorDivSql needs a positive divisor")
-    s"(($a) div ${b}L + (case when ($a) % ${b}L < 0 then -1L else 0L end))"
-  }
+  def dayId(ts: Column): Column =
+    floorDiv(unix_micros(ts), lit(86400000000L))
 
-  /** Calendar-day bucket of a timestamp column (micros since epoch,
-    * floor-divided — see [[floorDivSql]]).
-    */
-  def dayIdSql(ts: String): String =
-    floorDivSql(s"unix_micros($ts)", 86400000000L)
-
-  /** Hour-of-day bucket (0..23 for post-1970 input; engine-agnostic
-    * either way).
-    */
-  def hourOfDaySql(ts: String): String =
-    s"(${floorDivSql(s"unix_micros($ts)", 3600000000L)}) % 24"
+  /** Hour-of-day bucket (0..23 for post-1970 input). */
+  def hourOfDay(ts: Column): Column =
+    floorDiv(unix_micros(ts), lit(3600000000L)) % 24
 
   /** q46: positional token explode — (doc_id, pos, token) with ordinality. */
   private def q46(s: SparkSession, d: String): DataFrame =
@@ -1218,8 +1202,8 @@ object Analytics {
     */
   def loadProfile(df: DataFrame, tsCol: String): DataFrame = {
     val cells = df
-      .select(expr(s"(${dayIdSql(tsCol)} + 3) % 7").as("dow"),
-        expr(s"${hourOfDaySql(tsCol)}").as("hour"))
+      .select(((dayId(col(tsCol)) + 3) % 7).as("dow"),
+        hourOfDay(col(tsCol)).as("hour"))
       .groupBy(col("dow"), col("hour"))
       .agg(count(lit(1)).as("n"))
     val total = cells.agg(sum(col("n")).as("total"))
@@ -1250,8 +1234,8 @@ object Analytics {
     * family whose weights are integers, so no pow/float enters the
     * score). Values quantize per row as floor(value·100) cents (the
     * file-wide convention — per-row, order-independent); the final
-    * division sign-splits so both engines floor identically on negative
-    * sums. Emits the day count actually used, the latest epoch-day, and
+    * division truncates toward zero on both engines, negative sums
+    * included. Emits the day count actually used, the latest epoch-day, and
     * ewma_cents.
     *
     * Scale design: one partial-aggregated groupBy collapses the event
@@ -1264,7 +1248,7 @@ object Analytics {
     require(maxDays >= 1 && maxDays <= 32, "binaryEwma needs 1 <= maxDays <= 32")
     val daily = df
       .select(col(keyCol).as("k"),
-        expr(s"${dayIdSql(tsCol)}").as("day_id"),
+        dayId(col(tsCol)).as("day_id"),
         floor(col(valueCol) * 100).cast("long").as("cents"))
       .groupBy(col("k"), col("day_id"))
       .agg(sum(col("cents")).as("day_cents"))
@@ -1277,7 +1261,7 @@ object Analytics {
         sum(expr(s"day_cents * shiftleft(1L, $maxDays - rn)")).as("num"),
         sum(expr(s"shiftleft(1L, $maxDays - rn)")).as("den"))
       .select(col("k"), col("n_days"), col("last_day_id"),
-        expr("sign(num) * (abs(num) div den)").cast("long").as("ewma_cents"))
+        expr("num div den").as("ewma_cents"))
   }
 
   // ---- q267: binary-decay EWMA of daily event value per type -------------------
@@ -1340,8 +1324,8 @@ object Analytics {
     * (month_days · overall_total) — the classic seasonality table
     * (index 1.3 = "Decembers run 30% hot") computed without a single
     * float. Day counts come from DISTINCT observed days, so sparse
-    * months aren't diluted by absent dates. Negative-capable totals
-    * sign-split before the division.
+    * months aren't diluted by absent dates. The division truncates
+    * toward zero on both engines, for totals of either sign.
     *
     * Scale design: one (month, day) collapse with map-side partials,
     * then twelve-row arithmetic against one broadcast overall row.
@@ -1349,7 +1333,7 @@ object Analytics {
   def seasonalIndex(df: DataFrame, tsCol: String,
       valueCol: Column): DataFrame = {
     val daily = df
-      .select(expr(s"${dayIdSql(s"cast($tsCol as timestamp)")}")
+      .select(dayId(col(tsCol).cast("timestamp"))
         .as("day_id"),
         floor(valueCol * 100).cast("long").as("cents"))
       .groupBy(col("day_id")).agg(sum(col("cents")).as("day_cents"))
@@ -1363,10 +1347,8 @@ object Analytics {
       .select(col("month").cast("long").as("month"), col("n_days"),
         col("total"),
         when(col("all_total") =!= 0,
-          expr("""sign(total) * sign(all_total) *
-            cast((cast(abs(total) as decimal(38,0)) * all_days * 1000000L)
-              div (cast(n_days as decimal(38,0)) * abs(all_total)) as long)""")
-            .cast("long"))
+          expr("""cast(total as decimal(38,0)) * all_days * 1000000L
+            div (cast(n_days as decimal(38,0)) * all_total)"""))
           .otherwise(lit(null).cast("long")).as("index_micro"))
   }
 
@@ -1403,8 +1385,8 @@ object Analytics {
     *   l_t = (α·y_t·10⁶ + (10⁶−α)·(l+b)) div 10⁶
     *   b_t = (β·(l_t − l_{t−1}) + (10⁶−β)·b) div 10⁶
     * run in exact integer micro units — every product widened through
-    * decimal(38,0) (HUGEINT in the oracle) and every division sign-split
-    * (floor-toward-zero on BOTH engines) — so level, trend, and each
+    * decimal(38,0) (HUGEINT in the oracle) and every division truncating
+    * toward zero (`div`/`//` on BOTH engines) — so level, trend, and each
     * forecast ŷ_{T+h} = l_T + h·b_T are bit-identical cross-engine.
     * Initialization: l₀ = y₀·10⁶, b₀ = (y₁−y₀)·10⁶ (groups with fewer
     * than 2 periods are dropped — no trend is estimable).
@@ -1431,14 +1413,10 @@ object Analytics {
     require(horizon >= 1, "horizon must be >= 1")
     val (a, na) = (alphaMicro, 1000000L - alphaMicro)
     val (b, nb) = (betaMicro, 1000000L - betaMicro)
-    // Sign-split micro floor-division: identical truncation on Spark
-    // (div) and DuckDB (//) even for negative levels/trends.
-    def md(x: String) = s"cast((case when ($x) < 0 then -1L else 1L end)" +
-      s" * (abs($x) div 1000000) as long)"
-    val newL = md(s"$a * cast(x.yp as decimal(38,0)) * 1000000" +
-      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)")
-    val newB = md(s"$b * (cast($newL as decimal(38,0)) - acc.l)" +
-      s" + $nb * cast(acc.b as decimal(38,0))")
+    val newL = s"($a * cast(x.yp as decimal(38,0)) * 1000000" +
+      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)) div 1000000"
+    val newB = s"($b * (cast($newL as decimal(38,0)) - acc.l)" +
+      s" + $nb * cast(acc.b as decimal(38,0))) div 1000000"
     val foldExpr = s"""aggregate(slice(s, 3, size(s) - 2),
       named_struct('l', element_at(s, 1).yp * 1000000L,
         'b', (element_at(s, 2).yp - element_at(s, 1).yp) * 1000000L),
@@ -1472,7 +1450,7 @@ object Analytics {
   // field re-evaluates the newL subexpression inline (one-step folds are
   // correct, the identical expression outside a lambda is correct, from
   // the second step the nested re-evaluation diverges). Plain recursive
-  // SQL evaluates the same sign-split micro arithmetic correctly and is
+  // SQL evaluates the same truncating micro arithmetic correctly and is
   // verified bit-identical to the Spark fold at sf0.001/0.01/0.1.
   private val q341Sql =
     """WITH RECURSIVE m AS (
@@ -1537,7 +1515,7 @@ object Analytics {
     * interval is infinite: radius and bounds are NULL (the textbook
     * degenerate case, not an error).
     *
-    * Exactness: both folds are [[holtForecast]]'s sign-split micro
+    * Exactness: both folds are [[holtForecast]]'s truncating micro
     * recurrence; residuals, the order-statistic radius, and the bounds
     * are exact BIGINTs — no float anywhere, both engines agree bitwise.
     *
@@ -1559,12 +1537,10 @@ object Analytics {
       "conformal alpha is micro")
     val (a, na) = (alphaMicro, 1000000L - alphaMicro)
     val (b, nb) = (betaMicro, 1000000L - betaMicro)
-    def md(x: String) = s"cast((case when ($x) < 0 then -1L else 1L end)" +
-      s" * (abs($x) div 1000000) as long)"
-    val newL = md(s"$a * cast(x.yp as decimal(38,0)) * 1000000" +
-      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)")
-    val newB = md(s"$b * (cast($newL as decimal(38,0)) - acc.l)" +
-      s" + $nb * cast(acc.b as decimal(38,0))")
+    val newL = s"($a * cast(x.yp as decimal(38,0)) * 1000000" +
+      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)) div 1000000"
+    val newB = s"($b * (cast($newL as decimal(38,0)) - acc.l)" +
+      s" + $nb * cast(acc.b as decimal(38,0))) div 1000000"
     def fold(len: String) = s"""aggregate(slice(s, 3, $len),
       named_struct('l', element_at(s, 1).yp * 1000000L,
         'b', (element_at(s, 2).yp - element_at(s, 1).yp) * 1000000L),
@@ -1679,7 +1655,7 @@ object Analytics {
     *   l_t = α·(y_t·10⁶ − s_slot) + (1−α)·(l + b)
     *   b_t = β·(l_t − l) + (1−β)·b
     *   s'_slot = γ·(y_t·10⁶ − l_t) + (1−γ)·s_slot
-    * each with ONE sign-split floor division by 10⁶ (identical
+    * each with ONE truncating division by 10⁶ (identical
     * truncation on both engines), initialized from the first two
     * seasons: l₀ = mean(season 1)·10⁶, b₀ = (mean(season 2) −
     * mean(season 1))·10⁶/m, s₀[slot] = y_i·10⁶ − l₀ over the first m
@@ -1705,18 +1681,14 @@ object Analytics {
     val (a, na) = (alphaMicro, 1000000L - alphaMicro)
     val (b, nb) = (betaMicro, 1000000L - betaMicro)
     val (g, ng) = (gammaMicro, 1000000L - gammaMicro)
-    // Generic sign-split floor division: identical truncation on Spark
-    // (div) and DuckDB (//) for any sign of x (d > 0).
-    def sd(x: String, d: String) = s"cast((case when ($x) < 0 then -1L " +
-      s"else 1L end) * (abs($x) div ($d)) as long)"
     val slot = s"cast(x.p % $m as int)"
     val sv = s"element_at(acc.ss, $slot + 1)"
-    val newL = sd(s"$a * (cast(x.yp as decimal(38,0)) * 1000000 - $sv)" +
-      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)", "1000000")
-    val newB = sd(s"$b * (cast($newL as decimal(38,0)) - acc.l)" +
-      s" + $nb * cast(acc.b as decimal(38,0))", "1000000")
-    val newS = sd(s"$g * (cast(x.yp as decimal(38,0)) * 1000000 - $newL)" +
-      s" + $ng * cast($sv as decimal(38,0))", "1000000")
+    val newL = s"($a * (cast(x.yp as decimal(38,0)) * 1000000 - $sv)" +
+      s" + $na * (cast(acc.l as decimal(38,0)) + acc.b)) div 1000000"
+    val newB = s"($b * (cast($newL as decimal(38,0)) - acc.l)" +
+      s" + $nb * cast(acc.b as decimal(38,0))) div 1000000"
+    val newS = s"($g * (cast(x.yp as decimal(38,0)) * 1000000 - $newL)" +
+      s" + $ng * cast($sv as decimal(38,0))) div 1000000"
     val foldExpr = s"""aggregate(slice(s, ${m + 1}, size(s) - $m),
       named_struct('l', l0, 'b', b0, 'ss', ss0),
       (acc, x) -> named_struct('l', $newL, 'b', $newB,
@@ -1732,9 +1704,9 @@ object Analytics {
         expr(s"aggregate(slice(s, 1, $m), 0L, (acc, x) -> acc + x.yp)"))
       .withColumn("s2",
         expr(s"aggregate(slice(s, ${m + 1}, $m), 0L, (acc, x) -> acc + x.yp)"))
-      .withColumn("l0", expr(sd(s"cast(s1 as decimal(38,0)) * 1000000", s"$m")))
-      .withColumn("b0", expr(sd(
-        s"(cast(s2 as decimal(38,0)) - s1) * 1000000", s"${m.toLong * m}")))
+      .withColumn("l0", expr(s"cast(s1 as decimal(38,0)) * 1000000 div $m"))
+      .withColumn("b0", expr(
+        s"(cast(s2 as decimal(38,0)) - s1) * 1000000 div ${m.toLong * m}"))
       // Seasonal init: for each slot, the LAST of the first m
       // observations landing on it (gaps may leave a slot unseen → 0).
       .withColumn("ss0", expr(s"""transform(sequence(0, ${m - 1}), k ->
@@ -1875,8 +1847,8 @@ object Analytics {
     * over once trend and cycle are removed.
     *
     * Exactness: values scale to micro BIGINTs first; every division
-    * (the MA, the slot means, the re-centering) is ONE sign-split floor
-    * division — identical truncation on both engines, no float
+    * (the MA, the slot means, the re-centering) is ONE truncating
+    * division — identical on both engines, no float
     * anywhere. Trend and residual are NULL at the series edges (no full
     * window — the honest answer, not an asymmetric fill).
     *
@@ -1888,8 +1860,6 @@ object Analytics {
   def seasonalDecompose(df: DataFrame, groupCol: String, periodCol: Column,
       valueCol: Column, m: Int): DataFrame = {
     require(m >= 2, "season length m must be >= 2")
-    def sd(x: String, d: String) = s"cast((case when ($x) < 0 then -1L " +
-      s"else 1L end) * (abs($x) div ($d)) as long)"
     val base = df.select(col(groupCol).as("g"), periodCol.cast("long").as("p"),
         valueCol.cast("long").as("y"))
       .groupBy(col("g"), col("p")).agg((sum(col("y")) * 1000000L).as("ym"))
@@ -1901,7 +1871,7 @@ object Analytics {
         base.withColumn("sw", sum(col("ym")).over(f))
           .withColumn("cw", count(lit(1)).over(f))
           .withColumn("trend",
-            when(col("cw") === m, expr(sd("sw", m.toString))))
+            when(col("cw") === m, expr(s"sw div $m")))
       } else {
         val f1 = ord.rowsBetween(-h, h - 1)
         val f2 = ord.rowsBetween(-h + 1, h)
@@ -1910,7 +1880,7 @@ object Analytics {
           .withColumn("cw",
             count(lit(1)).over(f1) + count(lit(1)).over(f2))
           .withColumn("trend",
-            when(col("cw") === 2 * m, expr(sd("sw", (2 * m).toString))))
+            when(col("cw") === 2 * m, expr(s"sw div ${2 * m}")))
       }
     val det = trended
       .withColumn("slot", expr(s"cast(p % $m as int)"))
@@ -1918,13 +1888,13 @@ object Analytics {
     val slotMeans = det.filter(col("d").isNotNull)
       .groupBy(col("g"), col("slot"))
       .agg(count(lit(1)).as("n_s"), sum(col("d")).as("ss"))
-      .select(col("g"), col("slot"), expr(sd("ss", "n_s")).as("smean"))
+      .select(col("g"), col("slot"), expr("ss div n_s").as("smean"))
     val centered = slotMeans
       .join(slotMeans.groupBy(col("g"))
           .agg(count(lit(1)).as("k_s"), sum(col("smean")).as("sm")),
         Seq("g"))
       .select(col("g"), col("slot"),
-        (col("smean") - expr(sd("sm", "k_s"))).as("seasonal_micro"))
+        (col("smean") - expr("sm div k_s")).as("seasonal_micro"))
     det.join(broadcast(centered), Seq("g", "slot"), "left")
       .select(col("g"), col("p"), col("ym").as("y_micro"),
         col("trend").as("trend_micro"), col("seasonal_micro"),
@@ -2181,8 +2151,8 @@ object Analytics {
     * smoothed curve, not just the final state ([[holtForecast]] is the
     * forecast-from-the-end companion; this is the monitoring/plotting
     * read): e₁ = y₁·10⁶, e_t = α·y_t·10⁶ + (1−α)·e_{t−1}, in exact
-    * integer micro with one fixed truncation point per step (sign-split
-    * floor division, bit-identical cross-engine).
+    * integer micro with one fixed truncation point per step (truncating
+    * division, bit-identical cross-engine).
     *
     * Scale design: one per-(group, period) collapse with map-side
     * partials; each row's state is a prefix re-fold over the group's
@@ -2193,7 +2163,7 @@ object Analytics {
     * (`concat(acc, array(e_t))`) does n²/2 array-element COPIES plus n
     * arithmetic steps, and measured head-to-head at sf0.1 the re-fold
     * is 1.6× faster (0.36 vs 0.59 s) because an interpreted
-    * HigherOrderFunction copy costs more than the md() arithmetic it
+    * HigherOrderFunction copy costs more than the division arithmetic it
     * avoids. Catalyst has no mutable-accumulator expression, so a true
     * O(n) curve is not expressible in one fold; the period domain is
     * CALENDAR-BOUNDED by contract (months/days of a business horizon,
@@ -2204,13 +2174,11 @@ object Analytics {
       valueCol: Column, alphaMicro: Long = 300000L): DataFrame = {
     require(alphaMicro >= 0 && alphaMicro <= 1000000L, "alpha is micro")
     val (a, na) = (alphaMicro, 1000000L - alphaMicro)
-    def md(x: String) = s"cast((case when ($x) < 0 then -1L else 1L end)" +
-      s" * (abs($x) div 1000000) as long)"
     // Prefix fold to position i (0-based): fold rows 2..i+1 onto e₁.
     val fold = s"""aggregate(slice(s, 2, i),
       element_at(s, 1).yp * 1000000L,
-      (acc, x) -> ${md(s"$a * cast(x.yp as decimal(38,0)) * 1000000" +
-        s" + $na * cast(acc as decimal(38,0))")})"""
+      (acc, x) -> ($a * cast(x.yp as decimal(38,0)) * 1000000
+        + $na * cast(acc as decimal(38,0))) div 1000000)"""
     df.select(col(groupCol).as("g"), periodCol.cast("long").as("p"),
         valueCol.cast("long").as("y"))
       .groupBy(col("g"), col("p")).agg(sum(col("y")).as("yp"))
@@ -2261,7 +2229,7 @@ object Analytics {
     * every real demand across the empty periods. Exact integer micro:
     * z₁ = y₁·10⁶, v₁ = 10⁶ (unit-interval init), then per subsequent
     * demand z ← α·y·10⁶ + (1−α)z and v ← α·(p_t − p_{t−1})·10⁶ + (1−α)v,
-    * one sign-split truncation each; rate = z·10⁶ div v. Groups with
+    * one truncating division each; rate = z·10⁶ div v. Groups with
     * fewer than 2 demands are dropped (no interval is estimable).
     *
     * `sba = true` applies the Syntetos–Boylan approximation (Syntetos &
@@ -2283,14 +2251,12 @@ object Analytics {
       sba: Boolean = false): DataFrame = {
     require(alphaMicro >= 0 && alphaMicro <= 1000000L, "alpha is micro")
     val (a, na) = (alphaMicro, 1000000L - alphaMicro)
-    def md(x: String) = s"cast((case when ($x) < 0 then -1L else 1L end)" +
-      s" * (abs($x) div 1000000) as long)"
-    val newZ = md(s"$a * cast(x.yp as decimal(38,0)) * 1000000" +
-      s" + $na * cast(acc.z as decimal(38,0))")
+    val newZ = s"($a * cast(x.yp as decimal(38,0)) * 1000000" +
+      s" + $na * cast(acc.z as decimal(38,0))) div 1000000"
     // The interval is the CALENDAR gap to the previous demand — the
     // fold carries the previous period in the state.
-    val newV = md(s"$a * cast(x.p - acc.pp as decimal(38,0)) * 1000000" +
-      s" + $na * cast(acc.v as decimal(38,0))")
+    val newV = s"($a * cast(x.p - acc.pp as decimal(38,0)) * 1000000" +
+      s" + $na * cast(acc.v as decimal(38,0))) div 1000000"
     val foldExpr = s"""aggregate(slice(s, 2, size(s) - 1),
       named_struct('z', element_at(s, 1).yp * 1000000L, 'v', 1000000L,
         'pp', element_at(s, 1).p),
@@ -2307,14 +2273,11 @@ object Analytics {
       .select(col("g"), col("n_demands"), col("st.z").as("size_micro"),
         col("st.v").as("interval_micro"),
         (if (sba)
-          expr(s"""cast((case when st.z < 0 then -1L else 1L end)
-               * (abs(cast(st.z as decimal(38,0))) * ${2000000L - a} * 1000000
-                  div (cast(st.v as decimal(38,0)) * 2000000))
-               as long)""")
+          expr(s"""cast(st.z as decimal(38,0)) * ${2000000L - a} * 1000000
+               div (cast(st.v as decimal(38,0)) * 2000000)""")
         else
-          expr("""cast((case when st.z < 0 then -1L else 1L end)
-               * (abs(cast(st.z as decimal(38,0))) * 1000000 div st.v)
-               as long)""")).as("rate_micro"))
+          expr("cast(st.z as decimal(38,0)) * 1000000 div st.v"))
+          .as("rate_micro"))
   }
 
   // ---- q349: demand rate of a sparse buyer slice, per priority ----------------
@@ -2565,7 +2528,7 @@ object Analytics {
       maxLag: Int): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val daily = df
-      .select(expr(s"${dayIdSql(s"cast($tsCol as timestamp)")}")
+      .select(dayId(col(tsCol).cast("timestamp"))
           .as("day_id"),
         seriesCol.as("et"), floor(valueCol * 100).cast("long").as("cents"))
       .filter(col("et").isin(seriesA, seriesB))
@@ -2871,8 +2834,7 @@ object Analytics {
       "- cast(s as decimal(38,0)) * s as double)) / n"
     st.crossJoin(broadcast(nd))
       .select(col("g"), col("n").as("n_days"), col("s").as("total_qc"),
-        expr("sign(s) * (abs(s) * 1000L div n)").cast("long")
-          .as("mean_daily_milli"),
+        expr("s * 1000L div n").as("mean_daily_milli"),
         expr(s"floor(($sigmaExpr) * 1e6 + 0.5) / 1e6").as("sigma_daily"),
         expr(s"floor(($z * sqrt(cast($leadTimeDays as double)) " +
           s"* ($sigmaExpr)) * 1e6 + 0.5) / 1e6").as("safety_stock"),
@@ -2910,8 +2872,8 @@ object Analytics {
        FROM st, nd ORDER BY g"""
 
   /** Difference-in-differences table: the four (treated × period) cell
-    * means in exact micro-cents (sign-split truncating division — the
-    * engine-identical convention for negative-capable sums) and the DiD
+    * means in exact micro-cents (truncating division, identical on both
+    * engines for sums of either sign) and the DiD
     * estimate (Δtreated − Δcontrol) — the first-reach causal readout for
     * any natural experiment ("the feature shipped to half the users on
     * day 15"). One row out.
@@ -2937,7 +2899,7 @@ object Analytics {
           .as("s_c0"))
     def mean(s: String, n: String): Column =
       when(col(n) > 0,
-        expr(s"sign($s) * (abs($s) * 1000000L div $n)").cast("long"))
+        expr(s"$s * 1000000L div $n"))
         .otherwise(lit(null).cast("long"))
     wide.select(col("n_tp"), col("n_t0"), col("n_cp"), col("n_c0"),
         mean("s_tp", "n_tp").as("m_tp_micro"),
@@ -2990,7 +2952,7 @@ object Analytics {
 
   /** CUPED variance-reduced treatment effect (Deng et al. 2013): per
     * unit, the pre-period metric x and post-period metric y; the
-    * adjustment coefficient θ = cov(x, y)/var(x) as an exact sign-split
+    * adjustment coefficient θ = cov(x, y)/var(x) as an exact truncated
     * micro ratio (decimal(38,0)-widened products, fixed truncation
     * points), and the adjusted effect
     * (ȳ_t − ȳ_c) − θ·(x̄_t − x̄_c) — the industry-standard experiment
@@ -3019,7 +2981,7 @@ object Analytics {
       sum(when(col("t"), col("y")).otherwise(0L)).as("sy_t"))
     def mean(s: String, n: String): Column =
       when(col(n) > 0,
-        expr(s"sign($s) * (abs($s) * 1000000L div $n)").cast("long"))
+        expr(s"$s * 1000000L div $n"))
         .otherwise(lit(null).cast("long"))
     g.withColumn("sy_c", col("sy") - col("sy_t"))
       .withColumn("sx_c", col("sx") - col("sx_t"))
@@ -3037,16 +2999,13 @@ object Analytics {
         mean("sx_c", "n_c").as("mx_c"))
       .select(col("n"), col("n_t"),
         when(col("var_num") > 0,
-          expr("""cast(sign(cov_num) * (abs(cov_num) * 1000000
-               div abs(var_num)) as long)"""))
+          expr("cov_num * 1000000 div var_num"))
           .otherwise(lit(0L)).as("theta_micro"),
         (col("my_t") - col("my_c")).as("raw_diff_micro"),
         col("mx_t"), col("mx_c"), col("my_t"), col("my_c"))
       .withColumn("adj_diff_micro",
-        col("raw_diff_micro") - expr(
-          """cast(sign(theta_micro * (mx_t - mx_c))
-             * (abs(theta_micro * (mx_t - mx_c)) div 1000000L)
-             as long)"""))
+        col("raw_diff_micro") -
+          expr("theta_micro * (mx_t - mx_c) div 1000000L"))
       .select(col("n"), col("n_t"), col("theta_micro"),
         col("raw_diff_micro"), col("adj_diff_micro"))
   }
@@ -3856,8 +3815,8 @@ object Analytics {
     */
   def dayOverDayOverlap(df: DataFrame, tsCol: String,
       userCol: Column): DataFrame = {
-    val du = df.select(expr(s"${dayIdSql(tsCol)}")
-        .as("day_id"), userCol.cast("long").as("u"))
+    val du = df.select(dayId(col(tsCol)).as("day_id"),
+        userCol.cast("long").as("u"))
       .distinct()
     val inter = du.as("a").join(du.as("b"),
         col("a.u") === col("b.u") && col("b.day_id") === col("a.day_id") + 1)
@@ -3916,7 +3875,7 @@ object Analytics {
   def anomalyConsensus(df: DataFrame, tsCol: String,
       valueCol: Column): DataFrame = {
     val daily = df
-      .select(expr(s"${dayIdSql(tsCol)}").as("day_id"),
+      .select(dayId(col(tsCol)).as("day_id"),
         floor(valueCol * 100).cast("long").as("cents"))
       .groupBy(col("day_id")).agg(sum(col("cents")).as("x"))
     val byV = daily.groupBy(col("x").as("v")).agg(count(lit(1)).as("c"))
@@ -4808,8 +4767,8 @@ object Analytics {
     * of two (shift arithmetic), so `decayed_x` — the total scaled by
     * 2^maxAgeDays — is an exact BIGINT on both engines; no float sum
     * ever happens. `decayed_units` descales by an integer shift-divide
-    * (exact for the nonnegative values this operates on; sign-split
-    * first if a use case needs negative values). Bound:
+    * (exact for the nonnegative values this operates on; a negative
+    * value would need `div`, which truncates, instead of the shift). Bound:
     * Σ cents·2^maxAgeDays must stay < 2^63 — with default cap 20 that
     * allows ~10¹² cent-value mass per key.
     *
@@ -4904,10 +4863,8 @@ object Analytics {
       .select(col("k").as(keyCol), col("n").as("n_days"),
         col("day").as("split_day"),
         (round(col("gain"), 4) + lit(0.0)).as("gain"),
-        expr("sign(s1) * (abs(s1) * 1000000L div n1)").cast("long")
-          .as("mean_before_micro"),
-        expr("sign(stot - s1) * (abs(stot - s1) * 1000000L div (n - n1))")
-          .cast("long").as("mean_after_micro"))
+        expr("s1 * 1000000L div n1").as("mean_before_micro"),
+        expr("(stot - s1) * 1000000L div (n - n1)").as("mean_after_micro"))
   }
 
   /** Mann–Kendall trend TEST per group (Mann 1945; Kendall 1975): the
@@ -5010,7 +4967,7 @@ object Analytics {
     * despite it.
     *
     * Exact algebra: daily BIGINT cent totals; each pair's slope lands as
-    * sign-split integer micros (cents/day — identical floors on both
+    * truncated integer micros (cents/day — identical on both
     * engines), and the median is the nearest-rank first-value-at-half
     * rule over the per-key (slope → count) collapse, pure integer
     * comparison. Keys with < 2 observed days emit nothing (no pairs).
@@ -5032,9 +4989,7 @@ object Analytics {
       .join(daily.as("b"),
         col("a.k") === col("b.k") && col("a.d") < col("b.d"))
       .select(col("a.k").as("k"),
-        expr("""sign(b.s - a.s) *
-          (abs(b.s - a.s) * 1000000L div (b.d - a.d))""").cast("long")
-          .as("sl"))
+        expr("(b.s - a.s) * 1000000L div (b.d - a.d)").as("sl"))
     val byV = slopes.groupBy(col("k"), col("sl")).agg(count(lit(1)).as("c"))
     val w = Window.partitionBy(col("k")).orderBy(col("sl"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -5478,9 +5433,7 @@ object Analytics {
         col("rev_prior"),
         when(col("rev_prior").isNull || col("rev_prior") === 0,
           lit(null).cast("long"))
-          .otherwise(expr("""sign(rev - rev_prior) *
-            (abs(rev - rev_prior) * 1000000L div rev_prior)""")
-            .cast("long"))
+          .otherwise(expr("(rev - rev_prior) * 1000000L div rev_prior"))
           .as("yoy_micro"))
   }
 
@@ -6122,10 +6075,8 @@ object Analytics {
     best
       .select(col("k").as(groupCol), col("v").as("threshold"),
         col("n1").as("n_below"), (col("n") - col("n1")).as("n_above"),
-        expr("sign(s1) * (abs(s1) * 1000000L div n1)").cast("long")
-          .as("mean_below_micro"),
-        expr("sign(stot - s1) * (abs(stot - s1) * 1000000L div (n - n1))")
-          .cast("long").as("mean_above_micro"))
+        expr("s1 * 1000000L div n1").as("mean_below_micro"),
+        expr("(stot - s1) * 1000000L div (n - n1)").as("mean_above_micro"))
   }
 
   // ---- q215: auto-threshold on document length per language -------------------
@@ -6232,7 +6183,7 @@ object Analytics {
       valueCol: Column): DataFrame = {
     val daily = df
       .select(col(keyCol).as("k"),
-        expr(s"${dayIdSql(s"cast($tsCol as timestamp)")}")
+        dayId(col(tsCol).cast("timestamp"))
           .as("day"),
         floor(valueCol * 100).cast("long").as("cents"))
       .groupBy(col("k"), col("day")).agg(sum(col("cents")).as("c"))
@@ -6312,7 +6263,7 @@ object Analytics {
       valueCol: Column): DataFrame = {
     val daily = df
       .select(col(keyCol).as("k"),
-        expr(s"${dayIdSql(s"cast($tsCol as timestamp)")}")
+        dayId(col(tsCol).cast("timestamp"))
           .as("day"),
         floor(valueCol * 100).cast("long").as("cents"))
       .groupBy(col("k"), col("day")).agg(sum(col("cents")).as("c"))

@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle under any partitioning — and a recomputed partition
   * gives the same bits as the lost one.
   *
-  * Floor division: Spark's `div` (like DuckDB's `//`) truncates toward
-  * zero; adding −1 when the remainder is negative makes it a floor. The
-  * Column form and [[fd]] assume a positive divisor (for b < 0 they are
-  * not a floor), and parity needs the two to agree, so neither is
-  * "fixed" alone. The BigInt form is a true floor for either sign.
+  * Truncation needs no helper: Spark's `div` and DuckDB's `//` both
+  * truncate toward zero for either sign of either operand (−7 div 2 =
+  * −7 // 2 = −3), so a truncating division is a plain `div`.
+  *
+  * Floor division: adding −1 to `div` when the remainder is negative
+  * makes it a floor. The Column form and [[fd]] assume a positive
+  * divisor (for b < 0 they are not a floor), and parity needs the two
+  * to agree, so neither is "fixed" alone. The BigInt form and [[fdH]]
+  * are true floors for either sign.
   *
   * `bin6`: round half up to 6 decimals, floor(x·1e6 + 0.5)/1e6, as plain
   * IEEE ops written the same way in the oracle SQL, so bit-identical
@@ -39,10 +43,12 @@ private[operators] object FixedPoint {
   /** x rounded half up to 6 decimals. */
   def bin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
-  /** Oracle-side floor division (both engines' `//`/`div` truncate
-    * toward zero; the remainder-sign correction makes it a floor —
-    * [[Analytics.floorDivSql]] in DuckDB spelling).
-    */
+  /** Oracle-side floor division for b > 0, in DuckDB spelling. */
   def fd(a: String, b: String): String =
     s"(($a)//($b) + (case when ($a) % ($b) < 0 then -1 else 0 end))"
+
+  /** Oracle-side floor division for either sign of b. */
+  def fdH(a: String, b: String): String =
+    s"(($a)//($b) + (CASE WHEN ($a) % ($b) != 0 AND" +
+      s" sign(($a) % ($b)) != sign($b) THEN -1 ELSE 0 END))"
 }

@@ -1504,9 +1504,8 @@ object Graph {
     * WHICH labels carry the structure.
     *
     * Exact rational algebra: Q_c·4m² = 4m·e_c − D_c², all BIGINT; the
-    * one division is a sign-split micro floor (the Fleiss convention —
-    * integer div truncates toward zero in Spark, toward −∞ in DuckDB,
-    * so the magnitude floors and the sign applies outside). Bound:
+    * one division truncates to micro (Spark's `div` and DuckDB's `//`
+    * both truncate toward zero). Bound:
     * 4m²·10⁶ < 2⁶³ caps edges at ~10⁶ per run — per-partition QA runs,
     * not planetary graphs; downscale the unit beyond that.
     *
@@ -1539,10 +1538,8 @@ object Graph {
       .crossJoin(mm)
       .select(col("cm").as(commCol), col("n_nodes"), col("d_tot"),
         coalesce(col("e_in"), lit(0L)).as("e_in"), col("m"),
-        expr("""sign(4L * m * coalesce(e_in, 0L) - d_tot * d_tot)
-             * (abs(4L * m * coalesce(e_in, 0L) - d_tot * d_tot)
-                * 1000000L div (4L * m * m))""").cast("long")
-          .as("q_micro"))
+        expr("""(4L * m * coalesce(e_in, 0L) - d_tot * d_tot) * 1000000L
+             div (4L * m * m)""").as("q_micro"))
   }
 
   /** Degree assortativity of an undirected, deduplicated edge list: the

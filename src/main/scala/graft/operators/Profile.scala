@@ -1474,7 +1474,7 @@ object Profile {
     * train/cal/test on the SAME md5 draw as [[PipelineOps.splitAssign]]
     * (stable under corpus growth, reproducible cross-engine). The model
     * is deliberately the simplest honest one — the per-group train mean
-    * (sign-split integer division) — because conformal's guarantee is
+    * (truncating integer division) — because conformal's guarantee is
     * model-agnostic: the radius is the k-th smallest calibration
     * |y − ŷ| with k = ⌈(n_cal + 1)·(1 − α)⌉, and test coverage then
     * lands ≥ 1 − α in expectation REGARDLESS of how bad the mean model
@@ -1484,7 +1484,7 @@ object Profile {
     * degenerate case, not an error).
     *
     * Exactness: values arrive as integers (cents, micros); the mean is
-    * sign-split floor division, residuals/radius are BIGINTs, k is an
+    * truncating division, residuals/radius are BIGINTs, k is an
     * exact integer ceiling, coverage is ppm integer division — no float
     * touches the pipeline, so both engines agree bitwise.
     *
@@ -1507,9 +1507,7 @@ object Profile {
     val model = base.filter(col("split") === "train").groupBy(col("g"))
       .agg(count(lit(1)).as("n_train"), sum(col("y")).as("ty"))
       .select(col("g"), col("n_train"),
-        expr("""cast((case when ty < 0 then -1L else 1L end)
-             * (abs(cast(ty as decimal(38,0))) div n_train) as long)""")
-          .as("yhat"))
+        expr("cast(ty as decimal(38,0)) div n_train").as("yhat"))
     val resid = base.filter(col("split") =!= "train")
       .join(broadcast(model), Seq("g"))
       .select(col("g"), col("split"), abs(col("y") - col("yhat")).as("r"))
@@ -1632,9 +1630,7 @@ object Profile {
     val model = labeled.filter(col("split") === "train").groupBy(col("g"))
       .agg(count(lit(1)).as("n_train"), sum(col("y")).as("ty"))
       .select(col("g"),
-        expr("""cast((case when ty < 0 then -1L else 1L end)
-             * (abs(cast(ty as decimal(38,0))) div n_train) as long)""")
-          .as("yhat"))
+        expr("cast(ty as decimal(38,0)) div n_train").as("yhat"))
     val resid = labeled.filter(col("split") =!= "train")
       .join(broadcast(model), Seq("g"))
       .select(col("g"), col("id"), col("split"),
@@ -1758,10 +1754,8 @@ object Profile {
     *   P̄  = (S − n·r) / (n·r·(r−1)),  P̄ₑ = C / (n²r²),
     *   κ  = (n·r·(S − n·r) − (r−1)·C) / ((r−1)·(n²r² − C))
     * after clearing denominators — so the only division is the final
-    * micro-unit floor. κ can be negative (worse than chance); the sign
-    * is applied OUTSIDE the magnitude floor because integer division
-    * rounds toward zero in Spark but toward −∞ in DuckDB — `sign·(|num|
-    * ·10⁶ div den)` is engine-identical, a truncated-toward-zero κ.
+    * micro-unit truncation. κ can be negative (worse than chance);
+    * `num·10⁶ div den` truncates toward zero, as the oracle's `//` does.
     * Denominator bound: n²r²(r−1) < 2⁶³ caps items at ~10⁸ for r = 3 —
     * per-batch agreement runs, not corpus-wide (the q177 discipline).
     *
@@ -1787,8 +1781,7 @@ object Profile {
         expr(s"n * ${r}L * (S - n * ${r}L) - ${r - 1}L * C").as("num"),
         expr(s"${r - 1}L * (n * n * ${r * r}L - C)").as("den"))
       .select(col("n").as("n_items"), col("p_bar_micro"), col("p_e_micro"),
-        expr("signum(num) * (abs(num) * 1000000L div den)").cast("long")
-          .as("kappa_micro"))
+        expr("num * 1000000L div den").as("kappa_micro"))
   }
 
   // ---- q188: Fleiss' kappa over three simulated raters ------------------------
@@ -2465,7 +2458,7 @@ object Profile {
     * formula over those integers, mirrored operation-for-operation in
     * the oracle and quantized once via floor(x·10⁶ + 0.5)/10⁶ — the
     * repo's deterministic rounding idiom. Means are exact micro
-    * (sign-split). Null t/df when either arm has < 2 rows or both
+    * (truncated). Null t/df when either arm has < 2 rows or both
     * variances vanish.
     *
     * Scale design: one filtered pass, one global aggregate with
@@ -2489,8 +2482,7 @@ object Profile {
       (sea * sea / (dd("n_a") - lit(1d)) + seb * seb / (dd("n_b") - lit(1d)))
     val degenerate = col("n_a") < 2 || col("n_b") < 2 || se2 <= lit(0d)
     def meanMicro(s: String, n: String) =
-      expr(s"""cast((case when $s < 0 then -1L else 1L end)
-           * ((abs(cast($s as decimal(38,0))) * 10000) div $n) as long)""")
+      expr(s"cast($s as decimal(38,0)) * 10000 div $n")
     base.agg(
         count(when(col("g") === groupA, 1)).as("n_a"),
         sum(when(col("g") === groupA, col("c"))).as("s_a"),
@@ -2574,7 +2566,7 @@ object Profile {
     * end to end: pooled block means stay rational (BigInt
     * cross-multiplied comparisons inside the native [[
     * graft.functions.IsotonicPav]] kernel), floored to micro ONCE at
-    * emission with the engine-wide sign-split convention; the DuckDB
+    * emission, truncating toward zero as both engines do; the DuckDB
     * oracle replays the identical stack machine as a recursive CTE, so
     * fitted curves are bit-identical cross-engine. One fitted row per
     * (group, distinct x), non-decreasing in x by construction.
@@ -2608,7 +2600,7 @@ object Profile {
   // is the unsmoothed readout; this is the one a scorer would deploy).
   private def q347(s: SparkSession, d: String): DataFrame =
     isotonicFit(Tables.events(s, d), col("event_type"),
-        expr(Analytics.hourOfDaySql("ts")),
+        Analytics.hourOfDay(col("ts")),
         expr("case when value >= 2.0D then 1000000L else 0L end"))
       .orderBy(col("g"), col("x"))
   private val q347Sql =
@@ -3461,8 +3453,7 @@ object Profile {
       .select(col("decile"), col("v_a"), col("v_b"),
         when(col("v_b") === 0, lit(null).cast("long"))
           .otherwise(
-            expr("sign(v_a) * sign(v_b) * (abs(v_a) * 1000000L div abs(v_b))")
-              .cast("long"))
+            expr("v_a * 1000000L div v_b"))
           .as("ratio_micro"))
   }
 

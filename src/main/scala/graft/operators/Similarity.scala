@@ -174,15 +174,9 @@ object Similarity {
       val asg = corpus8.select(col("vid").as("cid"),
         kmeansAssignExpr(cents).getField("cl").as("cl"))
       // per query: nprobe nearest centroids (k structs sorted in-row)
-      val ranked = array_sort(array(cents.zipWithIndex.map { case (c, j) =>
-        val d2 = aggregate(
-          zip_with(col("q"), array(c.map(lit): _*), (a, b) => {
-            val t = a * lit(1000000L) - b; t * t
-          }), lit(0L), (acc, x) => acc + x)
-        struct(d2.as("d2"), lit(j.toLong).as("cl"))
-      }: _*))
       val probes = queries8.select(col("vid").as("qid"),
-          explode(slice(ranked, 1, nprobe)).as("p"))
+          explode(slice(array_sort(centroidDistances(cents)), 1, nprobe))
+            .as("p"))
         .select(col("qid"), col("p.cl").as("cl"))
       val cand = probes.join(asg, Seq("cl")).select(col("qid"), col("cid"))
       val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_candidates"))
@@ -1965,8 +1959,8 @@ object Similarity {
     *
     * Exact path: components quantize to integer micros map-side
     * (float→double is exact; floor(x·1e6) identical both engines), sums
-    * and the per-(group, cohort, pos) means are BIGINT (sign-split
-    * floor), and the centroid cosine's dot/norms accumulate as exact
+    * and the per-(group, cohort, pos) means are BIGINT (truncating
+    * division), and the centroid cosine's dot/norms accumulate as exact
     * BIGINTs over positions — ONE double finish (sqrt·sqrt·divide,
     * correctly-rounded single ops), bin6, −0.0-canonicalized.
     *
@@ -1986,7 +1980,7 @@ object Similarity {
       .groupBy(col("g"), col("in_a"), col("pos"))
       .agg(sum(col("xm")).as("sm"), count(lit(1)).as("nc"))
       .select(col("g"), col("in_a"), col("pos"),
-        expr("sign(sm) * (abs(sm) div nc)").cast("long").as("m"))
+        expr("sm div nc").as("m"))
     val a = comps.filter(col("in_a"))
       .select(col("g"), col("pos"), col("m").as("ma"))
     val b = comps.filter(!col("in_a"))
@@ -2109,7 +2103,7 @@ object Similarity {
       .agg(sum(micro(col("x"))).as("sm"),
         count(lit(1)).as("nc"))
       .select(col("cl"), col("pos"),
-        expr("sign(sm) * (abs(sm) div nc)").cast("long").as("m"))
+        expr("sm div nc").as("m"))
     val eval = df.filter(!trainPred)
       .select(col(idCol).as("vid"), col(labelCol).as("true_label"),
         posexplode(col(vecCol)).as(Seq("pos", "x")))
@@ -2265,41 +2259,24 @@ object Similarity {
       .limit(topN)
   }
 
-  /** Full Lloyd k-means over int8-quantized vectors, T iterations — the
-    * codebook TRAINER behind the IVF family (ivfTopK / knnOutliersIvf
-    * consume a partitioning like the one this produces; until now the
-    * buckets were hash-seeded, this is the quality path).
-    *
-    * Cross-engine determinism (the [[Supervised.logisticFit]] recipe):
-    * centroids live on the driver in exact MICRO-quantized integers
-    * (so fractional means survive without floats); assignment is the
-    * exact integer argmin of Σ(x·10⁶ − c)² with ties to the lowest
-    * cluster id (one in-row array_min over (d², id) structs — no
-    * shuffle); the update is floor-division of exact component sums.
-    * Seeds are the k lowest-id vectors. Empty clusters keep their
-    * previous centroid. Per-term bound: (254·10⁶)²·d ≈ 4.2e18·(d/64)
-    * < 2^63 for d ≤ 140 — the caller's dimension contract.
-    *
-    * Scale: each iteration is one map-side assignment pass plus one
-    * (cluster, dim)-keyed aggregation — k·d rows of METADATA collected
-    * to the driver, never corpus data; T sequential scans total, the
-    * Lloyd lower bound.
+  /** One (d², cluster) struct per MICRO-quantized centroid, d² the
+    * exact integer Σ(x·10⁶ − c)² — a pure map-side expression over the
+    * int8-quantized vector column `q`. Structs order by (d², id), so
+    * array_min is the assignment (ties to the lowest id) and array_sort
+    * ranks the probes.
     */
-  /** The exact integer argmin over MICRO-quantized centroids: one
-    * (d², cluster) struct per centroid, array_min picks (min d², lowest
-    * id) — a pure map-side expression over the int8-quantized vector
-    * column `q`.
-    */
-  private def kmeansAssignExpr(cents: Array[Array[Long]]): Column = {
-    val cands = cents.zipWithIndex.map { case (c, j) =>
+  private def centroidDistances(cents: Array[Array[Long]]): Column =
+    array(cents.zipWithIndex.map { case (c, j) =>
       val d2 = aggregate(
         zip_with(col("q"), array(c.map(lit): _*), (a, b) => {
           val t = a * lit(1000000L) - b; t * t
         }), lit(0L), (acc, x) => acc + x)
       struct(d2.as("d2"), lit(j.toLong).as("cl"))
-    }
-    array_min(array(cands: _*))
-  }
+    }: _*)
+
+  /** The exact integer argmin over MICRO-quantized centroids. */
+  private def kmeansAssignExpr(cents: Array[Array[Long]]): Column =
+    array_min(centroidDistances(cents))
 
   /** Lloyd iterations only — returns the trained MICRO-integer centroid
     * arrays (driver metadata, k·d longs). [[kmeansFit]] reports the fit
@@ -2332,6 +2309,26 @@ object Similarity {
     cents
   }
 
+  /** Full Lloyd k-means over int8-quantized vectors, T iterations — the
+    * codebook TRAINER behind the IVF family (ivfTopK / knnOutliersIvf
+    * consume a partitioning like the one this produces; until now the
+    * buckets were hash-seeded, this is the quality path).
+    *
+    * Cross-engine determinism (the [[Supervised.logisticFit]] recipe):
+    * centroids live on the driver in exact MICRO-quantized integers
+    * (so fractional means survive without floats); assignment is the
+    * exact integer argmin of Σ(x·10⁶ − c)² with ties to the lowest
+    * cluster id (one in-row array_min over (d², id) structs — no
+    * shuffle); the update is floor-division of exact component sums.
+    * Seeds are the k lowest-id vectors. Empty clusters keep their
+    * previous centroid. Per-term bound: (254·10⁶)²·d ≈ 4.2e18·(d/64)
+    * < 2^63 for d ≤ 140 — the caller's dimension contract.
+    *
+    * Scale: each iteration is one map-side assignment pass plus one
+    * (cluster, dim)-keyed aggregation — k·d rows of METADATA collected
+    * to the driver, never corpus data; T sequential scans total, the
+    * Lloyd lower bound.
+    */
   def kmeansFit(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, "kmeansFit needs k >= 1 and iters >= 1")
@@ -2656,9 +2653,7 @@ object Similarity {
         max(col("p")).as("max_proj_micro"), sum(col("p")).as("s"))
       .select(col("g"), col("n"), col("min_proj_micro"),
         col("max_proj_micro"),
-        expr("""cast((case when s < 0 then -1L else 1L end)
-             * (abs(cast(s as decimal(38,0))) div n) as long)""")
-          .as("mean_proj_micro"))
+        expr("cast(s as decimal(38,0)) div n").as("mean_proj_micro"))
   }
 
   /** PCA RESIDUAL outliers: the vectors least explained by the corpus'
@@ -2807,8 +2802,7 @@ object Similarity {
     * kernel (double left-to-right accumulation, bit-identical to the
     * oracle's `list_sum` form) and quantize AFTER the kernel as
     * floor(norm²·10⁶) — one deterministic float path, then exact BIGINT
-    * aggregation (sign-split mean; norms are nonnegative but the
-    * convention costs nothing).
+    * aggregation (truncated mean).
     *
     * Scale design: one map-side kernel pass, one partial-aggregated
     * groupBy — |groups| rows cross the wire.
@@ -2826,8 +2820,7 @@ object Similarity {
         sum(col("n2")).as("s"))
       .select(col("g"), col("n"), col("n_zero"), col("min_norm2_micro"),
         col("max_norm2_micro"),
-        expr("sign(s) * (abs(s) div n)").cast("long")
-          .as("mean_norm2_micro"))
+        expr("s div n").as("mean_norm2_micro"))
   }
 
   // ---- q293: is any label's embedding mass degenerate? ------------------------

@@ -1147,7 +1147,7 @@ object Sketches {
   // the estimate has something real to approximate.
   private def q322(s: SparkSession, d: String): DataFrame =
     audienceSketchReport(Tables.events(s, d), col("event_type"),
-      expr(s"user_id * 100 + ${Analytics.dayIdSql("ts")}"), k = 64)
+      col("user_id") * 100 + Analytics.dayId(col("ts")), k = 64)
       .orderBy(col("seg_a"), col("seg_b"))
   private val q322Sql =
     s"""WITH su AS (

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import FixedPoint.{fd, floorDiv}
+import FixedPoint.{fd, fdH, floorDiv}
 
 /** Supervised learning primitives as pure aggregation pipelines — the
   * "train a small model inside the warehouse" surface (reference:
@@ -145,11 +145,6 @@ object Supervised {
     } finally proj.unpersist()
   }
 
-  /** Generated unrolled-fold oracle for [[logisticFit]]: w0 carries the
-    * zero weights, then per iteration one gradient CTE over the feature
-    * projection joined to the previous weight row, exactly the driver
-    * fold. featsSql projects columns y, x0..x{k-1}.
-    */
   /** The unrolled logistic-GD CTE chain shared by [[logisticFitSql]]
     * and [[ipwAteSql]]: `f` (the projection), `nn`, and w0..w<iters>.
     * `featsSql` must project y, x0..x{k-1} (extra columns ride along).
@@ -185,6 +180,11 @@ object Supervised {
     s"floor(1.0/(1.0+exp(-(($z)/1e6)))*$SigScale + 0.5)::BIGINT"
   }
 
+  /** Generated unrolled-fold oracle for [[logisticFit]]: w0 carries the
+    * zero weights, then per iteration one gradient CTE over the feature
+    * projection joined to the previous weight row, exactly the driver
+    * fold. featsSql projects columns y, x0..x{k-1}.
+    */
   private def logisticFitSql(featsSql: String, names: Seq[String],
       lrShift: Int, iters: Int): String = {
     val k = names.size
@@ -344,9 +344,6 @@ object Supervised {
         sum(y)::HUGEINT AS sy, sum(x1*y)::HUGEINT AS s1y,
         sum(x2*y)::HUGEINT AS s2y, sum(y*y)::HUGEINT AS syy
       FROM (""" + projSql + "))"
-    def fdH(a: String, b: String) =
-      s"(($a)//($b) + (CASE WHEN ($a) % ($b) != 0 AND" +
-        s" sign(($a) % ($b)) != sign($b) THEN -1 ELSE 0 END))"
     val blocks = lambdas.map { lam =>
       s"""SELECT $lam::BIGINT AS lambda, b0::BIGINT AS b0_micro,
         b1::BIGINT AS b1_micro, b2::BIGINT AS b2_micro,

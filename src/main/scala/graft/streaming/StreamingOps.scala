@@ -621,7 +621,7 @@ object StreamingOps {
     * of [[graft.operators.Profile.conformalFdrOutliers]]' p-value: every
     * event is scored against the state BEFORE it (Dawid's prequential
     * discipline — the model never sees the row it prices), with
-    *   ŷ = sign-split mean of all prior values,
+    *   ŷ = truncated mean of all prior values,
     *   r = |y − ŷ|,
     *   p = (1 + #{last calN residuals ≥ r}) / (n_buf + 1)  (micro),
     * then folds the row in (running sums + FIFO residual buffer). Small
@@ -665,7 +665,7 @@ object StreamingOps {
         val out = rows.toVector.sortBy(_._2).map { case (_, ord, y) =>
           val yhat =
             if (st.n == 0L) y
-            else (if (st.s < 0) -1L else 1L) * (math.abs(st.s) / st.n)
+            else st.s / st.n
           val r = math.abs(y - yhat)
           val nBuf = st.buf.size.toLong
           val p = (1L + st.buf.count(_ >= r)) * 1000000L / (nBuf + 1L)

@@ -10,6 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * helper under one of the names the copies used to carry. A plain
   * `div` on operands known to be non-negative is a floor already and is
   * not flagged.
+  *
+  * Nor may it hold a "sign-split" division, `sign(a) * (abs(a) div b)`
+  * or `(case when a < 0 then -1L else 1L end) * (abs(a) div b)`: `div`
+  * truncates toward zero already, so the split only adds a rule, and
+  * the DOUBLE `sign()` loses bits above 2^53. The oracle's DuckDB
+  * spelling (`//`) is reference text and is not flagged.
   */
 class FixedPointSweepSpec extends AnyFunSuite {
 
@@ -17,8 +23,11 @@ class FixedPointSweepSpec extends AnyFunSuite {
     "remainder-sign floor correction" ->
       """(?s)%[^%]{0,160}?\)\s*<\s*0\s*,\s*-1L""".r,
     "BigInt /% floor" -> """/%""".r,
+    "sign-split division" ->
+      ("""(?is)(\bsign(?:um)?\(|\bthen\s+-1L?\b[^/]{0,20}?\belse\s+1L?\s+end\b)""" +
+        """[^/]{0,200}?\babs\([^/]{0,200}?\bdiv\b""").r,
     "local rounding helper" ->
-      """\bdef\s+(bin6|binRound6|fdC|fdc|fdiv|fdB|fdL)\b""".r)
+      """\bdef\s+(bin6|binRound6|fdC|fdc|fdiv|fdB|fdL|fdH|floorDivSql)\b""".r)
 
   test("floor division and bin6 live only in FixedPoint") {
     val root = new java.io.File("src/main/scala")
@@ -31,10 +40,15 @@ class FixedPointSweepSpec extends AnyFunSuite {
       .sortBy(_.getPath).flatMap { f =>
         val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
         // Comment lines become blank so matches keep their line numbers.
+        // A line opening with `*` is code unless a block comment is open:
+        // SQL text continues with `* (abs(..) div ..)` lines.
+        var inBlock = false
         val code = lines.map { l =>
           val t = l.trim
-          if (t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) ""
-          else l
+          val comment = inBlock || t.startsWith("//") || t.startsWith("/*")
+          if (t.startsWith("/*")) inBlock = !t.contains("*/")
+          else if (inBlock && t.contains("*/")) inBlock = false
+          if (comment) "" else l
         }.mkString("\n")
         for {
           (what, re) <- patterns
@@ -46,6 +60,7 @@ class FixedPointSweepSpec extends AnyFunSuite {
       }
     if (hits.nonEmpty)
       fail("rounding rules outside operators.FixedPoint (use " +
-        s"FixedPoint.floorDiv or FixedPoint.bin6):\n  ${hits.mkString("\n  ")}")
+        "FixedPoint.floorDiv or FixedPoint.bin6, or a plain div to " +
+        s"truncate):\n  ${hits.mkString("\n  ")}")
   }
 }

@@ -181,9 +181,8 @@ class RankingSpec extends SparkSpec {
 
   test("binaryEwma halves each older day's weight and uses only maxDays") {
     // Key x: days 0, 1, 2 with cents 100, 200, 400 (latest = 400).
-    // maxDays=2 uses days 2 and 1: num = 400·2 + 200·1, den = 3 ->
-    // ewma = 2800... wait: weights 2^(2-1)=2 (rn=1), 2^(2-2)=1 (rn=2):
-    // (400·2 + 200) div 3 = 333.
+    // maxDays = 2 uses days 2 and 1, weighted 2^(2-1) = 2 (rn = 1) and
+    // 2^(2-2) = 1 (rn = 2): (400·2 + 200·1) div 3 = 333.
     val ev = Seq((0L, 1.0), (86400L, 2.0), (172800L, 4.0))
       .toDF("t", "value")
       .select(lit("x").as("k"),
@@ -192,5 +191,17 @@ class RankingSpec extends SparkSpec {
     val got = Analytics.binaryEwma(ev, "k", "ts", "value", maxDays = 2)
       .as[(String, Long, Long, Long)].head()
     assert(got === (("x", 2L, 2L, 333L)))
+  }
+
+  test("binaryEwma keeps exact cents past 2^53") {
+    // One day of 2^53 + 1 cents with maxDays = 1: num = cents, den = 1.
+    // The quotient must stay a BIGINT; a DOUBLE factor rounds it to 2^53.
+    val ev = Seq((0L, "90071992547409.93")).toDF("t", "value")
+      .select(lit("x").as("k"),
+        org.apache.spark.sql.functions.timestamp_seconds($"t").as("ts"),
+        $"value".cast("decimal(20,2)").as("value"))
+    val got = Analytics.binaryEwma(ev, "k", "ts", "value", maxDays = 1)
+      .as[(String, Long, Long, Long)].head()
+    assert(got === (("x", 1L, 0L, 9007199254740993L)))
   }
 }
