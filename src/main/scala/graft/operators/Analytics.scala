@@ -3313,7 +3313,7 @@ object Analytics {
       .select(datediff(col("lo"), col("fo")).cast("long").as("dur"),
         expr("cast(lo as date) < date'2001-02-01'").as("ev"),
         least(col("cnt"), lit(12L)).as("x"))
-    coxFit(cust, col("dur"), col("ev"), col("x"), iters = 6)
+    coxFit(cust, col("dur"), col("ev"), Seq("" -> col("x")), iters = 6)
   }
   /** Unrolled Newton oracle for [[coxFit]] — one (byt, rs, ui, b) CTE
     * quartet per iteration, the [[Supervised.logisticFitSql]] pattern.
@@ -3366,78 +3366,6 @@ object Analytics {
         least(count(*), 12)::BIGINT AS x
       FROM orders GROUP BY o_custkey""", iters = 6)
 
-  /** TWO-covariate Cox proportional hazards — [[coxFit]]'s Newton scheme
-    * with the full 2×2 information matrix, solved EXACTLY per step by
-    * Cramer's rule in driver BigInt (the [[Supervised.olsFit2]] device):
-    * risk-set sums add S1₂/S2₁₂/S2₂₂, the score is a 2-vector, and the
-    * update is Δβ = I⁻¹U evaluated as floor-divided determinant ratios.
-    * Same single-site clamped-exp quantization, so the fit stays
-    * bit-identical cross-engine; the oracle unrolls the identical
-    * matrix algebra per iteration.
-    */
-  def coxFit2(df: DataFrame, durationCol: Column, eventCol: Column,
-      x1Col: Column, x2Col: Column, iters: Int): DataFrame = {
-    require(iters >= 1, "coxFit2 needs iters >= 1")
-    val s = df.sparkSession
-    import s.implicits._
-    val subj = df.select(durationCol.cast("long").as("t"),
-      eventCol.cast("long").as("e"), x1Col.cast("long").as("x1"),
-      x2Col.cast("long").as("x2")).persist()
-    try {
-      var b1 = BigInt(0); var b2 = BigInt(0)
-      var lastU1 = BigInt(0); var lastU2 = BigInt(0)
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("t").desc)
-        .rowsBetween(Long.MinValue, 0)
-      for (_ <- 1 to iters) {
-        val wq = floor(exp(least(greatest(
-            (lit(b1.toLong) * col("x1") + lit(b2.toLong) * col("x2")) /
-              lit(1e6), lit(-20.0)), lit(20.0)))
-          * lit(1048576.0) + lit(0.5)).cast("decimal(38,0)")
-        val byt = subj.groupBy("t").agg(
-          sum(wq).as("sw"), sum(wq * col("x1")).as("sw1"),
-          sum(wq * col("x2")).as("sw2"),
-          sum(wq * col("x1") * col("x1")).as("sw11"),
-          sum(wq * col("x1") * col("x2")).as("sw12"),
-          sum(wq * col("x2") * col("x2")).as("sw22"),
-          sum(col("e")).as("d"), sum(col("e") * col("x1")).as("dx1"),
-          sum(col("e") * col("x2")).as("dx2"))
-        val rs = byt.select(col("t"), col("d"), col("dx1"), col("dx2"),
-          sum(col("sw")).over(w).as("s0"), sum(col("sw1")).over(w).as("s1"),
-          sum(col("sw2")).over(w).as("s2"),
-          sum(col("sw11")).over(w).as("s11"),
-          sum(col("sw12")).over(w).as("s12"),
-          sum(col("sw22")).over(w).as("s22"))
-        def bq(sj: String) =
-          floorDiv((col(sj) * lit(1000000L)).cast("decimal(38,0)"), col("s0"))
-        def bb(si: String, sj: String) =
-          floorDiv((bq(si) * bq(sj)).cast("decimal(38,0)"), lit(1000000L))
-        val ui = rs.filter(col("d") > 0).agg(
-          sum(col("dx1") * lit(1000000L) - col("d") * bq("s1")).as("u1"),
-          sum(col("dx2") * lit(1000000L) - col("d") * bq("s2")).as("u2"),
-          sum(col("d") * (bq("s11") - bb("s1", "s1"))).as("i11"),
-          sum(col("d") * (bq("s12") - bb("s1", "s2"))).as("i12"),
-          sum(col("d") * (bq("s22") - bb("s2", "s2"))).as("i22"))
-          .head()
-        val (u1, u2) = (BigInt(ui.getLong(0)), BigInt(ui.getLong(1)))
-        val (i11, i12, i22) = (BigInt(ui.getLong(2)), BigInt(ui.getLong(3)),
-          BigInt(ui.getLong(4)))
-        lastU1 = u1; lastU2 = u2
-        val det = i11 * i22 - i12 * i12
-        if (det > 0) {
-          b1 += floorDiv((i22 * u1 - i12 * u2) * 1000000, det)
-          b2 += floorDiv((i11 * u2 - i12 * u1) * 1000000, det)
-        }
-      }
-      val counts = subj.agg(sum("e"), count(lit(1))).head()
-      s.createDataset(Seq(
-        ("beta1_micro", b1.toLong), ("beta2_micro", b2.toLong),
-        ("n_events", counts.getLong(0)), ("n_subjects", counts.getLong(1)),
-        ("score1_residual_micro", lastU1.toLong),
-        ("score2_residual_micro", lastU2.toLong)))
-        .toDF("term", "value").orderBy("term")
-    } finally subj.unpersist()
-  }
-
   // ---- q400: churn hazard vs order frequency AND spend ------------------------
   // The q383 fixture with a second covariate: does spend carry hazard
   // signal beyond frequency? (Frequency keeps its negative slope; the
@@ -3450,7 +3378,8 @@ object Analytics {
         expr("cast(lo as date) < date'2001-02-01'").as("ev"),
         least(col("cnt"), lit(12L)).as("x1"),
         least(expr("CAST(spend / 1000000 AS BIGINT)"), lit(8L)).as("x2"))
-    coxFit2(cust, col("dur"), col("ev"), col("x1"), col("x2"), iters = 6)
+    coxFit(cust, col("dur"), col("ev"),
+      Seq("1" -> col("x1"), "2" -> col("x2")), iters = 6)
   }
   private def coxFit2Sql(subjSql: String, iters: Int): String = {
     val levels = scala.collection.mutable.ArrayBuffer(
@@ -3562,70 +3491,94 @@ object Analytics {
          FROM arr) r
        ORDER BY t"""
 
-  /** Cox proportional-hazards fit for a single integer covariate, Newton
+  /** Cox proportional-hazards fit for k integer covariates, Newton
     * iterations with Breslow tie handling — the REGRESSION member of the
     * survival family ([[kaplanMeier]] describes, [[logRank]] tests a
-    * binary split, this quantifies a graded effect as a log-hazard
-    * slope).
+    * binary split, this quantifies graded effects as log-hazard slopes,
+    * each adjusted for the others).
     *
     * Cross-engine determinism (the [[Supervised.logisticFit]] recipe):
-    * β lives on the driver in exact micros; each Newton step is ONE
-    * distributed aggregation. The only float op is exp(β·x/10⁶) —
+    * β⃗ lives on the driver in exact micros; each Newton step is ONE
+    * distributed aggregation. The only float op is exp(β⃗·x⃗/10⁶) —
     * clamped to ±20 and quantized to 1/2^20 units at its single site —
-    * so risk-set sums S0/S1/S2 (DECIMAL(38,0) cumulative windows over
-    * the per-time collapse), the Breslow score U = Σ_t (dx_t·10⁶ −
-    * d_t·⌊S1·10⁶/S0⌋) and information I are exact integer algebra, and
-    * the update is floor-division. The oracle unrolls the identical
-    * fold as per-iteration CTE chains.
+    * so the risk-set sums S0, S1_j, S2_ij (DECIMAL(38,0) cumulative
+    * windows over the per-time collapse), the Breslow score
+    * U_j = Σ_t (dx_j,t·10⁶ − d_t·⌊S1_j·10⁶/S0⌋) and the information
+    * I_ij = Σ_t d_t·(⌊S2_ij·10⁶/S0⌋ − ⌊⌊S1_i·10⁶/S0⌋·⌊S1_j·10⁶/S0⌋/10⁶⌋)
+    * are exact integer algebra. The step Δβ⃗ = I⁻¹U⃗ is solved exactly by
+    * [[FixedPoint.cramer]] in driver BigInt and floored to micros; a step
+    * whose det(I) ≤ 0 is skipped. The oracle unrolls the identical fold
+    * as per-iteration CTE chains.
     *
     * Scale: the corpus collapses to one row per DISTINCT DURATION
     * (quantized-domain contract, the [[kaplanMeier]] treatment) before
     * the single-partition cumulative window; each iteration re-scans
-    * only the persisted (t,e,x) projection with map-side partials.
-    * Output: term/value rows — beta_micro, n_events, n_subjects, and
-    * score_residual_micro (the score at the LAST update's β, ≈0 at
-    * convergence).
+    * only the persisted (t, e, x⃗) projection with map-side partials.
+    * Output: term/value rows — `beta<name>_micro` per covariate,
+    * n_events, n_subjects, and `score<name>_residual_micro` (the score
+    * at the LAST update's β⃗, ≈0 at convergence).
     */
   def coxFit(df: DataFrame, durationCol: Column, eventCol: Column,
-      xCol: Column, iters: Int): DataFrame = {
+      covariates: Seq[(String, Column)], iters: Int): DataFrame = {
     require(iters >= 1, "coxFit needs iters >= 1")
+    require(covariates.nonEmpty, "coxFit needs a covariate")
     val s = df.sparkSession
     import s.implicits._
-    val subj = df.select(durationCol.cast("long").as("t"),
-      eventCol.cast("long").as("e"), xCol.cast("long").as("x")).persist()
+    val ks = covariates.indices
+    def x(j: Int) = col(s"x$j")
+    val subj = df.select(durationCol.cast("long").as("t") +:
+        eventCol.cast("long").as("e") +:
+        ks.map(j => covariates(j)._2.cast("long").as(s"x$j")): _*)
+      .persist()
+    val pairs = for (i <- ks; j <- i until ks.size) yield (i, j)
     try {
-      var beta = BigInt(0)
-      var lastU = BigInt(0)
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("t").desc)
-        .rowsBetween(Long.MinValue, 0)
+      val beta = ks.map(_ => BigInt(0)).toArray
+      var lastU = ks.map(_ => BigInt(0))
+      val w = Window.orderBy(col("t").desc).rowsBetween(Long.MinValue, 0)
       for (_ <- 1 to iters) {
         val wq = floor(exp(least(greatest(
-            lit(beta.toLong) * col("x") / lit(1e6), lit(-20.0)), lit(20.0)))
+            ks.map(j => lit(beta(j).toLong) * x(j)).reduce(_ + _) / lit(1e6),
+            lit(-20.0)), lit(20.0)))
           * lit(1048576.0) + lit(0.5)).cast("decimal(38,0)")
-        val byt = subj.groupBy("t").agg(
-          sum(wq).as("sw"), sum(wq * col("x")).as("swx"),
-          sum(wq * col("x") * col("x")).as("swx2"),
-          sum(col("e")).as("d"), sum(col("e") * col("x")).as("dx"))
-        val rs = byt.select(col("t"), col("d"), col("dx"),
-          sum(col("sw")).over(w).as("s0"), sum(col("swx")).over(w).as("s1"),
-          sum(col("swx2")).over(w).as("s2"))
+        val byt = subj.groupBy("t").agg(sum(wq).as("sw"),
+          ks.map(j => sum(wq * x(j)).as(s"sw_$j")) ++
+            pairs.map { case (i, j) =>
+              sum(wq * x(i) * x(j)).as(s"sw_${i}_$j") } ++
+            (sum(col("e")).as("d") +:
+              ks.map(j => sum(col("e") * x(j)).as(s"dx_$j"))): _*)
+        val rs = byt.select(Seq(col("t"), col("d")) ++
+          ks.map(j => col(s"dx_$j")) ++
+          (sum(col("sw")).over(w).as("s0") +:
+            ks.map(j => sum(col(s"sw_$j")).over(w).as(s"s1_$j"))) ++
+          pairs.map { case (i, j) =>
+            sum(col(s"sw_${i}_$j")).over(w).as(s"s2_${i}_$j") }: _*)
         def bq(sj: String) =
           floorDiv((col(sj) * lit(1000000L)).cast("decimal(38,0)"), col("s0"))
-        val b = bq("s1")
-        val ui = rs.filter(col("d") > 0).agg(
-          sum(col("dx") * lit(1000000L) - col("d") * b).as("u"),
-          sum(col("d") * (bq("s2") -
-            floorDiv((b * b).cast("decimal(38,0)"), lit(1000000L)))).as("i"))
-          .head()
-        val (u, inf) = (BigInt(ui.getLong(0)), BigInt(ui.getLong(1)))
+        val terms = ks.map(j =>
+            sum(col(s"dx_$j") * lit(1000000L) - col("d") * bq(s"s1_$j"))) ++
+          pairs.map { case (i, j) =>
+            sum(col("d") * (bq(s"s2_${i}_$j") -
+              floorDiv((bq(s"s1_$i") * bq(s"s1_$j")).cast("decimal(38,0)"),
+                lit(1000000L)))) }
+        val ui = rs.filter(col("d") > 0).agg(terms.head, terms.tail: _*).head()
+        val u = ks.map(j => BigInt(ui.getLong(j)))
+        val inf = pairs.zipWithIndex
+          .map { case (p, q) => p -> BigInt(ui.getLong(ks.size + q)) }.toMap
+        val (det, dj) = FixedPoint.cramer(
+          ks.map(i => ks.map(j => inf((i min j, i max j)))), u)
         lastU = u
-        if (inf > 0) beta += floorDiv(u * 1000000, inf)
+        if (det > 0)
+          for (j <- ks) beta(j) += floorDiv(dj(j) * 1000000, det)
       }
       val counts = subj.agg(sum("e"), count(lit(1))).head()
-      s.createDataset(Seq(
-        ("beta_micro", beta.toLong), ("n_events", counts.getLong(0)),
-        ("n_subjects", counts.getLong(1)),
-        ("score_residual_micro", lastU.toLong)))
+      val names = covariates.map(_._1)
+      s.createDataset(
+        names.zip(beta).map { case (nm, b) =>
+          (s"beta${nm}_micro", b.toLong) } ++
+          Seq(("n_events", counts.getLong(0)),
+            ("n_subjects", counts.getLong(1))) ++
+          names.zip(lastU).map { case (nm, u) =>
+            (s"score${nm}_residual_micro", u.toLong) })
         .toDF("term", "value").orderBy("term")
     } finally subj.unpersist()
   }

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The two rounding rules every fixed-point operator rounds with, and the
-  * oracle's spelling of the first. Operators keep their state in exact
+/** The two rounding rules every fixed-point operator rounds with, the
+  * oracle's spelling of the first, and the one exact linear solve the
+  * regression fits share ([[cramer]]). Operators keep their state in exact
   * integers and round at one site, so a query gives the same bits as its
   * DuckDB oracle under any partitioning — and a recomputed partition
   * gives the same bits as the lost one.
@@ -38,6 +39,23 @@ private[operators] object FixedPoint {
   def floorDiv(a: BigInt, b: BigInt): BigInt = {
     val (q, rem) = a /% b
     if (rem.signum != 0 && rem.signum != b.signum) q - 1 else q
+  }
+
+  /** Cramer's rule for a·x = b over exact integers: det(a), and for each
+    * column j the determinant of a with column j replaced by b, so
+    * x_j = d_j / det. Callers floor the ratios to their own scale and
+    * guard det themselves. Laplace expansion, for the small k of the
+    * regression fits.
+    */
+  def cramer(a: Seq[Seq[BigInt]], b: Seq[BigInt]): (BigInt, Seq[BigInt]) = {
+    def det(m: Seq[Seq[BigInt]]): BigInt =
+      if (m.isEmpty) BigInt(1)
+      else m.head.indices.map { j =>
+        val minor = det(m.tail.map(r => r.patch(j, Nil, 1)))
+        if (j % 2 == 0) m.head(j) * minor else -m.head(j) * minor
+      }.sum
+    (det(a), a.indices.map(j =>
+      det(a.zip(b).map { case (r, bi) => r.updated(j, bi) })))
   }
 
   /** x rounded half up to 6 decimals. */

@@ -31,8 +31,11 @@ object Similarity {
   /** IVF: seed centroids are the first NumSeeds vectors (deterministic). */
   private val NumSeeds = 16
 
-  /** One scored (query, candidate) pair awaiting ranking. */
-  final case class Scored(query_id: Long, neighbor_id: Long, c: Double)
+  /** One scored (query, candidate) pair awaiting ranking; `c` is null
+    * when the kernel defines no score.
+    */
+  final case class Scored(query_id: Long, neighbor_id: Long,
+      c: java.lang.Double)
 
   /** (c desc, neighbor_id asc) — identical tie-break to the window
     * row_number formulation and the DuckDB oracle, INCLUDING NaN: both
@@ -64,14 +67,17 @@ object Similarity {
     * null embedding) are dropped as "no similarity defined" — the one
     * deliberate divergence from a window, which would rank them below all
     * candidates and could surface them when a query has < k scored rows.
+    * The drop is a typed filter on the scored rows: a Column filter on
+    * `c` is pushed into the join condition as `isnotnull(kernel(..))`,
+    * and the kernel then runs twice per candidate pair.
     */
   def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val s = scored.sparkSession
     import s.implicits._
     val top = new TypedAggs.BoundedTopK[Scored](k, scoredOrd).toColumn
     scored.select(col("query_id"), col("neighbor_id"), col("c"))
-      .filter(col("c").isNotNull)
       .as[Scored]
+      .filter(_.c != null)
       .groupByKey(_.query_id)
       .agg(top.name("top"))
       .flatMap { case (_, rows) =>

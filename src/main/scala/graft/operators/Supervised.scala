@@ -206,84 +206,31 @@ object Supervised {
 
   /** Ordinary least squares for TWO regressors plus intercept, solved
     * EXACTLY by Cramer's rule over the normal equations — no iteration,
-    * no floating point until the caller interprets the micros. One
-    * distributed pass collects the nine moment sums (pure BIGINT — the
-    * caller keeps features/target integer-scaled so Σx·y stays well
-    * under 2^63); the 3×3 determinants are driver-side BigInt (exact at
-    * any magnitude); a second pass computes SSE/SST against the
-    * micro-quantized coefficients as DECIMAL(38,0) sums of squared
-    * integer residuals. R² is reported in ppm with ONE fixed truncation
-    * chain (sst floor-divided by 10⁶ first, so the dividend never
-    * outgrows 38 digits at 100-TB row counts).
-    *
-    * Scale: both passes are map-side-partial aggregations to a single
-    * 9-number (then 2-number) row — the same shape as a count(*); the
-    * only driver state is the moment vector. This is the closed-form
-    * companion to [[logisticFit]]'s iterative fit.
+    * no floating point until the caller interprets the micros. It is the
+    * λ = 0 point of [[ridgePath2]]'s solve ([[ridgeFit]]), read out as
+    * term/value rows: b0/b1/b2 in micros, n_rows and R² in ppm. This is
+    * the closed-form companion to [[logisticFit]]'s iterative fit.
     */
   def olsFit2(df: DataFrame, yCol: Column, x1Col: Column,
       x2Col: Column): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val r = df.select(yCol.cast("long").as("y"), x1Col.cast("long").as("x1"),
-      x2Col.cast("long").as("x2")).persist()
-    try {
-      val m = r.agg(count(lit(1)).as("n"), sum("x1").as("s1"),
-        sum("x2").as("s2"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x2") * col("x2")).as("s22"), sum("y").as("sy"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y")).head()
-      require(m.getLong(0) > 2, "olsFit2 needs more rows than parameters")
-      val Seq(n, s1, s2, s11, s12, s22, sy, s1y, s2y) =
-        (0 until 9).map(i => BigInt(m.getLong(i)))
-      val det = n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2) +
-        s2 * (s1 * s12 - s11 * s2)
-      require(det != 0, "olsFit2: singular normal matrix (collinear features)")
-      val det0 = sy * (s11 * s22 - s12 * s12) -
-        s1 * (s1y * s22 - s12 * s2y) + s2 * (s1y * s12 - s11 * s2y)
-      val det1 = n * (s1y * s22 - s12 * s2y) - sy * (s1 * s22 - s12 * s2) +
-        s2 * (s1 * s2y - s1y * s2)
-      val det2 = n * (s11 * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2) +
-        sy * (s1 * s12 - s11 * s2)
-      val M = BigInt(1000000)
-      val (b0, b1, b2) = (floorDiv(det0 * M, det), floorDiv(det1 * M, det),
-        floorDiv(det2 * M, det))
-      require(b0.isValidLong && b1.isValidLong && b2.isValidLong,
-        "olsFit2: coefficient out of BIGINT micro range — rescale inputs")
-      val ym = floorDiv(sy * M, n)
-      val resid = (col("y") * lit(1000000L) - (lit(b0.toLong) +
-        lit(b1.toLong) * col("x1") + lit(b2.toLong) * col("x2")))
-        .cast("decimal(38,0)")
-      val dev = (col("y") * lit(1000000L) - lit(ym.toLong))
-        .cast("decimal(38,0)")
-      val e = r.agg(sum(resid * resid).as("sse"), sum(dev * dev).as("sst"))
-        .head()
-      val (sse, sst) = (BigInt(e.getDecimal(0).toBigInteger),
-        BigInt(e.getDecimal(1).toBigInteger))
-      val r2 = if (sst == 0) BigInt(0) else M - floorDiv(sse, floorDiv(sst, M))
-      s.createDataset(Seq(
-        ("b0_micro", b0.toLong), ("b1_micro", b1.toLong),
-        ("b2_micro", b2.toLong), ("n_rows", n.toLong),
-        ("r2_ppm", r2.toLong))).toDF("term", "value").orderBy("term")
-    } finally r.unpersist()
+    val (n, Seq((_, b0, b1, b2, r2))) = ridgeFit(df, yCol, x1Col, x2Col,
+      Seq(0L), "olsFit2",
+      _ => "olsFit2: singular normal matrix (collinear features)")
+    s.createDataset(Seq(("b0_micro", b0), ("b1_micro", b1),
+        ("b2_micro", b2), ("n_rows", n), ("r2_ppm", r2)))
+      .toDF("term", "value").orderBy("term")
   }
 
   /** Ridge regularization PATH for two regressors plus (unpenalized)
-    * intercept — [[olsFit2]]'s closed-form Cramer solve with λ added to
-    * the feature diagonal of the normal matrix, evaluated at every
-    * requested λ from the SAME ten moment sums: the entire path costs
-    * ONE distributed pass, because coefficients AND the R² readout are
-    * pure moment algebra (SSE expands to moments; no residual pass).
-    * λ = 0 reproduces olsFit2's coefficients bit for bit. The
+    * intercept: the normal equations with λ added to the feature
+    * diagonal, solved by Cramer's rule at every requested λ from the
+    * SAME ten moment sums. The entire path costs ONE distributed pass,
+    * because coefficients AND the R² readout are pure moment algebra
+    * ([[ridgeFit]]); [[olsFit2]] is the same solve at λ = 0. The
     * collinearity instrument: watch b1/b2 trade mass as λ grows while
     * R² barely moves — the classic "the pair is one feature" read.
-    *
-    * Exactness: moments are BIGINT sums; determinants and SSE/SST are
-    * driver-side BigInt (HUGEINT in the oracle); coefficients are
-    * floor-division micros. Keep features integer-scaled so Σx²y² stays
-    * well under 2^63 per SUM (the olsFit2 contract).
     */
   def ridgePath2(df: DataFrame, yCol: Column, x1Col: Column,
       x2Col: Column, lambdas: Seq[Long]): DataFrame = {
@@ -291,46 +238,55 @@ object Supervised {
       "ridgePath2 needs non-negative lambdas")
     val s = df.sparkSession
     import s.implicits._
+    val (_, rows) = ridgeFit(df, yCol, x1Col, x2Col, lambdas, "ridgePath2",
+      lam => s"ridgePath2: singular at lambda=$lam")
+    s.createDataset(rows)
+      .toDF("lambda", "b0_micro", "b1_micro", "b2_micro", "r2_ppm")
+      .orderBy("lambda")
+  }
+
+  /** The moment pass and exact solve behind [[olsFit2]] and
+    * [[ridgePath2]]. One aggregation sums the ten moments of (y, x1, x2)
+    * in DECIMAL(38,0): Σy² passes 2^63 on q382 at sf0.1. Each product is
+    * formed in BIGINT, so keep inputs integer-scaled with |x·y| < 2^63.
+    * Per λ, [[FixedPoint.cramer]] solves the normal matrix with λ on the
+    * feature diagonal in driver BigInt (HUGEINT in the oracle), and the
+    * coefficients floor to micros. SSE and SST expand exactly into the
+    * UNPENALIZED moments, so R² needs no residual pass; it is reported in
+    * ppm with ONE fixed truncation chain (SST floor-divided by 10⁶
+    * first). Returns n and, per λ, (λ, b0, b1, b2, r2_ppm).
+    */
+  private def ridgeFit(df: DataFrame, yCol: Column, x1Col: Column,
+      x2Col: Column, lambdas: Seq[Long], who: String,
+      singular: Long => String): (Long, Seq[(Long, Long, Long, Long, Long)]) = {
+    def wide(c: Column) = sum(c.cast("decimal(38,0)"))
+    val (y, x1, x2) = (col("y"), col("x1"), col("x2"))
     val m = df.select(yCol.cast("long").as("y"),
         x1Col.cast("long").as("x1"), x2Col.cast("long").as("x2"))
-      .agg(count(lit(1)).as("n"), sum("x1").as("s1"), sum("x2").as("s2"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x2") * col("x2")).as("s22"), sum("y").as("sy"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y"),
-        sum(col("y") * col("y")).as("syy")).head()
-    require(m.getLong(0) > 2, "ridgePath2 needs more rows than parameters")
-    val Seq(n, s1, s2, s11, s12, s22, sy, s1y, s2y, syy) =
-      (0 until 10).map(i => BigInt(m.getLong(i)))
+      .agg(count(lit(1)), wide(x1), wide(x2), wide(x1 * x1), wide(x1 * x2),
+        wide(x2 * x2), wide(y), wide(x1 * y), wide(x2 * y), wide(y * y))
+      .head()
+    require(m.getLong(0) > 2, s"$who needs more rows than parameters")
+    val n = BigInt(m.getLong(0))
+    val Seq(s1, s2, s11, s12, s22, sy, s1y, s2y, syy) =
+      (1 to 9).map(i => BigInt(m.getDecimal(i).toBigInteger))
     val M = BigInt(1000000)
     val ym = floorDiv(sy * M, n)
     val sst = M * M * syy - 2 * ym * M * sy + n * ym * ym
-    val rows = lambdas.map { lam =>
-      val (a, c) = (s11 + lam, s22 + lam)
-      val det = n * (a * c - s12 * s12) - s1 * (s1 * c - s12 * s2) +
-        s2 * (s1 * s12 - a * s2)
-      require(det != 0, s"ridgePath2: singular at lambda=$lam")
-      val det0 = sy * (a * c - s12 * s12) - s1 * (s1y * c - s12 * s2y) +
-        s2 * (s1y * s12 - a * s2y)
-      val det1 = n * (s1y * c - s12 * s2y) - sy * (s1 * c - s12 * s2) +
-        s2 * (s1 * s2y - s1y * s2)
-      val det2 = n * (a * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2) +
-        sy * (s1 * s12 - a * s2)
-      val (b0, b1, b2) = (floorDiv(det0 * M, det), floorDiv(det1 * M, det),
-        floorDiv(det2 * M, det))
+    (n.toLong, lambdas.map { lam =>
+      val (det, Seq(d0, d1, d2)) = FixedPoint.cramer(Seq(Seq(n, s1, s2),
+        Seq(s1, s11 + lam, s12), Seq(s2, s12, s22 + lam)), Seq(sy, s1y, s2y))
+      require(det != 0, singular(lam))
+      val (b0, b1, b2) = (floorDiv(d0 * M, det), floorDiv(d1 * M, det),
+        floorDiv(d2 * M, det))
       require(b0.isValidLong && b1.isValidLong && b2.isValidLong,
-        "ridgePath2: coefficient out of BIGINT micro range — rescale")
-      // SSE from moments with the UNPENALIZED data sums.
+        s"$who: coefficient out of BIGINT micro range — rescale inputs")
       val sse = M * M * syy + n * b0 * b0 + b1 * b1 * s11 +
         b2 * b2 * s22 - 2 * M * (b0 * sy + b1 * s1y + b2 * s2y) +
         2 * (b0 * b1 * s1 + b0 * b2 * s2 + b1 * b2 * s12)
       val r2 = if (sst == 0) BigInt(0) else M - floorDiv(sse, floorDiv(sst, M))
       (lam, b0.toLong, b1.toLong, b2.toLong, r2.toLong)
-    }
-    s.createDataset(rows)
-      .toDF("lambda", "b0_micro", "b1_micro", "b2_micro", "r2_ppm")
-      .orderBy("lambda")
+    })
   }
 
   /** Generated oracle for [[ridgePath2]]: one moments CTE, then per λ a

@@ -16,6 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * truncates toward zero already, so the split only adds a rule, and
   * the DOUBLE `sign()` loses bits above 2^53. The oracle's DuckDB
   * spelling (`//`) is reference text and is not flagged.
+  *
+  * Nor may it expand a determinant by hand: a `det…` value built from a
+  * difference of products is Cramer's rule written out again, and
+  * `FixedPoint.cramer` is its one home. The oracle SQL's `AS det` text
+  * is reference text and is not flagged; a `det` that is not a
+  * determinant (a detrended frame) has no product difference.
   */
 class FixedPointSweepSpec extends AnyFunSuite {
 
@@ -26,6 +32,8 @@ class FixedPointSweepSpec extends AnyFunSuite {
     "sign-split division" ->
       ("""(?is)(\bsign(?:um)?\(|\bthen\s+-1L?\b[^/]{0,20}?\belse\s+1L?\s+end\b)""" +
         """[^/]{0,200}?\babs\([^/]{0,200}?\bdiv\b""").r,
+    "hand-expanded determinant" ->
+      """\b(?:val|var)\s+det\w*\b[^=\n]*=[^"\n]*\*[^"\n]*-""".r,
     "local rounding helper" ->
       """\bdef\s+(bin6|binRound6|fdC|fdc|fdiv|fdB|fdL|fdH|floorDivSql)\b""".r)
 
@@ -59,8 +67,8 @@ class FixedPointSweepSpec extends AnyFunSuite {
         }
       }
     if (hits.nonEmpty)
-      fail("rounding rules outside operators.FixedPoint (use " +
-        "FixedPoint.floorDiv or FixedPoint.bin6, or a plain div to " +
-        s"truncate):\n  ${hits.mkString("\n  ")}")
+      fail("fixed-point rules outside operators.FixedPoint (use " +
+        "FixedPoint.floorDiv, FixedPoint.bin6 or FixedPoint.cramer, or a " +
+        s"plain div to truncate):\n  ${hits.mkString("\n  ")}")
   }
 }

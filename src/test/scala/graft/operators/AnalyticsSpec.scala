@@ -802,7 +802,8 @@ class AnalyticsSpec extends SparkSpec {
     val df = Seq((1L, true, 2L), (2L, true, 2L), (2L, true, 2L),
       (5L, true, 0L), (6L, true, 0L), (7L, false, 0L), (8L, false, 0L))
       .toDF("dur", "ev", "x")
-    val got = Analytics.coxFit(df, col("dur"), col("ev"), col("x"), 8)
+    val got = Analytics.coxFit(df, col("dur"), col("ev"), Seq("" -> col("x")),
+      8)
       .as[(String, Long)].collect().toMap
     assert(got("beta_micro") > 500000L, got.toString)
     assert(math.abs(got("score_residual_micro")) < 2000L, got.toString)
@@ -850,7 +851,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(rob._4 === 50000L, rob.toString) // keep 2..10 -> mean 5 cents
   }
 
-  test("coxFit2 adjusts away a confounded covariate") {
+  test("coxFit with two covariates adjusts away a confounded covariate") {
     // x1 drives the hazard (high x1 fails early); x2 is pure noise,
     // orthogonal to failure order. The 2x2 Newton solve must give x1 a
     // clearly positive slope and keep |beta2| well below it, with both
@@ -859,8 +860,8 @@ class AnalyticsSpec extends SparkSpec {
       (1L, true, 2L, 1L), (2L, true, 2L, 0L), (2L, true, 2L, 1L),
       (5L, true, 0L, 0L), (6L, true, 0L, 1L), (7L, false, 0L, 0L),
       (8L, false, 0L, 1L)).toDF("dur", "ev", "x1", "x2")
-    val got = Analytics.coxFit2(df, col("dur"), col("ev"), col("x1"),
-        col("x2"), iters = 8)
+    val got = Analytics.coxFit(df, col("dur"), col("ev"),
+        Seq("1" -> col("x1"), "2" -> col("x2")), iters = 8)
       .as[(String, Long)].collect().toMap
     assert(got("beta1_micro") > 500000L, got.toString)
     assert(math.abs(got("beta2_micro")) < got("beta1_micro") / 2, got.toString)
@@ -868,22 +869,23 @@ class AnalyticsSpec extends SparkSpec {
     assert(math.abs(got("score2_residual_micro")) < 5000L, got.toString)
   }
 
-  test("coxFit2 is exact fixed-point: partitioning cannot move a bit") {
+  test("coxFit with two covariates is exact fixed-point: partitioning cannot move a bit") {
     val df = (0 until 60).map(i => ((i % 9 + 1).toLong, i % 4 != 0,
       (i % 5).toLong, (i % 3).toLong)).toDF("dur", "ev", "x1", "x2")
-    val a = Analytics.coxFit2(df, col("dur"), col("ev"), col("x1"),
-      col("x2"), 5).collect()
-    val b = Analytics.coxFit2(df.repartition(13), col("dur"), col("ev"),
-      col("x1"), col("x2"), 5).collect()
+    val xs = Seq("1" -> col("x1"), "2" -> col("x2"))
+    val a = Analytics.coxFit(df, col("dur"), col("ev"), xs, 5).collect()
+    val b = Analytics.coxFit(df.repartition(13), col("dur"), col("ev"), xs,
+      5).collect()
     assert(a.toSeq === b.toSeq)
   }
 
   test("coxFit is exact fixed-point: partitioning cannot move a bit") {
     val df = (0 until 60).map(i =>
       ((i % 9 + 1).toLong, i % 4 != 0, (i % 5).toLong)).toDF("dur", "ev", "x")
-    val a = Analytics.coxFit(df, col("dur"), col("ev"), col("x"), 5).collect()
-    val b = Analytics.coxFit(df.repartition(13), col("dur"), col("ev"),
-      col("x"), 5).collect()
+    val xs = Seq("" -> col("x"))
+    val a = Analytics.coxFit(df, col("dur"), col("ev"), xs, 5).collect()
+    val b = Analytics.coxFit(df.repartition(13), col("dur"), col("ev"), xs,
+      5).collect()
     assert(a.toSeq === b.toSeq)
   }
 
