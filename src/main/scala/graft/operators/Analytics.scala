@@ -4169,8 +4169,8 @@ object Analytics {
   // Per (lang, source): member count + CSV of the 3 smallest doc ids in
   // order — the LISTAGG/string_agg SQL surface. collect_list gathers the
   // whole group, acceptable for id-sized payloads and bounded groups; for
-  // a top-k CSV over huge groups, rank through TypedAggs.BoundedTopK
-  // first (q85 shape) and concat the k survivors instead.
+  // a top-k CSV over huge groups, rank with `row_number() <= k` first
+  // (q85 shape) and concat the k survivors instead.
   private def q99(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .groupBy(col("lang"), col("source"))
@@ -4598,9 +4598,10 @@ object Analytics {
     *
     * Scale note: `collect_list` bounds state by the per-key history — fine
     * for per-user event streams (thousands of events); for keys with
-    * unbounded history, pre-truncate per key (BoundedTopK on recency) or
-    * window by time. The alternative lag(n−1) window form shuffles the
-    * same data but keeps no list state; it pays n−1 window passes.
+    * unbounded history, pre-truncate per key (`row_number() <= n` on
+    * recency) or window by time. The alternative lag(n−1) window form
+    * shuffles the same data but keeps no list state; it pays n−1 window
+    * passes.
     */
   def eventSequences(df: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, typeCol: String, n: Int, k: Int): DataFrame = {

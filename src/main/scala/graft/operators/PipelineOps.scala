@@ -40,16 +40,6 @@ object PipelineOps {
   // Library API
   // ===========================================================================
 
-  /** Row type for the per-key quota heap: best = highest score, ties to
-    * the lowest id. */
-  final case class QuotaDoc(g: String, score: Long, id: Long)
-  private val quotaOrd: Ordering[QuotaDoc] = new Ordering[QuotaDoc] {
-    override def compare(x: QuotaDoc, y: QuotaDoc): Int = {
-      val c = java.lang.Long.compare(y.score, x.score)
-      if (c != 0) c else java.lang.Long.compare(x.id, y.id)
-    }
-  }
-
   /** Per-key quota cap — "at most `cap` documents per domain/source, keep
     * the best" — the anti-domination rule every web-scale corpus applies
     * so one crawl-happy domain cannot own the training mixture. Emits the
@@ -57,27 +47,23 @@ object PipelineOps {
     * rather than the kept rows; compose with a semi-join on the kept ids
     * to materialize the capped corpus.
     *
-    * Scale: ranking rides [[TypedAggs.BoundedTopK]] — each map partition
-    * reduces to ≤ cap rows per key BEFORE the exchange, so the shuffle
-    * carries ~cap·|keys| rows however hot a domain is (a window
-    * row_number — the oracle's formulation — would shuffle and sort every
-    * row of every hot key); totals partial-aggregate in the same pass
-    * shape. The heap tie-break (score desc, id asc) matches the oracle's
-    * ORDER BY exactly, so kept sets are identical, not just same-sized.
+    * Scale: ranking is `row_number() <= cap` over (score desc, id asc),
+    * the oracle's ORDER BY, so kept sets are identical, not just
+    * same-sized. Its Partial `WindowGroupLimit` reduces each map
+    * partition to ≤ cap rows per key BEFORE the exchange, so the shuffle
+    * carries ~cap·|keys| rows however hot a domain is; totals
+    * partial-aggregate in the same pass shape.
     */
   def sourceQuota(df: DataFrame, keyCol: String, scoreCol: String,
       idCol: String, cap: Int): DataFrame = {
     require(cap >= 1, "cap must be >= 1")
-    val session = df.sparkSession
-    import session.implicits._
     val rows = df.select(col(keyCol).cast("string").as("g"),
         col(scoreCol).cast("long").as("score"),
         col(idCol).cast("long").as("id"))
-      .as[QuotaDoc]
-    val top = new TypedAggs.BoundedTopK[QuotaDoc](cap, quotaOrd).toColumn
-    val kept = rows.groupByKey(_.g).agg(top.name("top"))
-      .flatMap { case (_, ks) => ks }
-    val keptAgg = kept.groupBy(col("g"))
+    val w = Window.partitionBy(col("g")).orderBy(col("score").desc, col("id"))
+    val keptAgg = rows.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= cap)
+      .groupBy(col("g"))
       .agg(count(lit(1)).as("n_kept"), sum(col("score")).as("score_kept"))
     val totals = rows.groupBy(col("g"))
       .agg(count(lit(1)).as("n_docs"), sum(col("score")).as("score_total"))
@@ -1741,11 +1727,6 @@ object PipelineOps {
        FROM documents d JOIN w USING (source)
        GROUP BY d.source ORDER BY d.source"""
 
-  /** One sampled row awaiting ranking: group, key, and its md5 draw. */
-  final case class SampleRow(g: String, id: Long, h: String)
-  private val sampleOrd: Ordering[SampleRow] =
-    Ordering.by((r: SampleRow) => (r.h, r.id))
-
   /** EXACTLY-k-per-group deterministic sample: the k keys with the
     * smallest md5 draws in each group. The rate-based
     * [[hashSamplePredicate]] yields a binomial count per group; this
@@ -1754,26 +1735,20 @@ object PipelineOps {
     * (the draw is a pure function of the key, so reruns, retries, and
     * other engines select the identical rows).
     *
-    * Scale design: a bounded-heap aggregation ([[TypedAggs.BoundedTopK]])
-    * — each map partial keeps at most k rows per group, so the exchange
-    * carries k·partitions rows per group instead of the whole corpus.
-    * The window `row_number` formulation (the oracle) would shuffle and
-    * sort every row of every group into |groups| tasks.
+    * Scale design: `row_number() <= k` over (draw, key) per group — the
+    * oracle's formulation. Its Partial `WindowGroupLimit` keeps at most
+    * k rows per group in each map partition, so the exchange carries
+    * k·partitions rows per group instead of the whole corpus.
     */
   def sampleExactPerGroup(df: DataFrame, groupCol: String, keyCol: String,
       k: Int): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val top = new TypedAggs.BoundedTopK[SampleRow](k, sampleOrd).toColumn
-    df.select(col(groupCol).cast("string").as("g"), col(keyCol).as("id"),
+    val w = Window.partitionBy(col("g")).orderBy(col("h"), col("id"))
+    df.select(col(groupCol).cast("string").as("g"),
+        col(keyCol).cast("long").as("id"),
         md5(col(keyCol).cast("string").cast("binary")).as("h"))
-      .as[SampleRow]
-      .groupByKey(_.g)
-      .agg(top.name("top"))
-      .flatMap { case (_, rows) =>
-        rows.zipWithIndex.map { case (r, i) => (r.g, i + 1, r.id) } }
-      .select(col("_1").as(groupCol), col("_2").cast("int").as("sample_rank"),
-        col("_3").as(keyCol))
+      .withColumn("sample_rank", row_number().over(w))
+      .filter(col("sample_rank") <= k)
+      .select(col("g").as(groupCol), col("sample_rank"), col("id").as(keyCol))
   }
 
   // ---- q85: exact-quota deterministic per-group sampling ----------------------

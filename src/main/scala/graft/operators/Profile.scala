@@ -1320,8 +1320,9 @@ object Profile {
     * or semantic dedup.
     *
     * Scale design: the K centroids broadcast; the per-point top-2 scores
-    * route through [[Similarity.rankTopK]]'s bounded heap (2 rows per
-    * point reach the exchange, not the N·K scored relation). The
+    * route through [[Similarity.rankTopK]]'s window group limit (2 rows
+    * per point per map partition reach the exchange, not the N·K scored
+    * relation). The
     * silhouette algebra then runs on micro-quantized BIGINTs — per-point
     * s_micro = (c1−c2)·1e6 div (1e6−c2) — so cluster means are exact
     * integer sums, deterministic under any partitioning.

@@ -28,7 +28,7 @@ import FixedPoint.{fd, floorDiv}
   * into per-query partitions. Quantized scoring is one broadcast of the
   * query vectors against a map-only pass over the corpus with BIGINT dot
   * products ([[graft.functions.DotProductInt]]), ranked through the same
-  * bounded-heap aggregator as every other top-k
+  * window group limit as every other top-k
   * ([[Similarity.rankTopK]]: k rows per map partial cross the wire).
   */
 object Ranking {

@@ -31,64 +31,40 @@ object Similarity {
   /** IVF: seed centroids are the first NumSeeds vectors (deterministic). */
   private val NumSeeds = 16
 
-  /** One scored (query, candidate) pair awaiting ranking; `c` is null
-    * when the kernel defines no score.
-    */
-  final case class Scored(query_id: Long, neighbor_id: Long,
-      c: java.lang.Double)
-
-  /** (c desc, neighbor_id asc) — identical tie-break to the window
-    * row_number formulation and the DuckDB oracle, INCLUDING NaN: both
-    * engines' descending sorts rank NaN above every real score, and
-    * `java.lang.Double.compare` is exactly that total order. (The negated
-    * tuple-key form `by(s => (-s.c, ...))` would rank NaN last instead —
-    * a zero-norm embedding would then return different top-k rows than
-    * the window form.)
-    */
-  private val scoredOrd: Ordering[Scored] = new Ordering[Scored] {
-    override def compare(a: Scored, b: Scored): Int = {
-      val c = java.lang.Double.compare(b.c, a.c) // desc, NaN greatest
-      if (c != 0) c else java.lang.Long.compare(a.neighbor_id, b.neighbor_id)
-    }
-  }
-
-  /** Heap-ranked top-k per query over scored (query_id, neighbor_id, c)
-    * rows — the ranking stage every similarity variant shares.
+  /** Top-k per query over scored (query_id, neighbor_id, c) rows — the
+    * ranking stage every similarity variant shares: `row_number()` per
+    * query over (c desc, neighbor_id asc), kept to rank ≤ k.
     *
-    * Scale rationale: a window `row_number() over (partition by query_id)`
-    * shuffles ALL |Q|·N scored rows into |Q| partitions — with 10 queries
-    * and a 100-TB corpus that is the whole scored relation funneled into 10
-    * tasks (skew by construction). The bounded-heap typed aggregator
-    * ([[TypedAggs.BoundedTopK]]) keeps k rows per query IN EACH MAP
-    * PARTIAL, so only k·partitions rows per query ever reach the exchange,
-    * and the final merge is k-sized list merges. Output is identical to the
-    * window form (same ordering + tie-break, NaN ranked first like both
-    * engines' desc sorts), which is the oracle. Null scores (cosine over a
-    * null embedding) are dropped as "no similarity defined" — the one
-    * deliberate divergence from a window, which would rank them below all
-    * candidates and could surface them when a query has < k scored rows.
-    * The drop is a typed filter on the scored rows: a Column filter on
-    * `c` is pushed into the join condition as `isnotnull(kernel(..))`,
-    * and the kernel then runs twice per candidate pair.
+    * Scale: Spark infers a window group limit from the `rank <= k`
+    * filter, so a Partial `WindowGroupLimit` below the exchange keeps k
+    * rows per query in each map partition; the |Q|·N scored relation
+    * never crosses the shuffle whole. Spark infers the limit only for
+    * k ≤ `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000;
+    * every registered query's k is ≤ 50).
+    *
+    * Ids are widened to BIGINT and the score to DOUBLE before ranking,
+    * so a FLOAT score is ranked by its widened value. NaN ranks above
+    * every real score, as in both engines' descending sorts. Null scores
+    * (cosine over a null embedding) sort last and are dropped after
+    * ranking as "no similarity defined", so a query with fewer than k
+    * scored rows returns fewer rows. The drop shares the filter with
+    * `rank <= k`, above the Window: a filter on `c` alone is pushed into
+    * the join condition as `isnotnull(kernel(..))`, and the kernel then
+    * runs twice per candidate pair.
     */
   def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val s = scored.sparkSession
-    import s.implicits._
-    val top = new TypedAggs.BoundedTopK[Scored](k, scoredOrd).toColumn
-    scored.select(col("query_id"), col("neighbor_id"), col("c"))
-      .as[Scored]
-      .filter(_.c != null)
-      .groupByKey(_.query_id)
-      .agg(top.name("top"))
-      .flatMap { case (_, rows) =>
-        rows.zipWithIndex.map { case (r, i) => (r, i + 1) } }
-      .select(col("_1.query_id").as("query_id"),
-        col("_2").cast("int").as("rank"),
-        col("_1.neighbor_id").as("neighbor_id"),
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("c").desc, col("neighbor_id"))
+    scored.select(col("query_id").cast("long").as("query_id"),
+        col("neighbor_id").cast("long").as("neighbor_id"),
+        col("c").cast("double").as("c"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k && col("c").isNotNull)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
         // + 0.0 canonicalizes IEEE -0.0 (a tiny-negative cosine rounds to
         // -0.0 on one engine, +0.0 on the other — value-equal but
         // hash-different). Oracle SQL carries the same `+ 0.0`.
-        (round(col("_1.c"), 6) + lit(0.0)).as("cos_sim"))
+        (round(col("c"), 6) + lit(0.0)).as("cos_sim"))
   }
 
   /** Exact top-k neighbors of each query vector over the corpus. */
@@ -114,9 +90,9 @@ object Similarity {
     * Packing is pure integer (bit j set iff e[j] > 0, 32 bits per
     * BIGINT word — two words for 64-dim, no sign-bit hazards);
     * Hamming = Σ bit_count(xor) per word; candidate ranking and the
-    * rerank both use the bounded-heap [[rankTopK]] (never a window
-    * sort). The rerank joins candidates back to the raw vectors —
-    * id-keyed equi joins over |Q|·fetchN rows.
+    * rerank both use [[rankTopK]] (k rows per query per map partition
+    * cross the exchange). The rerank joins candidates back to the raw
+    * vectors — id-keyed equi joins over |Q|·fetchN rows.
     */
   def binaryQuantTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dims: Int, fetchN: Int, k: Int): DataFrame = {
@@ -359,10 +335,10 @@ object Similarity {
     *
     * Scale shape: the probe list is |Q|·nprobe rows built from a
     * seeds-vs-queries cross of |Q|·K scored rows — both broadcast-tiny —
-    * ranked by the same bounded-heap aggregator as the main stage; the
-    * corpus-side work is one broadcast-hash probe of the assigned corpus
-    * per cluster hit, ranked by heap partials. The corpus is scanned once
-    * for assignment and once for probing, never self-joined.
+    * ranked by the same [[rankTopK]] as the main stage; the corpus-side
+    * work is one broadcast-hash probe of the assigned corpus per cluster
+    * hit, ranked by window-group-limit partials. The corpus is scanned
+    * once for assignment and once for probing, never self-joined.
     */
   def ivfTopKProbes(corpus: DataFrame, seeds: DataFrame, queryFilter: Column,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
@@ -423,7 +399,7 @@ object Similarity {
     * Scale shape: codes are one broadcast(codebook) probe of the corpus
     * (map-side argmin partials); the LUT is |Q|·numSub·k rows, broadcast;
     * scoring joins the 4-byte-code corpus against the LUT and ranks
-    * through the bounded heap — k rows per query per map partial cross
+    * through [[rankTopK]] — k rows per query per map partial cross
     * the wire, and the corpus floats are read exactly once (at encoding).
     */
   /** Subvector slice for the current `sub` column value. */
@@ -468,7 +444,7 @@ object Similarity {
   /** ADC ranking of `candidates` (query_id, neighbor_id): look each
     * neighbor's codes up in the per-query LUT — ONE join per subspace so
     * the float additions happen in fixed subspace order on both engines —
-    * and rank ascending through the bounded heap.
+    * and rank ascending through [[rankTopK]].
     */
   private def adcRank(candidates: DataFrame, codesWide: DataFrame,
       lut: DataFrame, k: Int, numSub: Int): DataFrame = {
@@ -551,7 +527,7 @@ object Similarity {
     * from the existing codegen'd kernels:
     * d²(a,b) = |a|² + |b|² − 2·cos(a,b)·|a|·|b| — one cosine and two
     * squared-norm evaluations per pair, no new expression needed. Ranked
-    * by the same bounded heap on the NEGATED distance (descending), so a
+    * by the same [[rankTopK]] on the NEGATED distance (descending), so a
     * NaN from a zero-norm vector ranks first exactly as in the cosine
     * variants — the oracle must rank by `-d2 DESC` (not `d2 ASC`, which
     * would put NaN last in DuckDB).
@@ -650,7 +626,7 @@ object Similarity {
     * recall_ppm), all exact integers (recall is a ppm floor division).
     *
     * Scale: one exact ranking plus one truncated ranking per d', each
-    * the [[bruteTopK]] bounded-heap shape (swap in [[ivfTopKProbes]]
+    * the [[bruteTopK]] ranking shape (swap in [[ivfTopKProbes]]
     * upstream for index scale — the report is fetch-agnostic); the
     * recall join is k rows per query per side.
     */
@@ -1124,7 +1100,7 @@ object Similarity {
     * vector magnitude encodes relevance (learned rerankers, popularity-
     * scaled item embeddings). Composed like [[bruteTopKEuclidean]]:
     * dot(a,b) = cos(a,b)·√(|a|²·|b|²), ranked descending by the same
-    * bounded heap.
+    * [[rankTopK]].
     */
   def bruteTopKInnerProduct(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
@@ -1604,9 +1580,9 @@ object Similarity {
     * lists backed each item (consensus vs single-scorer hits).
     *
     * Scale design: inputs are ALREADY top-k relations (k·|Q| rows — the
-    * heavy corpus ranking happened upstream in [[rankTopK]]'s bounded
-    * heap), so the fusion window ranks a constant ≤ 2k rows per query:
-    * nothing corpus-sized moves here.
+    * heavy corpus ranking happened upstream in [[rankTopK]]'s window
+    * group limit), so the fusion window ranks a constant ≤ 2k rows per
+    * query: nothing corpus-sized moves here.
     */
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, rrfK: Int = 60): DataFrame = {
     val contrib = (df: DataFrame) =>
@@ -1691,7 +1667,7 @@ object Similarity {
     * deterministic under any fold order.
     *
     * Scale design: the corpus-sized work is the upstream candidate
-    * fetch ([[bruteTopK]]'s bounded heap here; swap in [[ivfTopK]] at
+    * fetch ([[bruteTopK]]'s ranking here; swap in [[ivfTopK]] at
     * index scale — the rerank is fetch-agnostic). Everything after is
     * bounded by construction: the candidate set (fetchN·|Q| rows)
     * broadcasts back into one corpus scan to pick up vectors, the
@@ -2189,8 +2165,8 @@ object Similarity {
     * [[knnOutliersIvf]] — the REGISTERED bucketed variant (q350) that
     * keeps the same mean-of-top-k scoring over IVF bucket candidates,
     * recall-gated against this baseline by its acceptance spec. Ranking
-    * rides the bounded-heap aggregator: k rows per vector cross the
-    * wire, never a ranked materialization.
+    * rides [[rankTopK]]: k rows per vector per map partition cross the
+    * wire, never the scored pair relation.
     */
   def knnOutliers(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, topN: Int): DataFrame = {
@@ -2228,7 +2204,7 @@ object Similarity {
     * the neighbors are mutually much closer than they are to p.
     *
     * Scale: the all-pairs scoring here is the exact baseline (n·k rows
-    * after the bounded-heap rank); for corpus scale feed the pair
+    * after the [[rankTopK]] rank); for corpus scale feed the pair
     * stream from the IVF bucketing exactly as [[knnOutliersIvf]] does —
     * everything downstream of `knn` is id-keyed joins over k·n rows.
     */
@@ -2452,8 +2428,8 @@ object Similarity {
     * (broadcast seeds + max(struct) hash aggregation with map-side
     * partials, ties to the lowest seed id — the [[ivfAssign]]
     * discipline, in the SAME int8 metric the outlier score uses so the
-    * whole operator is one exact BIGINT algebra). Ranking rides the
-    * bounded heap: k rows per vector per map partial cross the wire.
+    * whole operator is one exact BIGINT algebra). Ranking rides
+    * [[rankTopK]]: k rows per vector per map partial cross the wire.
     *
     * Approximation contract: scores are an UPPER BOUND proxy — a
     * vector's true k nearest may live beyond its probed buckets, so
@@ -2493,7 +2469,7 @@ object Similarity {
       .select(col("vid"), col("best.v").as("q8"),
         (-col("best.neg_seed")).as("cluster"))
     // Each vector probes its nprobe nearest seed buckets (d2 asc, seed
-    // asc — the bounded-heap ranking, |seeds| scored rows per vector,
+    // asc — the rankTopK ranking, |seeds| scored rows per vector,
     // all broadcast work).
     val probeScored = q8.join(broadcast(sq))
       .select(col("vid").as("query_id"), col("seed_id").as("neighbor_id"),
@@ -2708,7 +2684,7 @@ object Similarity {
     * Scale design: the exact baseline is computed ONCE and each probe
     * budget reuses the same assignment relation ([[ivfTopKProbes]]'s
     * shape — the corpus is scanned for assignment, then probed per
-    * budget; nothing quadratic, all ranking through the bounded heap).
+    * budget; nothing quadratic, all ranking through [[rankTopK]]).
     */
   def ivfProbeSweep(corpus: DataFrame, seeds: DataFrame, queryFilter: Column,
       idCol: String, vecCol: String, k: Int, nprobes: Seq[Int]): DataFrame = {
@@ -2917,7 +2893,7 @@ object Similarity {
 
   // ---- q420: the centrality family's graph builder through IVF buckets --------
   // The q350 discipline applied to EDGES: same assignment/probe oracle
-  // chain, bounded-heap kNN-3 per vector, (u, v) rows out — the
+  // chain, rankTopK kNN-3 per vector, (u, v) rows out — the
   // registered demonstration that the kNN-graph build (the q407/q414
   // entry point) has a non-quadratic route.
   private def q420(s: SparkSession, d: String): DataFrame = {
@@ -3153,7 +3129,7 @@ object Similarity {
     * symmetrize downstream as the consumer requires.
     *
     * Scale: the self-join here is the exact baseline for a CAPPED id
-    * domain; at corpus scale [[knnEdgesIvf]] is the same bounded-heap
+    * domain; at corpus scale [[knnEdgesIvf]] is the same [[rankTopK]]
     * ranking over IVF-bucketed candidates.
     */
   def knnEdges(vectors: DataFrame, idCol: String, vecCol: String,
@@ -3172,7 +3148,7 @@ object Similarity {
   /** Bucketed SCALE PATH for [[knnEdges]] — the [[knnOutliersIvf]]
     * discipline applied to EDGES: every vector's neighbor candidates
     * come from its `nprobe` nearest IVF buckets instead of the full
-    * corpus ([[ivfCandidateScores]]), then the same bounded-heap
+    * corpus ([[ivfCandidateScores]]), then the same
     * [[rankTopK]] emits each vector's k nearest as directed (u, v)
     * rows. This is the entry point the whole embedding-centrality
     * family ([[graft.operators.Graph.closenessCentrality]],

@@ -80,7 +80,7 @@ object SqlRegistry {
 
     // graft_cosine_topk(table, idCol, vecCol, maxQueryId, k): exact brute
     // cosine top-k of the id < maxQueryId rows against the whole view
-    // (the q30 operator, heap-ranked).
+    // (the q30 operator, ranked by Similarity.rankTopK).
     tvf("graft_cosine_topk") { exprs =>
       require(exprs.length == 5,
         "graft_cosine_topk(table, idCol, vecCol, maxQueryId, k)")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import FixedPoint.{bin6, fd}
@@ -673,16 +674,6 @@ object TextAnalysis {
          (acc, c) -> (acc * 131 + c) % 2147483647) AS fingerprint
        FROM documents ORDER BY doc_id"""
 
-  /** One scored (doc, term) row awaiting per-doc ranking. */
-  final case class TermScore(doc_id: Long, term: String, tf: Long,
-      doc_freq: Long, score: Double)
-  private val termOrd: Ordering[TermScore] = new Ordering[TermScore] {
-    override def compare(a: TermScore, b: TermScore): Int = {
-      val c = java.lang.Double.compare(b.score, a.score) // desc
-      if (c != 0) c else a.term.compareTo(b.term)
-    }
-  }
-
   /** Top-k characteristic terms per document by TF-IDF (rational variant:
     * score = tf · N / doc_freq). The classic "what is this document about"
     * / keyword-extraction operator. The usual `ln(N/df)` damping is
@@ -696,35 +687,33 @@ object TextAnalysis {
     * second aggregation of that already-collapsed relation (vocab-sized
     * output). The df join exchanges the collapsed tf relation by term —
     * never raw token occurrences — and the corpus size joins as a
-    * broadcast single row. Final per-doc ranking is the bounded-heap
-    * aggregator: k rows per doc per map partial cross the wire (a window
-    * row_number would re-sort every document's full vocabulary).
+    * broadcast single row. Final per-doc ranking is `row_number() <= k`
+    * over (score desc, term asc): its Partial `WindowGroupLimit` keeps k
+    * rows per doc per map partition below the exchange, never a
+    * document's full vocabulary. Terms tie-break in UTF-8 byte order, as
+    * in the DuckDB oracle.
     */
   def tfIdfTop(df: DataFrame, idCol: String, textCol: String, k: Int,
       docFilter: Column = lit(true)): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
     val tf = df
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
     val nDocs = df.select(count(lit(1)).as("n_docs"))
-    val scored = tf.filter(docFilter)
+    val w = Window.partitionBy(col("doc_id"))
+      .orderBy(col("score").desc, col("term"))
+    tf.filter(docFilter)
       .join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
-      .select(col("doc_id"), col("term"), col("tf"), col("doc_freq"),
+      .select(col("doc_id").cast("long").as("doc_id"), col("term"), col("tf"),
+        col("doc_freq"),
         round(col("tf").cast("double") * col("n_docs") / col("doc_freq"), 6)
           .as("score"))
-    val top = new TypedAggs.BoundedTopK[TermScore](k, termOrd).toColumn
-    scored.as[TermScore]
-      .groupByKey(_.doc_id)
-      .agg(top.name("top"))
-      .flatMap { case (_, rows) =>
-        rows.zipWithIndex.map { case (r, i) => (r, i + 1) } }
-      .select(col("_1.doc_id").as("doc_id"), col("_2").cast("int").as("rank"),
-        col("_1.term").as("term"), col("_1.tf").as("tf"),
-        col("_1.doc_freq").as("doc_freq"), col("_1.score").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("doc_id"), col("rank"), col("term"), col("tf"),
+        col("doc_freq"), col("score"))
   }
 
   // ---- q87: TF-IDF top terms per document ------------------------------------
@@ -1348,16 +1337,6 @@ object TextAnalysis {
            list(doc_id || ':' || tf ORDER BY doc_id), 1, 10), ',') AS postings
        FROM tf GROUP BY term ORDER BY term"""
 
-  /** One BM25-scored (term, doc) row awaiting per-term ranking. */
-  final case class Bm25Score(term: String, doc_id: Long, tf: Long, dl: Long,
-      doc_freq: Long, score: Double)
-  private val bm25Ord: Ordering[Bm25Score] = new Ordering[Bm25Score] {
-    override def compare(a: Bm25Score, b: Bm25Score): Int = {
-      val c = java.lang.Double.compare(b.score, a.score) // desc
-      if (c != 0) c else java.lang.Long.compare(a.doc_id, b.doc_id)
-    }
-  }
-
   /** BM25 retrieval scoring: for each query term, the top-`k` documents by
     * the Okapi BM25 term weight -- the standard lexical ranking function
     * (Robertson & Zaragoza, "The Probabilistic Relevance Framework",
@@ -1382,15 +1361,14 @@ object TextAnalysis {
     * rows are the |terms| query terms' (the term filter sits under the
     * collapse). Those narrow qtf rows join the length relation on the
     * doc_id exchange; doc-frequency (<=|terms| rows) and the corpus
-    * totals (1 row) come back as broadcasts. Final ranking is the
-    * bounded-heap aggregator: k rows per term per map partial cross the
-    * wire, never a term's full posting set.
+    * totals (1 row) come back as broadcasts. Final ranking is
+    * `row_number() <= k` over (score desc, doc_id asc): its Partial
+    * `WindowGroupLimit` keeps k rows per term per map partition below the
+    * exchange, never a term's full posting set.
     */
   def bm25TopDocs(df: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25TopDocs needs at least one query term")
-    val s = df.sparkSession
-    import s.implicits._
     // doc length = token count: computed MAP-SIDE from the array length,
     // so the corpus-wide (doc, term) relation never materializes — the
     // only exploded/aggregated token rows are the |terms| query terms'
@@ -1405,7 +1383,9 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = qtf.groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
-    val scored = qtf.join(dl, "doc_id")
+    val w = Window.partitionBy(col("term"))
+      .orderBy(col("score").desc, col("doc_id"))
+    qtf.join(dl, "doc_id")
       .crossJoin(broadcast(tot))
       .join(broadcast(dfreq), "term")
       .select(col("term"), col("doc_id"), col("tf"), col("dl"),
@@ -1414,16 +1394,10 @@ object TextAnalysis {
             / ((lit(10) * col("l") * col("tf") + lit(3) * col("l")
                 + lit(9) * col("dl") * col("n")) * col("doc_freq")))
           .as("score"))
-    val top = new TypedAggs.BoundedTopK[Bm25Score](k, bm25Ord).toColumn
-    scored.as[Bm25Score]
-      .groupByKey(_.term)
-      .agg(top.name("top"))
-      .flatMap { case (_, rows) =>
-        rows.zipWithIndex.map { case (r, i) => (r, i + 1) } }
-      .select(col("_1.term").as("term"), col("_2").cast("int").as("rank"),
-        col("_1.doc_id").as("doc_id"), col("_1.tf").as("tf"),
-        col("_1.dl").as("dl"), col("_1.doc_freq").as("doc_freq"),
-        col("_1.score").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("term"), col("rank"), col("doc_id"), col("tf"), col("dl"),
+        col("doc_freq"), col("score"))
   }
 
   // ---- q145: BM25 top documents per query term -------------------------------
@@ -1631,9 +1605,8 @@ object TextAnalysis {
         + checkpoint).as("docs_seen"))
       .groupBy(col("docs_seen"))
       .agg(count(lit(1)).as("new_terms"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("docs_seen"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
+    val w = Window.orderBy(col("docs_seen"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perCk.select(col("docs_seen"), col("new_terms"),
       sum(col("new_terms")).over(w).as("vocab_cum"))
   }
@@ -1839,8 +1812,8 @@ object TextAnalysis {
           least(length(col("tok")), lit(maxLen)))).as("pl"))
       .select(col("tok").substr(lit(1), col("pl")).as("prefix"),
         col("tok"), col("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("prefix")).orderBy(col("n").desc, col("tok"))
+    val w = Window.partitionBy(col("prefix"))
+      .orderBy(col("n").desc, col("tok"))
     pre.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("prefix"), col("rank").cast("long").as("rank"),
@@ -2030,7 +2003,6 @@ object TextAnalysis {
   def kneserNeyPerplexity(docs: DataFrame, idCol: Column, textCol: Column,
       testHexLt: String = "4"): DataFrame = {
     require(testHexLt.length == 1, "testHexLt is one hex char")
-    import org.apache.spark.sql.expressions.Window
     val lnq = (c: Column) => floor(log(c.cast("double")) * lit(1e6) +
       lit(0.5)).cast("long")
     val toks = docs.select(idCol.as("doc"), textCol.as("text"))
@@ -2091,7 +2063,6 @@ object TextAnalysis {
   def looSourcePerplexity(docs: DataFrame, idCol: Column, textCol: Column,
       sourceCol: Column, testHexLt: String = "4"): DataFrame = {
     require(testHexLt.length == 1, "testHexLt is one hex char")
-    import org.apache.spark.sql.expressions.Window
     val lnq = (c: Column) => floor(log(c.cast("double")) * lit(1e6) +
       lit(0.5)).cast("long")
     val toks = docs.select(idCol.as("doc"), sourceCol.as("src"),

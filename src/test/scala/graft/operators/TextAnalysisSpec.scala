@@ -159,10 +159,16 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got.filter(_._1 == 2L) === Array(
       (2L, 1, "other", 1L, 2L, 1.5),
       (2L, 2, "common", 1L, 3L, 1.0)))
-    // No window sort anywhere: ranking is the bounded-heap aggregate.
-    val plan = TextAnalysis.tfIdfTop(df, "doc_id", "text", k = 2)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"unexpected window sort:\n$plan")
+  }
+
+  test("tfIdfTop breaks score ties in UTF-8 byte order, as DuckDB does") {
+    // Both terms score 1*1/1 = 1.0. UTF-8 bytes put U+FF21 (EF BC A1)
+    // before U+1F600 (F0 9F 98 80); UTF-16 code units put the emoji's
+    // high surrogate (D83D) first, which String.compareTo would follow.
+    val df = Seq((1L, "\uD83D\uDE00 \uFF21")).toDF("doc_id", "text")
+    val got = TextAnalysis.tfIdfTop(df, "doc_id", "text", k = 1)
+      .select("term").as[String].collect()
+    assert(got === Array("\uFF21"))
   }
 
   test("vocabCoverage marks exactly the tokens outside the top-k vocab as OOV") {
@@ -235,10 +241,6 @@ class TextAnalysisSpec extends SparkSpec {
       ("join", 1, 1L, 2L, 3L, 3L, score(2, 3)), // highest tf wins
       ("join", 2, 2L, 1L, 2L, 3L, score(1, 2)), // equal tf: shorter doc…
       ("join", 3, 4L, 1L, 4L, 3L, score(1, 4)))) // …outranks the longer
-    // ranking is the bounded heap, never a window sort
-    val plan = TextAnalysis.bm25TopDocs(df, "doc_id", "text", Seq("join"), 4)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"unexpected window sort:\n$plan")
   }
 
   test("bpeApply encodes with ranked merges, chained pairs, and run fixpoints") {
